@@ -69,9 +69,12 @@ def isolate_environment() -> None:
     """Keep every file Spark, the JVM and Python write inside the checkout."""
     for sub in ("tmp", "spark-local"):
         os.makedirs(os.path.join(WORK, sub), exist_ok=True)
-    os.environ["TMPDIR"] = os.path.join(WORK, "tmp")
+    tmp = os.path.join(WORK, "tmp")
+    os.environ["TMPDIR"] = tmp
     os.environ["SPARK_LOCAL_DIRS"] = os.path.join(WORK, "spark-local")
     os.environ["SPARK_DRIVER_MEM"] = DRIVER_MEM
+    # every JVM, the spark-submit launcher's included: no /tmp/hsperfdata_*
+    os.environ["JAVA_TOOL_OPTIONS"] = f"-XX:-UsePerfData -Djava.io.tmpdir={tmp}"
 
 
 class Session:
@@ -87,7 +90,6 @@ class Session:
 
         if self.spark is not None:
             self.spark.stop()
-        tmp = os.environ["TMPDIR"]
         self.spark = build_session(
             app_name="perfbench",
             master=f"local[{self.cores}]",
@@ -96,8 +98,7 @@ class Session:
                 "spark.ui.showConsoleProgress": "false",
                 # a fixed, pre-touched heap: peak RSS does not depend on how
                 # far the heap happened to grow
-                "spark.driver.extraJavaOptions": f"-Djava.io.tmpdir={tmp} -XX:-UsePerfData "
-                f"-Xms{DRIVER_MEM} -XX:+AlwaysPreTouch",
+                "spark.driver.extraJavaOptions": f"-Xms{DRIVER_MEM} -XX:+AlwaysPreTouch",
                 **(extra or {}),
             },
         )
