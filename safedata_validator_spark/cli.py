@@ -23,6 +23,8 @@ import argparse
 import json
 import sys
 
+from pyspark.sql import functions as F
+
 from safedata_validator_spark.engine.checkpoint import CheckpointManifest
 from safedata_validator_spark.engine.validator import ValidationEngine
 from safedata_validator_spark.rules.model import RuleSet
@@ -97,30 +99,36 @@ def main(argv: list[str] | None = None) -> int:
     df = tables.load_table(spark, args.table)
     engine = ValidationEngine()
 
-    if args.manifest:
-        manifest = CheckpointManifest(args.manifest)
-        snapshot = tables.current_snapshot_id(spark, args.table)
-        result, pending = engine.validate_resumable(
-            df, ruleset, manifest, dims, snapshot_id=snapshot, with_stats=not args.no_stats
-        )
-        if result is None:
-            print(json.dumps({"status": "up-to-date", "pending_partitions": 0}))
-            return 0
-    else:
-        result = engine.validate(df, ruleset, dims, with_stats=not args.no_stats)
-        pending = None
-
-    result.violations.persist()
-    if args.out:
+    def write_outputs(result) -> None:
+        if not args.out:
+            return
         tables.write_results(result.violations, f"{args.out}/violations", mode="overwrite")
         tables.write_results(result.verdicts, f"{args.out}/verdicts", mode="overwrite")
         if result.stats is not None:
             tables.write_results(result.stats, f"{args.out}/stats", mode="overwrite")
 
+    if args.manifest:
+        manifest = CheckpointManifest(args.manifest)
+        snapshot = tables.current_snapshot_id(spark, args.table)
+        # the outputs are written before the manifest records the partitions
+        result, pending = engine.validate_resumable(
+            df, ruleset, manifest, dims, snapshot_id=snapshot,
+            with_stats=not args.no_stats, sink=write_outputs,
+        )
+        if result is None:
+            print(json.dumps({"status": "up-to-date", "pending_partitions": 0}))
+            return 0
+    else:
+        result = engine.validate(df, ruleset, dims, with_stats=not args.no_stats).persist()
+        pending = None
+        write_outputs(result)
+
+    # the verdicts hold the failure counts: no second pass over violations
     by_sev = {
         r["severity"]: r["n"]
-        for r in result.violations.groupBy("severity").count().withColumnRenamed("count", "n").collect()
+        for r in result.verdicts.groupBy("severity").agg(F.sum("n_failed").alias("n")).collect()
     }
+    result.unpersist()
     passed = by_sev.get("ERROR", 0) == 0
     summary = {
         "status": "passed" if passed else "failed",

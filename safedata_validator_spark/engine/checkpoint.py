@@ -8,9 +8,15 @@ cluster the manifest lives as an Iceberg table keyed by
 sources.tables.ICEBERG_AVAILABLE) the same manifest is an append-only parquet
 directory — the schema and resume semantics are identical.
 
-Resume = anti-join of the input's partition values against manifest entries
-with a matching ruleset hash: only pending partitions are scanned (partition
-pruning applies because the filter is on the partition expression).
+Resume = a NULL-safe join of the input's distinct partition values against
+the manifest entries with a matching rule-set hash (the snapshot id is
+recorded, not compared). Finding the pending partitions reads the whole
+table once: the scope is an expression (e.g. ``date_format(ts, ...)``), so
+neither this pass nor the slice filter ``partition_filter`` builds can be
+pushed into a parquet or Iceberg scan. ``ValidationEngine.validate_resumable``
+therefore persists the pending slice when it is a strict subset of the
+table, and records the manifest only after its ``sink`` (the CLI's output
+writes) has returned.
 """
 
 from __future__ import annotations
@@ -20,7 +26,7 @@ import time
 import uuid
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 MANIFEST_DDL = (
@@ -57,15 +63,37 @@ def pending_partitions(
     scope: str,
     manifest: CheckpointManifest,
     ruleset_hash: str,
-) -> list[str]:
-    """Distinct partition values of ``df`` not yet in the manifest. Partition
-    lists are O(thousands) — driver-side is the right place for them (this is
-    metadata, the same scale as an Iceberg partition listing)."""
+) -> tuple[list[str | None], bool]:
+    """Distinct partition values of ``df`` not yet in the manifest, sorted
+    with NULL first, and whether they are a strict subset of ``df``'s
+    partitions. Partition lists are O(thousands) — driver-side is the right
+    place for them (this is metadata, the same scale as an Iceberg partition
+    listing). A scope that evaluates to NULL is a partition like any other,
+    as in ``ValidationEngine.verdicts``: the join is NULL-safe."""
     spark = df.sparkSession
-    have = manifest.completed(spark, ruleset_hash)
+    have = manifest.completed(spark, ruleset_hash).select(
+        F.col("partition").alias("__done_partition"), F.lit(True).alias("__done")
+    )
     want = df.select(F.expr(scope).cast("string").alias("partition")).distinct()
-    rows = want.join(have, "partition", "left_anti").collect()
-    return sorted(r["partition"] for r in rows)
+    rows = (
+        want.join(have, want["partition"].eqNullSafe(have["__done_partition"]), "left")
+        .select("partition", "__done")
+        .collect()
+    )
+    pending = sorted(
+        (r["partition"] for r in rows if r["__done"] is None),
+        key=lambda p: (p is not None, p or ""),
+    )
+    return pending, len(pending) < len(rows)
+
+
+def partition_filter(scope: str, partitions: list[str | None]) -> Column:
+    """Rows whose scope value is one of ``partitions``; a ``None`` entry
+    selects the rows whose scope is NULL, which ``isin`` alone drops."""
+    part = F.expr(scope).cast("string")
+    values = [p for p in partitions if p is not None]
+    cond = part.isin(values)
+    return cond | part.isNull() if len(values) < len(partitions) else cond
 
 
 def manifest_entries(

@@ -18,6 +18,7 @@ Execution shape (cf. SURVEY §3.1 "Spark lifecycle equivalent"):
 
 from __future__ import annotations
 
+from collections.abc import Callable
 from dataclasses import dataclass, field as dc_field
 from functools import reduce
 
@@ -52,6 +53,14 @@ class RunResult:
         return (
             self.violations.where(F.col("severity") == ERROR).limit(1).count() == 0
         )
+
+    def persist(self) -> RunResult:
+        """Persist ``violations`` then ``verdicts`` (which reads them), so
+        writes, manifest entries and summaries share one computation of
+        each; ``unpersist()`` releases them with the rest of ``cached``."""
+        for frame in (self.violations, self.verdicts):
+            self.cached.append(frame.persist())
+        return self
 
     def unpersist(self) -> None:
         # blocking: async eviction races the next run's persist() of the
@@ -526,17 +535,40 @@ class ValidationEngine:
         dims: dict[str, DataFrame] | None = None,
         snapshot_id: str = "",
         with_stats: bool = False,
-    ) -> tuple[RunResult | None, list[str]]:
-        """Validate only partitions (scope values) not yet recorded in the
-        manifest under this rule-set hash; record completed partitions with
-        metrics. Returns (result-or-None-if-nothing-pending, pending list)."""
+        sink: Callable[[RunResult], None] | None = None,
+    ) -> tuple[RunResult | None, list[str | None]]:
+        """Validate only partitions (scope values, NULL included) not yet
+        recorded in the manifest under this rule-set hash. Returns
+        (result-or-None-if-nothing-pending, pending list).
+
+        Finding the pending partitions reads the whole table once. When they
+        are a strict subset of the table's partitions, the pending slice is
+        persisted: its filter on the scope expression cannot be pushed into
+        the scan, so every fact pass would otherwise re-read the whole
+        table. When every partition is pending (a first run) the source is
+        read as ``validate()`` reads it, uncached. The result's violations
+        and verdicts are persisted before anything consumes them; all three
+        are in ``result.cached`` and released by ``result.unpersist()``.
+
+        ``sink(result)`` (e.g. writing the outputs) runs before the pending
+        partitions are recorded, so a failed sink leaves them pending; the
+        manifest rows are then folded from the persisted verdicts."""
         spark = df.sparkSession
         rhash = ruleset.content_hash()
-        pending = ckpt.pending_partitions(df, ruleset.scope, manifest, rhash)
+        pending, partial = ckpt.pending_partitions(df, ruleset.scope, manifest, rhash)
         if not pending:
             return None, []
-        sub = df.where(F.expr(ruleset.scope).cast("string").isin(pending))
-        result = self.validate(sub, ruleset, dims, with_stats=with_stats)
-        entries = ckpt.manifest_entries(spark, result.verdicts, rhash, snapshot_id)
-        manifest.record(entries)
+        sub = df.where(ckpt.partition_filter(ruleset.scope, pending))
+        if partial:
+            sub = sub.persist()
+        result = self.validate(sub, ruleset, dims, with_stats=with_stats).persist()
+        if partial:
+            result.cached.append(sub)
+        try:
+            if sink is not None:
+                sink(result)
+            manifest.record(ckpt.manifest_entries(spark, result.verdicts, rhash, snapshot_id))
+        except BaseException:
+            result.unpersist()
+            raise
         return result, pending
