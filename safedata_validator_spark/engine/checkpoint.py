@@ -29,6 +29,8 @@ from dataclasses import dataclass
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from safedata_validator_spark.engine.common import local_table
+
 MANIFEST_DDL = (
     "partition string, ruleset_hash string, snapshot_id string, "
     "n_rows long, n_violations long, n_errors long, passed boolean, "
@@ -42,7 +44,7 @@ class CheckpointManifest:
 
     def read(self, spark: SparkSession) -> DataFrame:
         if not os.path.exists(self.path):
-            return spark.createDataFrame([], MANIFEST_DDL)
+            return local_table(spark, [], MANIFEST_DDL)
         return spark.read.schema(MANIFEST_DDL).parquet(self.path)
 
     def completed(self, spark: SparkSession, ruleset_hash: str) -> DataFrame:

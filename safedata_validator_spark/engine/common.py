@@ -1,4 +1,4 @@
-"""Shared violation-row construction helpers.
+"""Shared violation-row construction helpers, and driver-local tables.
 
 Violations are data, not log lines (the reference's verdict mechanism is a
 counting log handler, logger.py:68-107; here it is a DataFrame with a fixed
@@ -7,8 +7,10 @@ schema so counting, scoping and persistence are relational).
 
 from __future__ import annotations
 
+from py4j.java_gateway import JavaObject
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from safedata_validator_spark.rules.model import Rule
 
@@ -55,4 +57,70 @@ def as_violations(
 
 
 def empty_violations(spark) -> DataFrame:
-    return spark.createDataFrame([], VIOLATION_DDL)
+    return local_table(spark, [], VIOLATION_DDL)
+
+
+#: Python value -> the Java value py4j passes for the field's type. py4j
+#: sends a small Python int as Java Integer, so long values cross as
+#: strings and are cast back (see local_table).
+_TO_JAVA = {
+    T.StringType: str,
+    T.BooleanType: bool,
+    T.LongType: lambda v: str(int(v)),
+    T.DoubleType: float,
+}
+
+
+def local_table(spark, rows, schema: T.StructType | str) -> DataFrame:
+    """A small driver-side table as a JVM ``LocalRelation`` (planned as
+    ``LocalTableScan``). ``spark.createDataFrame(python_rows)`` plans a
+    ``Scan ExistingRDD`` over a PythonRDD instead, so every job reading it
+    runs Python-worker tasks that unpickle the rows again.
+
+    ``rows`` is either a ``java.util.List`` of JVM ``Row`` objects (e.g.
+    ``df._jdf.collectAsList()``), which goes in as is, or a Python sequence
+    of tuples, built into JVM rows value by value with each value converted
+    to its field's type (string, boolean, long and double fields only).
+    Long fields cross as strings and are cast back in a projection the
+    optimizer folds into the relation."""
+    if isinstance(schema, str):
+        schema = T.StructType.fromDDL(schema)
+    jspark = spark._jsparkSession
+    if isinstance(rows, JavaObject):
+        jschema = jspark.parseDataType(schema.json())
+        return DataFrame(jspark.createDataFrame(rows, jschema), spark)
+    convert = []
+    for f in schema.fields:
+        if type(f.dataType) not in _TO_JAVA:
+            raise TypeError(f"local_table: unsupported literal field type {f}")
+        convert.append(_TO_JAVA[type(f.dataType)])
+    carrier = T.StructType(
+        [
+            T.StructField(
+                f.name,
+                T.StringType() if isinstance(f.dataType, T.LongType) else f.dataType,
+                f.nullable,
+            )
+            for f in schema.fields
+        ]
+    )
+    # class lookups through the JVM view cost a py4j round trip each:
+    # resolve them once, not per row
+    jvm, gateway = spark._jvm, spark.sparkContext._gateway
+    jobject, row_factory = jvm.java.lang.Object, jvm.org.apache.spark.sql.RowFactory
+    jrows = jvm.java.util.ArrayList()
+    for row in rows:
+        values = gateway.new_array(jobject, len(convert))
+        for i, (conv, v) in enumerate(zip(convert, row, strict=True)):
+            if v is not None:
+                values[i] = conv(v)
+        jrows.add(row_factory.create(values))
+    df = DataFrame(jspark.createDataFrame(jrows, jspark.parseDataType(carrier.json())), spark)
+    if carrier == schema:
+        return df
+    return df.select(
+        *[
+            F.col("`" + f.name.replace("`", "``") + "`").cast(f.dataType)
+            for f in schema.fields
+        ]
+    )

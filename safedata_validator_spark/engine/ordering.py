@@ -29,7 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from safedata_validator_spark.engine.common import as_violations
+from safedata_validator_spark.engine.common import as_violations, local_table
 from safedata_validator_spark.rules.model import Rule
 
 DEFAULT_BLOCK_SIZE = 4096
@@ -198,7 +198,7 @@ def hash_prefix(spark, max_n: int) -> DataFrame:
         offsets.append((row["__chunk"], base1, base2))
         base1 += row["__t1"]
         base2 += row["__t2"]
-    off = spark.createDataFrame(offsets, "__chunk long, __b1 long, __b2 long")
+    off = local_table(spark, offsets, "__chunk long, __b1 long, __b2 long")
     w = Window.partitionBy("__chunk").orderBy("id").rowsBetween(
         Window.unboundedPreceding, 0
     )

@@ -28,7 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from safedata_validator_spark.engine.common import as_violations
+from safedata_validator_spark.engine.common import as_violations, local_table
 from safedata_validator_spark.rules.model import Rule
 
 
@@ -221,8 +221,8 @@ def levels_audit_from_counts(counts: DataFrame, rule: Rule, dims: dict) -> DataF
     spark = counts.sparkSession
 
     if "levels" in rule.params:
-        levels_df = spark.createDataFrame(
-            [(str(v),) for v in rule.params["levels"]], "__level string"
+        levels_df = local_table(
+            spark, [(str(v),) for v in rule.params["levels"]], "__level string"
         )
     else:
         levels_df = (

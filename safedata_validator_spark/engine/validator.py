@@ -26,7 +26,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from safedata_validator_spark.engine import checkpoint as ckpt
-from safedata_validator_spark.engine.common import empty_violations, entity_col
+from safedata_validator_spark.engine.common import empty_violations, entity_col, local_table
 from safedata_validator_spark.rules.compilers import compile_row_rule
 from safedata_validator_spark.rules.model import ERROR, Rule, RuleSet
 from safedata_validator_spark.rules import registry
@@ -300,8 +300,8 @@ class ValidationEngine:
             scope_rows = df.groupBy(F.expr(ruleset.scope).cast("string").alias("scope")).agg(
                 F.count(F.lit(1)).alias("n_rows")
             )
-        declared = spark.createDataFrame(
-            [(r.rule_id, r.severity) for r in ruleset.rules], "rule_id string, severity string"
+        declared = local_table(
+            spark, [(r.rule_id, r.severity) for r in ruleset.rules], "rule_id string, severity string"
         )
         # ONE reference to the violations subtree: the declared grid
         # full-outer-joins the observed counts (derived rule ids such as
@@ -362,27 +362,26 @@ class ValidationEngine:
                 width += 16
         return max(width, 64)
 
-    def _localize(self, agg: DataFrame) -> tuple[DataFrame, bool, list | None]:
-        """Materialize a (by-design tiny) aggregate as a driver-local table so
-        every downstream consumer reads rows, never the build plan. Falls back
-        to a persisted distributed plan when the aggregate exceeds the row or
-        byte cap. The plan is persisted BEFORE the probing collect, so the
-        fallback's first consumer reuses the already-computed partitions
-        instead of recomputing the whole aggregation. Also returns the
-        collected rows on the local path so callers that need driver-side
-        values (the sequential fast path's order maxima) read them directly
-        instead of re-collect()ing the local table — which runs one more
-        (pointless) local job per consumer."""
+    def _localize(self, agg: DataFrame) -> tuple[DataFrame, bool]:
+        """Materialize a (by-design tiny) aggregate as a driver-local table
+        (a JVM ``LocalRelation``, see ``common.local_table``) so every
+        downstream consumer reads rows, never the build plan. The collected
+        rows stay in the JVM; reading the local table (or a projection of
+        it) back into Python runs no Spark job. Falls back to a persisted
+        distributed plan when the aggregate exceeds the row or byte cap. The
+        plan is persisted BEFORE the probing collect, so the fallback's first
+        consumer reuses the already-computed partitions instead of
+        recomputing the whole aggregation. Returns (table, is_local)."""
         cap = min(
             self.localize_cap,
             max(1, self.localize_bytes_cap // self._est_row_width(agg.schema)),
         )
         plan = agg.persist()
-        rows = plan.limit(cap + 1).collect()
-        if len(rows) > cap:
-            return plan, False, None
+        rows = plan.limit(cap + 1)._jdf.collectAsList()
+        if rows.size() > cap:
+            return plan, False
         plan.unpersist()
-        return agg.sparkSession.createDataFrame(rows, agg.schema), True, rows
+        return local_table(agg.sparkSession, rows, agg.schema), True
 
     def validate(
         self,
@@ -395,26 +394,39 @@ class ValidationEngine:
     ) -> RunResult:
         """Full run with cross-output pass fusion. Fact passes, total:
 
-        1. fused row-rule scan (the only pass touching heavy text columns);
-        2. ONE per-scope aggregation = profiler sketches + extent min/max +
-           verdict row counts (persisted: rows = #scopes);
-        3. ONE stacked categorical-counts pass for every levels_audit /
-           ref_integrity column (persisted: rows ≈ Σ distinct values);
-        4. key-count shuffle shared by sequential + unique_key;
-        5-6. adjacency self-join (both sides), ALL adjacency rules fused.
+        1. ONE per-scope aggregation = profiler sketches + extent min/max +
+           verdict row counts + sequential order maxima (eager; rows =
+           #scopes);
+        2. ONE stacked categorical-counts pass for every levels_audit /
+           ref_integrity column (eager; rows ≈ Σ distinct values);
+
+        then, in the violations plan, 7 for the transcript preset (the
+        budget test_plans.test_full_validate_bounds_fact_scans pins):
+
+        3. fused row-rule scan (the only pass touching heavy text columns);
+        4-5. blocked-window adjacency (lag pass + block summary), ALL
+           adjacency rules fused;
+        6-7. conversation-level sequence screen + the key-count drilldown
+           over the flagged conversations, shared by sequential +
+           unique_key;
+        8-9. a second copy of 6-7: each consumer of the key counts plans
+           them again (sequential_examples, when on, a third copy plus one
+           read for the example rows), and the copies are not always
+           reused at run time (ROADMAP direction 2).
 
         Everything else is broadcast joins / re-aggregation over the tiny
         shared aggregates — nothing re-reads the fact table.
 
         The shared aggregates are computed EAGERLY (two small jobs at call
-        time) and re-injected as driver-local tables: their size is bounded
-        by #scopes and Σ distinct categorical-column values — both bounded
-        by design (verdict partitions; level/membership domains) — and a
-        local table guarantees every downstream consumer reads the computed
-        rows instead of replaying the fact scan inside broadcast-subquery
-        jobs, which do not share adaptive query stages with the main action.
-        Should a categorical column turn out high-cardinality, the aggregate
-        falls back to a persisted distributed plan (``localize_cap`` rows).
+        time) and re-injected as driver-local tables (JVM LocalRelations,
+        see ``_localize``): their size is bounded by #scopes and Σ distinct
+        categorical-column values — both bounded by design (verdict
+        partitions; level/membership domains) — and a local table guarantees
+        every downstream consumer reads the computed rows instead of
+        replaying the fact scan inside broadcast-subquery jobs, which do not
+        share adaptive query stages with the main action. Should a
+        categorical column turn out high-cardinality, the aggregate falls
+        back to a persisted distributed plan (``localize_cap`` rows).
         """
         from safedata_validator_spark.engine import extents as ext
         from safedata_validator_spark.engine import referential
@@ -491,22 +503,22 @@ class ValidationEngine:
             early_parts: list[DataFrame] = []
             if row_rules:
                 early_parts.append(self._row_violations(df, ruleset, row_rules))
-            scope_agg, was_local, scope_rows_local = scope_fut.result()
+            scope_agg, was_local = scope_fut.result()
             cached = [] if was_local else [scope_agg]
             shared: dict[str, DataFrame] = {"scope_agg": scope_agg}
             if was_local and seq_orders:
-                # read the maxima from the ALREADY-collected rows — a
-                # .collect() on the local table would run one more job
+                # the optimizer folds this projection into the local
+                # relation, so the collect runs no Spark job
+                maxima = scope_agg.select(*[f"__seqmax_{o}" for o in seq_orders]).collect()
                 shared["order_max"] = {
                     o: max(
-                        (r[f"__seqmax_{o}"] for r in scope_rows_local
-                         if r[f"__seqmax_{o}"] is not None),
+                        (r[f"__seqmax_{o}"] for r in maxima if r[f"__seqmax_{o}"] is not None),
                         default=None,
                     )
                     for o in seq_orders
                 }
             if cat_fut is not None:
-                cat_counts, cat_local, _ = cat_fut.result()
+                cat_counts, cat_local = cat_fut.result()
                 shared["cat_counts"] = cat_counts
                 if not cat_local:
                     cached.append(cat_counts)

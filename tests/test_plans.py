@@ -146,34 +146,53 @@ def test_full_validate_bounds_fact_scans(spark, dims, tmp_path):
     df = spark.read.parquet(src)
     res = ValidationEngine().validate(df, transcript_ruleset(), dims, with_stats=True)
     # Static budget 7: row(1) + adjacency lag pass(1) + block summary(1) +
-    # sequence screen(1) + drilldown probe(1) + a canonically-identical
-    # duplicate of screen+probe under the unique_key branch (2) — the
-    # duplicate exchanges are reused at runtime (see
-    # test_sequential_unique_share_level1_exchange).
+    # sequence screen(1) + drilldown probe(1) + a duplicate of screen+probe
+    # under the unique_key branch (2). Run-time reuse of the duplicate is
+    # not guaranteed: an inferred isnotnull(conv_id) filter can make the
+    # copies differ (ROADMAP direction 2).
     for name, d, budget in [
         ("violations", res.violations, 7),
         ("verdicts", res.verdicts, 7),  # = violations subtree + 0 extra scans
-        ("stats", res.stats, 0),  # pure LocalTableScan explode
+        ("stats", res.stats, 0),  # explode over the local aggregate
     ]:
         plan = _physical(d)
         n = plan.count("Scan parquet")
         assert n <= budget, f"{name}: {n} parquet scans (budget {budget})"
-    # stats derive entirely from the driver-local aggregate (LocalTableScan /
-    # ExistingRDD leaf — zero fact scans, asserted by the budget above)
+    # stats derive entirely from the driver-local aggregate (its only leaf
+    # is a LocalTableScan — zero fact scans, asserted by the budget above)
 
 
-def test_no_python_row_udfs_anywhere(spark, dims):
+def test_no_python_row_udfs_anywhere(spark, dims, tmp_path):
     """North-rule mandate: no per-row Python. The full rule set's plan must
     contain no BatchEvalPython (row UDF) nodes; ArrowEvalPython (vectorized)
-    is allowed but the transcript preset needs none at all."""
+    is allowed but the transcript preset needs none at all. Nor may any
+    table the engine builds on the driver be a ``Scan ExistingRDD``: that is
+    a PythonRDD, whose every read runs Python-worker tasks — driver-local
+    tables must be LocalRelations. Checked for a plain and a resumable run;
+    the dimensions are read from parquet, as in production."""
+    from safedata_validator_spark.engine.checkpoint import CheckpointManifest
     from safedata_validator_spark.rules.presets import transcript_ruleset
 
+    for name, dim in dims.items():
+        dim.write.parquet(str(tmp_path / name))
+    pq_dims = {name: spark.read.parquet(str(tmp_path / name)) for name in dims}
     df = transcripts_good(spark, n_convs=5, mean_turns=8, hot_factor=2)
-    res = ValidationEngine().validate(df, transcript_ruleset(), dims)
-    for frame in (res.violations, res.verdicts, res.stats):
-        plan = _physical(frame)
-        assert "BatchEvalPython" not in plan
-        assert "ArrowEvalPython" not in plan
+    rs = transcript_ruleset(scope="date_format(ts, 'yyyy-MM')")
+    eng = ValidationEngine()
+    plain = eng.validate(df, rs, pq_dims)
+    resumed, pending = eng.validate_resumable(
+        df, rs, CheckpointManifest(str(tmp_path / "manifest")), pq_dims, with_stats=True
+    )
+    assert pending
+    try:
+        for res in (plain, resumed):
+            for frame in (res.violations, res.verdicts, res.stats):
+                plan = _physical(frame)
+                assert "BatchEvalPython" not in plan
+                assert "ArrowEvalPython" not in plan
+                assert "Scan ExistingRDD" not in plan, plan
+    finally:
+        resumed.unpersist()
 
 
 def test_profile_pushes_column_pruning_to_parquet(spark):

@@ -1,7 +1,10 @@
 """Per-job / per-stage decomposition of a Spark event-log directory, grouped
 by job description (``setJobDescription``). Companion to stage_scaling.py for
 single-run analysis: which jobs a query runs, their wall times, and the
-slowest stages inside each.
+slowest stages inside each. Stages whose RDD lineage contains a
+``PythonRDD`` run Python-worker tasks (e.g. any read of a table built by
+``spark.createDataFrame`` from Python rows); they are marked ``[py]`` and
+counted, with their executor run time, in a closing summary line.
 
 Usage:
     python tools/job_decomp.py <evlog_dir_or_file> [desc_filter]
@@ -72,6 +75,10 @@ def load(root: str):
                     stages[info["Stage ID"]] = {
                         "name": info["Stage Name"].split("\n")[0],
                         "tasks": info["Number of Tasks"],
+                        "python": any(
+                            r.get("Name") == "PythonRDD"
+                            for r in info.get("RDD Info") or []
+                        ),
                         "wall": (
                             info.get("Completion Time", 0)
                             - info.get("Submission Time", 0)
@@ -90,6 +97,7 @@ def main() -> int:
     flt = sys.argv[2] if len(sys.argv) > 2 else None
     jobs, stages, task_time = load(root)
     bydesc: dict[str, list] = defaultdict(list)
+    seen: set[int] = set()
     for jid, j in sorted(jobs.items()):
         if j["end"] is None:
             continue
@@ -104,12 +112,19 @@ def main() -> int:
             run_stages = [
                 (sid, stages[sid]) for sid in j["stages"] if sid in stages
             ]
+            seen.update(sid for sid, _ in run_stages)
             run_stages.sort(key=lambda s: -s[1]["wall"])
             top = "; ".join(
-                f"s{sid} {st['wall']:.2f}s/{st['tasks']}t tt={task_time[sid]:.1f} {st['name'][:40]}"
+                f"s{sid}{' [py]' if st['python'] else ''} {st['wall']:.2f}s/{st['tasks']}t "
+                f"tt={task_time[sid]:.1f} {st['name'][:40]}"
                 for sid, st in run_stages[:3]
             )
             print(f"  job {jid:4d} wall={jw:6.2f}s  {top}")
+    py = [sid for sid in seen if stages[sid]["python"]]
+    print(
+        f"\nPythonRDD stages: {len(py)} of {len(seen)}, executor run time "
+        f"{sum(task_time[sid] for sid in py):.2f}s of {sum(task_time[sid] for sid in seen):.2f}s"
+    )
     return 0
 
 
