@@ -23,6 +23,17 @@ VIOLATION_DDL = (
 )
 
 
+def sql_ident(name: str) -> str:
+    """``name`` as a quoted Spark SQL identifier (embedded backticks doubled)."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def sql_str(value: str) -> str:
+    """``value`` as a Spark SQL string literal: backslashes and single quotes
+    are backslash-escaped, as the SQL parser unescapes them."""
+    return "'" + value.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
 def entity_col(key_cols: list[str]) -> Column:
     """Stable row identity for violation reporting: 'k1=v1/k2=v2'."""
     parts = []
@@ -120,7 +131,7 @@ def local_table(spark, rows, schema: T.StructType | str) -> DataFrame:
         return df
     return df.select(
         *[
-            F.col("`" + f.name.replace("`", "``") + "`").cast(f.dataType)
+            F.col(sql_ident(f.name)).cast(f.dataType)
             for f in schema.fields
         ]
     )

@@ -29,8 +29,12 @@ def extent_aggs(rules: list[Rule]) -> list:
 
 
 def extents_from_agg(agg: DataFrame, rules: list[Rule]) -> list[DataFrame]:
-    """Bound predicates over a prebuilt per-scope aggregate carrying
-    ``__scope`` plus the ``extent_aggs`` columns."""
+    """Bound predicates over the shared per-scope aggregate (``__scope`` plus
+    the ``extent_aggs`` columns). params: lo / hi (hard bounds,
+    inclusive-lo / exclusive-hi) — violation at rule.severity when the
+    observed extent crosses them. Use two extent rules (one ERROR 'hard', one
+    WARNING 'soft') for the reference's two-tier bound semantics
+    (extent.py:144-156)."""
     out = []
     for rule in rules:
         c = rule.column
@@ -59,18 +63,6 @@ def extents_from_agg(agg: DataFrame, rules: list[Rule]) -> list[DataFrame]:
     return out
 
 
-def eval_extents_fused(df: DataFrame, rules: list[Rule], ruleset) -> list[DataFrame]:
-    """ALL extent rules in ONE agg: min/max of every referenced column in a
-    single scan (the fold is associative; partial aggregation merges
-    treewise), then each rule's bound predicate filters the one-row-per-scope
-    aggregate. The validator routes every extent rule here (and, inside a
-    full ``validate`` run, shares the aggregate with the profiler instead)."""
-    agg = df.groupBy(F.expr(ruleset.scope).cast("string").alias("__scope")).agg(
-        *extent_aggs(rules)
-    )
-    return extents_from_agg(agg, rules)
-
-
 def congruence_from_agg(agg: DataFrame, rules: list[Rule]) -> list[DataFrame]:
     """Declared-vs-computed extent congruence over the shared per-scope
     aggregate — the engine form of the reference's final_checks extent audit
@@ -83,6 +75,9 @@ def congruence_from_agg(agg: DataFrame, rules: list[Rule]) -> list[DataFrame]:
       warning) — off by default so clean runs stay violation-free;
     * nothing declared AND no data → violation at rule.severity (the
       reference's "extent not set from data or provided in summary").
+
+    params: declared_lo / declared_hi (from the run manifest's declared
+    extents), advisory (bool).
 
     Unlike the bounds rule (exclusive hi), congruence is inclusive on both
     ends, matching the reference's ``dataset.extent[1] > summary.extent[1]``.
@@ -140,48 +135,3 @@ def congruence_from_agg(agg: DataFrame, rules: list[Rule]) -> list[DataFrame]:
             )
     return out
 
-
-def eval_extent_congruence(df: DataFrame, rule: Rule, ruleset, dims) -> DataFrame:
-    """Standalone path (outside a full validate() run): one min/max agg then
-    the congruence predicates. params: declared_lo / declared_hi (both
-    inclusive; from the run manifest's declared extents), advisory (bool)."""
-    from functools import reduce
-
-    agg = df.groupBy(F.expr(ruleset.scope).cast("string").alias("__scope")).agg(
-        *extent_aggs([rule])
-    )
-    parts = congruence_from_agg(agg, [rule])
-    return reduce(lambda a, b: a.unionByName(b), parts)
-
-
-def eval_extent(df: DataFrame, rule: Rule, ruleset, dims) -> DataFrame:
-    """params: lo / hi (hard bounds, inclusive-lo / exclusive-hi) — violation
-    at rule.severity when the observed extent crosses them. Use two extent
-    rules (one ERROR 'hard', one WARNING 'soft') for the reference's two-tier
-    bound semantics (extent.py:144-156)."""
-    col = rule.column
-    lo = rule.params.get("lo")
-    hi = rule.params.get("hi")
-    scope = F.expr(ruleset.scope)
-
-    agg = df.groupBy(scope.alias("__scope")).agg(
-        F.min(col).alias("__min"), F.max(col).alias("__max"), F.count(col).alias("__n")
-    )
-    breach = F.lit(False)
-    if lo is not None:
-        breach = breach | (F.col("__min") < F.lit(lo))
-    if hi is not None:
-        breach = breach | (F.col("__max") >= F.lit(hi))
-    bad = agg.where(F.col("__n") > 0).where(breach)
-    msg = F.concat(
-        F.lit(f"{col} extent ["),
-        F.col("__min").cast("string"),
-        F.lit(", "),
-        F.col("__max").cast("string"),
-        F.lit(f"] breaches bounds [{lo}, {hi})"),
-    )
-    entity = F.concat(
-        F.lit("scope="), F.coalesce(F.col("__scope").cast("string"), F.lit("∅"))
-    )
-    value = F.concat(F.col("__min").cast("string"), F.lit(".."), F.col("__max").cast("string"))
-    return as_violations(bad, rule, F.col("__scope"), entity, value, msg)

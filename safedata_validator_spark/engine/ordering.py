@@ -106,9 +106,9 @@ def key_counts(df: DataFrame, group: str, order: str, scope_expr: str) -> DataFr
     """Level-1 aggregation shared by the sequential and unique_key rules:
     occurrence count per (group, order, scope) key. One shuffle whose volume
     is bounded by distinct keys (map-side combine collapses duplicates before
-    the exchange). When both rules derive from the SAME key_counts plan,
-    Spark's ReuseExchange runs the shuffle once for the whole violations
-    union — the validator relies on this for rule fusion."""
+    the exchange). Each consumer of the counts plans this aggregation again;
+    Spark may reuse the identical exchange at run time, but that is not
+    guaranteed (ROADMAP direction 2)."""
     scope = F.expr(scope_expr)
     return df.groupBy(F.col(group), F.col(order), scope.alias("__scope")).agg(
         F.count(F.lit(1)).alias("__dup_n")
@@ -238,25 +238,13 @@ def flagged_sequence_groups(
     return joined.where(~ok).select(group).distinct()
 
 
-def eval_sequential(df: DataFrame, rule: Rule, ruleset, dims) -> DataFrame:
-    """turn_idx per conv_id must be exactly 1..n consecutive.
-
-    params: group (default first key col), order (default 'turn_idx'),
-    start (default 1). Pure aggregation — NO window: {1..n} ⟺ min=start ∧
-    max=start+n-1 ∧ count=n ∧ distinct=n, where the distinct count is free
-    (it is the level-1 row count, no distinct aggregate). One violation row
-    per bad group with diagnostic counts (the reference reports per-row
-    errors but counts at sheet level, field.py:779-790)."""
-    group = rule.params.get("group", ruleset.key_cols[0])
-    order = rule.params.get("order", rule.column or "turn_idx")
-    counts = key_counts(df, group, order, ruleset.scope)
-    out = sequential_from_counts(counts, rule, group, order)
-    if rule.params.get("examples"):
-        out = out.unionByName(sequential_examples(df, counts, rule, ruleset, group, order))
-    return out
-
-
 def sequential_from_counts(counts: DataFrame, rule: Rule, group: str, order: str) -> DataFrame:
+    """``order`` per ``group`` must be exactly start..start+n-1 (params:
+    group, order, start — default 1). Pure aggregation over the key counts,
+    NO window: {1..n} ⟺ min=start ∧ max=start+n-1 ∧ count=n ∧ distinct=n,
+    where the distinct count is free (it is the level-1 row count). One
+    violation row per bad group with diagnostic counts (the reference
+    reports per-row errors but counts at sheet level, field.py:779-790)."""
     start = int(rule.params.get("start", 1))
     agg = counts.groupBy(group, "__scope").agg(
         F.sum("__dup_n").alias("__n"),
@@ -412,7 +400,10 @@ def build_pairs(
 
 
 def _monotone_check(rule: Rule, group: str, order: str):
-    """(violation predicate, value, message) columns over a pairs stream."""
+    """(violation predicate, value, message) columns over a pairs stream:
+    the column must be non-decreasing (or, with direction 'increasing',
+    strictly increasing) in ``order`` within ``group``. params: group,
+    order, direction, adjacency (join|window), block_size."""
     col = rule.column
     strict = rule.params.get("direction", "non_decreasing") == "increasing"
     prev = F.col(f"__prev_{col}")
@@ -425,7 +416,22 @@ def _monotone_check(rule: Rule, group: str, order: str):
 
 
 def _grammar_check(rule: Rule, group: str, order: str):
-    """(violation predicate, value, message) columns over a pairs stream."""
+    """(violation predicate, value, message) columns over a pairs stream:
+    each adjacent (prev, cur) pair within a conversation must be in the
+    declared transition set; the first turn's role must be in
+    ``allowed_start``. params: group, order, transitions: list[[from,to]],
+    allowed_start: list[str], start (first index, default 1), adjacency,
+    block_size. Compiled to an ``isin`` over 'from→to' literals (transition
+    alphabets are tiny), staying fully inside codegen — no join for the
+    membership test.
+
+    Semantics (blocked-window adjacency, the default): the grammar judges the
+    sequence AS OBSERVED — each row's predecessor is the physically previous
+    row in ``order``-sorted position, so an illegal edge across an index gap
+    (or between duplicate-index rows) IS flagged, exactly what a sequential
+    reader of the rows sees; the gap/duplicate itself is reported by the
+    sequential/unique rules. A group whose first row is not the opening
+    index gets no opening-role check (its true predecessor is unknown)."""
     col = rule.column
     transitions = [f"{a}→{b}" for a, b in rule.params["transitions"]]
     allowed_start = list(rule.params.get("allowed_start", []))
@@ -479,7 +485,7 @@ def fused_pairs_violations(
         F.lit(f"/{order}="), F.coalesce(F.col(order).cast("string"), F.lit("∅")),
     )
     # Shape note: where(size)+explode kept deliberately — see the identical
-    # adjudication in validator._row_violations (the explode_outer
+    # adjudication in validator.row_violations (the explode_outer
     # "evaluate once" variant drops the Generate out of codegen and costs
     # 2-3× at 4M turns; the pushed size filter runs codegen'd and the
     # projection above it computes entity/__v for surviving pairs only).
@@ -498,42 +504,3 @@ def fused_pairs_violations(
         F.col("v.message").alias("message"),
     )
 
-
-def eval_monotone(df: DataFrame, rule: Rule, ruleset, dims) -> DataFrame:
-    """Column must be non-decreasing (or 'increasing') in ``order`` within
-    ``group``. params: group, order, direction, adjacency (join|window),
-    block_size."""
-    group, order, method, block_size = rule_pair_key(rule, ruleset)
-    pairs = build_pairs(df, ruleset, group, order, [rule.column], block_size, method)
-    return monotone_from_pairs(pairs, rule, group, order)
-
-
-def monotone_from_pairs(pairs: DataFrame, rule: Rule, group: str, order: str) -> DataFrame:
-    return fused_pairs_violations(pairs, [rule], group, order)
-
-
-def eval_transition_grammar(df: DataFrame, rule: Rule, ruleset, dims) -> DataFrame:
-    """Role-sequence grammar: each adjacent (prev, cur) pair within a
-    conversation must be in the declared transition set; the first turn's
-    role must be in ``allowed_start``.
-
-    params: group, order, transitions: list[[from,to]], allowed_start:
-    list[str], start (first index, default 1), adjacency, block_size.
-    Compiled to an ``isin`` over 'from→to' literals (transition alphabets are
-    tiny), staying fully inside codegen — no join for the membership test.
-
-    Semantics (blocked-window adjacency, the default): the grammar judges the
-    sequence AS OBSERVED — each row's predecessor is the physically previous
-    row in ``order``-sorted position, so an illegal edge across an index gap
-    (or between duplicate-index rows) IS flagged, exactly what a sequential
-    reader of the rows sees; the gap/duplicate itself is reported by the
-    sequential/unique rules. A group whose first row is not the opening
-    index gets no opening-role check (its true predecessor is unknown).
-    """
-    group, order, method, block_size = rule_pair_key(rule, ruleset)
-    pairs = build_pairs(df, ruleset, group, order, [rule.column], block_size, method)
-    return grammar_from_pairs(pairs, rule, group, order)
-
-
-def grammar_from_pairs(pairs: DataFrame, rule: Rule, group: str, order: str) -> DataFrame:
-    return fused_pairs_violations(pairs, [rule], group, order)

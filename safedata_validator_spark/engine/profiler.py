@@ -23,6 +23,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from safedata_validator_spark.engine.common import sql_ident, sql_str
+
 NUMERIC_TYPES = (
     T.ByteType,
     T.ShortType,
@@ -60,7 +62,7 @@ def default_profile_columns(df: DataFrame, ruleset) -> list[str]:
     }
     plan_cols: set[str] = set()
     for r in ruleset.rules:
-        if r.rule_type not in registry.PLAN_EVALUATORS:
+        if r.rule_type not in registry.PLAN_RULE_TYPES:
             continue
         if r.column:
             plan_cols.add(r.column)
@@ -106,10 +108,9 @@ def profile_aggs(
     aggs = []
     for c in columns:
         dt = fields[c]
-        q = f"`{c}`"
+        q = sql_ident(c)
         is_str = isinstance(dt, T.StringType)
         is_num = _is_numeric(dt)
-        na = na_sentinel.replace("'", "''")
 
         def e(sql: str, alias: str):
             aggs.append(F.expr(sql).alias(f"{c}__{alias}"))
@@ -122,7 +123,7 @@ def profile_aggs(
                 "THEN 1 ELSE 0 END)",
                 "n_blank",
             )
-            e(f"sum(CASE WHEN ({q} = '{na}') THEN 1 ELSE 0 END)", "n_na")
+            e(f"sum(CASE WHEN ({q} = {sql_str(na_sentinel)}) THEN 1 ELSE 0 END)", "n_na")
         else:
             e("CAST(0 AS BIGINT)", "n_blank")
             e("CAST(0 AS BIGINT)", "n_na")
@@ -175,15 +176,17 @@ def profile_long(wide: DataFrame, columns: list[str]) -> DataFrame:
     (scope, column, metric...) profile shape — driver-free explode."""
     # one parsed expression (vs N struct() Column builds) — same tree
     def struct_of(c: str) -> str:
-        cq = c.replace("'", "''")
+        def m(metric: str) -> str:
+            return sql_ident(f"{c}__{metric}")
+
         return (
-            f"named_struct('column', '{cq}', 'n', `{c}__n`, "
-            f"'n_null', `{c}__n_null`, 'n_blank', `{c}__n_blank`, "
-            f"'n_na', `{c}__n_na`, 'n_distinct', `{c}__n_distinct`, "
-            f"'min_value', `{c}__min`, 'max_value', `{c}__max`, "
-            f"'mean', `{c}__mean`, 'stddev', `{c}__stddev`, "
-            f"'quantiles', `{c}__quantiles`, "
-            f"'n_nonmidnight', `{c}__n_nonmidnight`)"
+            f"named_struct('column', {sql_str(c)}, 'n', {m('n')}, "
+            f"'n_null', {m('n_null')}, 'n_blank', {m('n_blank')}, "
+            f"'n_na', {m('n_na')}, 'n_distinct', {m('n_distinct')}, "
+            f"'min_value', {m('min')}, 'max_value', {m('max')}, "
+            f"'mean', {m('mean')}, 'stddev', {m('stddev')}, "
+            f"'quantiles', {m('quantiles')}, "
+            f"'n_nonmidnight', {m('n_nonmidnight')})"
         )
 
     per_col_structs = F.expr("array(" + ", ".join(struct_of(c) for c in columns) + ")")

@@ -14,13 +14,12 @@ aggregated map-side to its distinct values and never shuffled against the
 dimension. The reference's parent-memoization dict (taxa.py:1223-1275) is
 subsumed by the aggregation.
 
-Inside a full ``validate`` run, ALL categorical rules (level audits +
-referential membership, any number of columns) share ONE fact pass: values
-are stacked into (column, value) rows, counted per scope in a single
-aggregation (``categorical_counts``), and the tiny result is cached — each
-rule then derives its violations from the cached counts with broadcast
-joins only. Standalone ``eval_*`` entry points build a single-column counts
-plan themselves.
+ALL categorical rules (level audits + referential membership, any number
+of columns) share ONE fact pass: values are stacked into (column, value)
+rows, counted per scope in a single aggregation (``categorical_counts``),
+and ``validate()`` keeps the tiny result as a driver-local table — each
+rule then derives its violations from its column's slice of the counts with
+broadcast joins only.
 """
 
 from __future__ import annotations
@@ -113,20 +112,6 @@ def categorical_counts(df: DataFrame, scope_expr: str, columns: list[str]) -> Da
             F.explode(pairs).alias("__p"),
         )
         .select("__scope", F.col("__p.__col").alias("__col"), F.col("__p.__val").alias("__val"))
-        .groupBy("__scope", "__col", "__val")
-        .agg(F.count(F.lit(1)).alias("__n"))
-    )
-
-
-def column_counts(df: DataFrame, scope_expr: str, column: str) -> DataFrame:
-    """Single-column counts in the ``categorical_counts`` shape (standalone
-    rule evaluation — no stack needed)."""
-    return (
-        df.select(
-            F.expr(scope_expr).cast("string").alias("__scope"),
-            F.lit(column).alias("__col"),
-            _canon_col(df, column).alias("__val"),
-        )
         .groupBy("__scope", "__col", "__val")
         .agg(F.count(F.lit(1)).alias("__n"))
     )
@@ -268,14 +253,3 @@ def levels_audit_from_counts(counts: DataFrame, rule: Rule, dims: dict) -> DataF
     )
     return undeclared_v.unionByName(unused_v)
 
-
-def eval_ref_integrity(df: DataFrame, rule: Rule, ruleset, dims) -> DataFrame:
-    """Standalone entry point (registry): one fact pass for this rule only."""
-    counts = column_counts(df, ruleset.scope, rule.column)
-    return ref_integrity_from_counts(counts, rule, dims)
-
-
-def eval_levels_audit(df: DataFrame, rule: Rule, ruleset, dims) -> DataFrame:
-    """Standalone entry point (registry): one fact pass for this rule only."""
-    counts = column_counts(df, ruleset.scope, rule.column)
-    return levels_audit_from_counts(counts, rule, dims)

@@ -19,37 +19,12 @@ from safedata_validator_spark.engine.common import as_violations
 from safedata_validator_spark.rules.model import Rule
 
 
-def unique_from_counts(counts: DataFrame, rule: Rule, group: str, order: str) -> DataFrame:
-    """Duplicate-key violations derived from a shared ordering.key_counts
-    plan — the validator routes (group, order)-shaped unique_key rules here
-    so the shuffle is reused (ReuseExchange) with the sequential rule."""
+def unique_from_counts(counts: DataFrame, rule: Rule, keys: list[str]) -> DataFrame:
+    """Duplicate-key violations from per-key occurrence counts (``keys``,
+    ``__scope``, ``__dup_n``). A unique_key rule over a sequential rule's
+    (group, order) reads that rule's ``ordering.key_counts``; any other key
+    set counts its own (``eval_unique_key``)."""
     dupes = counts.where(F.col("__dup_n") > 1)
-    entity = F.concat_ws(
-        "/",
-        F.concat(F.lit(f"{group}="), F.coalesce(F.col(group).cast("string"), F.lit("∅"))),
-        F.concat(F.lit(f"{order}="), F.coalesce(F.col(order).cast("string"), F.lit("∅"))),
-    )
-    return as_violations(
-        dupes,
-        rule,
-        scope=F.col("__scope"),
-        entity=entity,
-        value=F.col("__dup_n"),
-        message=F.concat(F.lit("duplicate key: "), F.col("__dup_n").cast("string"), F.lit(" occurrences")),
-        column=f"{group},{order}",
-    )
-
-
-def eval_unique_key(df: DataFrame, rule: Rule, ruleset, dims) -> DataFrame:
-    """params: keys: list[str] (defaults to ruleset.key_cols)."""
-    keys = list(rule.params.get("keys", ruleset.key_cols))
-    scope = F.expr(ruleset.scope)
-
-    dupes = (
-        df.groupBy(*[F.col(k) for k in keys], scope.alias("__scope"))
-        .agg(F.count(F.lit(1)).alias("__n"))
-        .where(F.col("__n") > 1)
-    )
     entity = F.concat_ws(
         "/", *[F.concat(F.lit(f"{k}="), F.coalesce(F.col(k).cast("string"), F.lit("∅"))) for k in keys]
     )
@@ -58,7 +33,16 @@ def eval_unique_key(df: DataFrame, rule: Rule, ruleset, dims) -> DataFrame:
         rule,
         scope=F.col("__scope"),
         entity=entity,
-        value=F.col("__n"),
-        message=F.concat(F.lit("duplicate key: "), F.col("__n").cast("string"), F.lit(" occurrences")),
+        value=F.col("__dup_n"),
+        message=F.concat(F.lit("duplicate key: "), F.col("__dup_n").cast("string"), F.lit(" occurrences")),
         column=",".join(keys),
     )
+
+
+def eval_unique_key(df: DataFrame, rule: Rule, ruleset, dims) -> DataFrame:
+    """params: keys: list[str] (defaults to ruleset.key_cols)."""
+    keys = list(rule.params.get("keys", ruleset.key_cols))
+    counts = df.groupBy(*[F.col(k) for k in keys], F.expr(ruleset.scope).alias("__scope")).agg(
+        F.count(F.lit(1)).alias("__dup_n")
+    )
+    return unique_from_counts(counts, rule, keys)

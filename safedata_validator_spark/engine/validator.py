@@ -1,16 +1,25 @@
 """ValidationEngine — orchestrates rule compilation and evaluation.
 
+``ValidationEngine.validate()`` is the single entry point, and each rule
+family has exactly one evaluation path inside it. Violations alone come from
+``validate(df, ruleset, dims, with_stats=False).violations``.
+
 Execution shape (cf. SURVEY §3.1 "Spark lifecycle equivalent"):
 
 1. driver lints the rule set (fail fast, analogue of descriptor validation);
-2. ALL row-level rules fuse into ONE projection over the fact scan — each
-   compiled predicate contributes a conditional violation struct and the
-   non-null structs are exploded out; Catalyst sees a single pass, columns
-   not referenced by any rule are pruned from the parquet/Iceberg read;
-3. plan-level rules (uniqueness, ordering, referential, extents, drift,
-   hierarchy) each produce their violations from aggregation/join shapes
-   chosen for 10^12-row scale (see their modules);
-4. violations union into one DataFrame; verdicts are a groupBy over it,
+2. two small shared aggregates run eagerly and come back as driver-local
+   tables: the per-scope aggregate (profile sketches, extent min/max,
+   verdict row counts, sequential order maxima) and the stacked
+   categorical counts;
+3. ALL row-level rules fuse into ONE projection over the fact scan
+   (``row_violations``, which the streaming path shares) — each compiled
+   predicate contributes a conditional violation struct and the non-null
+   structs are exploded out; Catalyst sees a single pass, columns not
+   referenced by any rule are pruned from the parquet/Iceberg read;
+4. plan-level rules (uniqueness, ordering, referential, extents, drift,
+   hierarchy) derive their violations from the shared aggregates or from
+   aggregation/join shapes chosen for 10^12-row scale (see their modules);
+5. violations union into one DataFrame; verdicts are a groupBy over it,
    zero-filled against the declared rule list (a rule with no violations
    must still report passed=true — the reference's pass verdict is exactly
    "zero ERROR count", field.py:324-342).
@@ -70,79 +79,59 @@ class RunResult:
             df.unpersist(blocking=True)
 
 
-class ValidationEngine:
-    def __init__(self, fail_on_lint: bool = True):
-        self.fail_on_lint = fail_on_lint
-
-    # -- row-rule fusion ---------------------------------------------------
-    def _row_violations(self, df: DataFrame, ruleset: RuleSet, row_rules: list[Rule]) -> DataFrame:
-        checks = [compile_row_rule(r) for r in row_rules]
-        structs = [
-            F.when(
-                chk.predicate,
-                F.struct(
-                    F.lit(chk.rule.rule_id).alias("rule_id"),
-                    F.lit(chk.rule.severity).alias("severity"),
-                    F.lit(chk.rule.column or "").alias("column"),
-                    chk.value.cast("string").alias("value"),
-                    F.lit(chk.message).alias("message"),
-                ),
-            )
-            for chk in checks
-        ]
-        # Shape note (measured this round, A/B at 4M turns): keep the
-        # where(size(__v) > 0) + explode formulation. The pushed-down size
-        # filter does inline the whole struct array into a Filter below the
-        # projection, but that filter runs INSIDE whole-stage codegen over
-        # all rows, and the projection + generate above it then compute
-        # entity/__v for the (rare) surviving rows only. The tempting
-        # "evaluate once" rewrite — explode_outer + IsNotNull on the
-        # generated attribute — disables codegen for the Generate (outer
-        # generates don't codegen), so the whole battery evaluates
-        # interpreted: flagship 12-13 s → 22-34 s. Reverted.
-        fused = df.select(
-            F.expr(ruleset.scope).cast("string").alias("__scope"),
-            entity_col(ruleset.key_cols).alias("__entity"),
-            F.array_compact(F.array(*structs)).alias("__v"),
-        ).where(F.size("__v") > 0)
-        return fused.select(
-            "__scope", "__entity", F.explode("__v").alias("v")
-        ).select(
-            F.col("v.rule_id").alias("rule_id"),
-            F.col("v.severity").alias("severity"),
-            F.col("__scope").alias("scope"),
-            F.col("__entity").alias("entity"),
-            F.col("v.column").alias("column"),
-            F.col("v.value").alias("value"),
-            F.col("v.message").alias("message"),
+def row_violations(df: DataFrame, ruleset: RuleSet, row_rules: list[Rule]) -> DataFrame:
+    """ALL row rules fused into ONE projection over ``df`` (batch or
+    streaming): each compiled predicate contributes a conditional violation
+    struct and the non-null structs explode out."""
+    checks = [compile_row_rule(r) for r in row_rules]
+    structs = [
+        F.when(
+            chk.predicate,
+            F.struct(
+                F.lit(chk.rule.rule_id).alias("rule_id"),
+                F.lit(chk.rule.severity).alias("severity"),
+                F.lit(chk.rule.column or "").alias("column"),
+                chk.value.cast("string").alias("value"),
+                F.lit(chk.message).alias("message"),
+            ),
         )
+        for chk in checks
+    ]
+    # Shape note (A/B at 4M turns): keep the where(size(__v) > 0) + explode
+    # formulation. The pushed-down size filter does inline the whole struct
+    # array into a Filter below the projection, but that filter runs INSIDE
+    # whole-stage codegen over all rows, and the projection + generate above
+    # it then compute entity/__v for the (rare) surviving rows only. The
+    # tempting "evaluate once" rewrite — explode_outer + IsNotNull on the
+    # generated attribute — disables codegen for the Generate (outer
+    # generates don't codegen), so the whole battery evaluates interpreted:
+    # flagship 12-13 s → 22-34 s.
+    fused = df.select(
+        F.expr(ruleset.scope).cast("string").alias("__scope"),
+        entity_col(ruleset.key_cols).alias("__entity"),
+        F.array_compact(F.array(*structs)).alias("__v"),
+    ).where(F.size("__v") > 0)
+    return fused.select(
+        "__scope", "__entity", F.explode("__v").alias("v")
+    ).select(
+        F.col("v.rule_id").alias("rule_id"),
+        F.col("v.severity").alias("severity"),
+        F.col("__scope").alias("scope"),
+        F.col("__entity").alias("entity"),
+        F.col("v.column").alias("column"),
+        F.col("v.value").alias("value"),
+        F.col("v.message").alias("message"),
+    )
 
-    # -- full evaluation ---------------------------------------------------
+
+class ValidationEngine:
     def _split_rules(self, df: DataFrame, ruleset: RuleSet) -> tuple[list[Rule], list[Rule]]:
         problems = registry.lint_ruleset(ruleset, df.columns)
-        if problems and self.fail_on_lint:
+        if problems:
             raise ValueError("ruleset lint failed:\n  " + "\n  ".join(problems))
         row_rules = [r for r in ruleset.rules if r.rule_type in registry.ROW_COMPILERS]
-        plan_rules = [r for r in ruleset.rules if r.rule_type in registry.PLAN_EVALUATORS]
+        plan_rules = [r for r in ruleset.rules if r.rule_type in registry.PLAN_RULE_TYPES]
         return row_rules, plan_rules
-
-    def violations(
-        self,
-        df: DataFrame,
-        ruleset: RuleSet,
-        dims: dict[str, DataFrame] | None = None,
-        shared: dict[str, DataFrame] | None = None,
-    ) -> DataFrame:
-        dims = dims or {}
-        row_rules, plan_rules = self._split_rules(df, ruleset)
-
-        parts: list[DataFrame] = []
-        if row_rules:
-            parts.append(self._row_violations(df, ruleset, row_rules))
-        parts.extend(self._plan_violations(df, ruleset, plan_rules, dims, shared))
-        if not parts:
-            return empty_violations(df.sparkSession)
-        return reduce(lambda a, b: a.unionByName(b), parts)
 
     def _plan_violations(
         self,
@@ -150,22 +139,29 @@ class ValidationEngine:
         ruleset: RuleSet,
         plan_rules: list[Rule],
         dims: dict,
-        shared: dict[str, DataFrame] | None = None,
+        scope_agg: DataFrame,
+        cat_counts: DataFrame | None,
+        order_max: dict[str, int | None],
     ) -> list[DataFrame]:
-        """Evaluate plan-level rules with cross-rule fusion. Rules that share
-        a relational shape share ONE pass over the data:
+        """Evaluate plan-level rules over the run's shared aggregates:
+        ``scope_agg`` (the per-scope aggregate), ``cat_counts`` (the stacked
+        categorical counts; None when no rule needs them) and ``order_max``
+        (the global maximum of each sequential order column; empty when the
+        scope aggregate was too large to localize). Rules that share a
+        relational shape share ONE pass over the data:
 
         * monotone + transition_grammar with the same (group, order,
           block_size) evaluate in ONE projection over one adjacent-pairs
           plan (one bounded window + one boundary stitch for all of them);
         * sequential + unique_key over (group, order) share the
-          conversation-level hash-sum screen (fast path, inside validate())
-          or one key-count aggregation (standalone / method='exact'), the
-          key-granularity work running only over flagged conversations;
-        * ALL extent rules fold into the shared per-scope aggregate (inside
-          validate()) or one min/max agg (standalone);
-        * ALL level audits + referential membership checks derive from one
-          stacked categorical-counts pass (inside validate()).
+          conversation-level hash-sum screen, the key-granularity work
+          running only over flagged conversations (or one key-count
+          aggregation over the whole table on the exact path);
+        * ALL extent rules read the shared per-scope aggregate;
+        * ALL level audits + referential membership checks derive from the
+          stacked categorical counts.
+
+        Every other plan rule goes through its registry evaluator.
 
         At 10^12 rows the scan/shuffle count, not expression work, dominates
         cost — this is the engine's equivalent of the reference's single-pass
@@ -175,7 +171,6 @@ class ValidationEngine:
 
         from safedata_validator_spark.engine import extents, ordering, referential, uniqueness
 
-        shared = shared or {}
         parts: list[DataFrame] = []
         handled: set[int] = set()
 
@@ -194,19 +189,17 @@ class ValidationEngine:
             handled.update(id(r) for r in rules)
 
         # -- sequential + unique_key fusion -----------------------------------
-        # Fast path (inside validate(), where the shared per-scope aggregate
-        # supplies the global max order value): ONE conversation-level
-        # aggregation + hash-sum check decides which conversations are clean
-        # — 5-6× cheaper at 40M turns than aggregating per key — and only the
-        # flagged conversations are re-aggregated at key level (the exact
-        # drilldown that produces byte-identical violation rows, including
-        # the duplicate-key report). Clean data therefore never pays the
-        # key-granularity shuffle. method='exact' on the rule forces the
-        # key-level path (e.g. adversarial inputs engineered against the
-        # public hash seeds).
+        # Fast path (the global max order value is known and within
+        # SEQ_HASH_CAP): ONE conversation-level aggregation + hash-sum check
+        # decides which conversations are clean — 5-6× cheaper at 40M turns
+        # than aggregating per key — and only the flagged conversations are
+        # re-aggregated at key level (the exact drilldown that produces
+        # byte-identical violation rows, including the duplicate-key
+        # report). Clean data therefore never pays the key-granularity
+        # shuffle. method='exact' on the rule forces the key-level path (e.g.
+        # adversarial inputs engineered against the public hash seeds).
         seq_rules = [r for r in plan_rules if r.rule_type == "sequential"]
         uniq_rules = [r for r in plan_rules if r.rule_type == "unique_key"]
-        order_max: dict[str, int] = shared.get("order_max") or {}
         for sr in seq_rules:
             group = sr.params.get("group", ruleset.key_cols[0])
             order = sr.params.get("order", sr.column or "turn_idx")
@@ -236,43 +229,31 @@ class ValidationEngine:
             handled.add(id(sr))
             for ur in uniq_rules:
                 if id(ur) not in handled and list(ur.params.get("keys", ruleset.key_cols)) == [group, order]:
-                    parts.append(uniqueness.unique_from_counts(counts, ur, group, order))
+                    parts.append(uniqueness.unique_from_counts(counts, ur, [group, order]))
                     handled.add(id(ur))
 
-        # -- extent fusion -----------------------------------------------------
-        # inside a full validate() run the min/max fold rides the shared
-        # per-scope aggregate (scope_agg) — zero extra fact passes; the
-        # declared-vs-computed congruence rules read the SAME aggregate
+        # -- extents -----------------------------------------------------------
+        # the min/max fold rides the shared per-scope aggregate — zero extra
+        # fact passes; the declared-vs-computed congruence rules read the
+        # SAME aggregate
         extent_rules = [r for r in plan_rules if r.rule_type == "extent"]
         congr_rules = [r for r in plan_rules if r.rule_type == "extent_congruence"]
-        if extent_rules or congr_rules:
-            scope_agg = shared.get("scope_agg")
-            if scope_agg is None:
-                scope_agg = df.groupBy(
-                    F.expr(ruleset.scope).cast("string").alias("__scope")
-                ).agg(*extents.extent_aggs(extent_rules + congr_rules))
-            if extent_rules:
-                parts.extend(extents.extents_from_agg(scope_agg, extent_rules))
-            if congr_rules:
-                parts.extend(extents.congruence_from_agg(scope_agg, congr_rules))
-            handled.update(id(r) for r in extent_rules + congr_rules)
+        parts.extend(extents.extents_from_agg(scope_agg, extent_rules))
+        parts.extend(extents.congruence_from_agg(scope_agg, congr_rules))
+        handled.update(id(r) for r in extent_rules + congr_rules)
 
-        # -- categorical fusion ------------------------------------------------
+        # -- categorical rules -------------------------------------------------
         # level audits + referential membership over ANY number of columns
-        # derive from one cached stacked-counts pass (see referential module)
-        cat_counts = shared.get("cat_counts")
-        if cat_counts is not None:
-            for rule in plan_rules:
-                if id(rule) in handled:
-                    continue
-                if rule.rule_type == "levels_audit":
-                    sliced = cat_counts.where(F.col("__col") == rule.column).drop("__col")
-                    parts.append(referential.levels_audit_from_counts(sliced, rule, dims))
-                    handled.add(id(rule))
-                elif rule.rule_type == "ref_integrity":
-                    sliced = cat_counts.where(F.col("__col") == rule.column).drop("__col")
-                    parts.append(referential.ref_integrity_from_counts(sliced, rule, dims))
-                    handled.add(id(rule))
+        # slice the one stacked-counts table (see referential module)
+        from_counts = {
+            "levels_audit": referential.levels_audit_from_counts,
+            "ref_integrity": referential.ref_integrity_from_counts,
+        }
+        for rule in plan_rules:
+            if rule.rule_type in from_counts:
+                sliced = cat_counts.where(F.col("__col") == rule.column).drop("__col")
+                parts.append(from_counts[rule.rule_type](sliced, rule, dims))
+                handled.add(id(rule))
 
         # -- everything else through the registry ------------------------------
         for rule in plan_rules:
@@ -280,28 +261,21 @@ class ValidationEngine:
                 parts.append(registry.PLAN_EVALUATORS[rule.rule_type](df, rule, ruleset, dims))
         return parts
 
-    def verdicts(
-        self,
-        df: DataFrame,
-        ruleset: RuleSet,
-        violations: DataFrame,
-        scope_rows: DataFrame | None = None,
+    def _verdicts(
+        self, ruleset: RuleSet, violations: DataFrame, scope_rows: DataFrame
     ) -> DataFrame:
         """(scope, rule_id, severity, n_rows, n_failed, passed) — one row per
         declared rule per scope (zero-filled), plus rows for derived rule ids
         (e.g. '.alias', '.unused') that only exist when violations occur.
-        ``scope_rows`` (scope, n_rows) may be supplied from the run's shared
-        per-scope aggregate to avoid a dedicated fact pass."""
-        spark = df.sparkSession
+        ``scope_rows`` (scope, n_rows) comes from the run's shared per-scope
+        aggregate, so verdicts add no fact pass."""
         counts = violations.groupBy("scope", "rule_id", "severity").agg(
             F.count(F.lit(1)).alias("n_failed")
         )
-        if scope_rows is None:
-            scope_rows = df.groupBy(F.expr(ruleset.scope).cast("string").alias("scope")).agg(
-                F.count(F.lit(1)).alias("n_rows")
-            )
         declared = local_table(
-            spark, [(r.rule_id, r.severity) for r in ruleset.rules], "rule_id string, severity string"
+            violations.sparkSession,
+            [(r.rule_id, r.severity) for r in ruleset.rules],
+            "rule_id string, severity string",
         )
         # ONE reference to the violations subtree: the declared grid
         # full-outer-joins the observed counts (derived rule ids such as
@@ -471,8 +445,7 @@ class ValidationEngine:
         aggs = [F.count(F.lit(1)).alias("__n_rows")]
         if prof_cols:
             aggs += profile_aggs(df, prof_cols, approx_distinct=approx_distinct)
-        if extent_rules:
-            aggs += ext.extent_aggs(extent_rules)
+        aggs += ext.extent_aggs(extent_rules)
         # global max of each sequential order column rides the same pass —
         # it gates + sizes the hash-sum fast path (see _plan_violations)
         aggs += [F.max(F.col(o).cast("long")).alias(f"__seqmax_{o}") for o in seq_orders]
@@ -500,31 +473,36 @@ class ValidationEngine:
             # on the main thread WHILE the two aggregate jobs execute —
             # py4j is connection-per-thread, so driver-side building and
             # JVM job execution proceed concurrently
-            early_parts: list[DataFrame] = []
+            parts: list[DataFrame] = []
             if row_rules:
-                early_parts.append(self._row_violations(df, ruleset, row_rules))
+                parts.append(row_violations(df, ruleset, row_rules))
             scope_agg, was_local = scope_fut.result()
             cached = [] if was_local else [scope_agg]
-            shared: dict[str, DataFrame] = {"scope_agg": scope_agg}
+            # a distributed (over-cap) scope aggregate leaves the maxima
+            # unknown, so sequential rules take the exact key-level path
+            order_max: dict[str, int | None] = {}
             if was_local and seq_orders:
                 # the optimizer folds this projection into the local
                 # relation, so the collect runs no Spark job
                 maxima = scope_agg.select(*[f"__seqmax_{o}" for o in seq_orders]).collect()
-                shared["order_max"] = {
+                order_max = {
                     o: max(
                         (r[f"__seqmax_{o}"] for r in maxima if r[f"__seqmax_{o}"] is not None),
                         default=None,
                     )
                     for o in seq_orders
                 }
+            cat_counts = None
             if cat_fut is not None:
                 cat_counts, cat_local = cat_fut.result()
-                shared["cat_counts"] = cat_counts
                 if not cat_local:
                     cached.append(cat_counts)
 
-        parts: list[DataFrame] = list(early_parts)
-        parts.extend(self._plan_violations(df, ruleset, plan_rules, dims, shared))
+        parts.extend(
+            self._plan_violations(
+                df, ruleset, plan_rules, dims, scope_agg, cat_counts, order_max
+            )
+        )
         viols = (
             reduce(lambda a, b: a.unionByName(b), parts)
             if parts
@@ -534,7 +512,7 @@ class ValidationEngine:
         scope_rows = scope_agg.select(
             F.col("__scope").alias("scope"), F.col("__n_rows").alias("n_rows")
         )
-        verd = self.verdicts(df, ruleset, viols, scope_rows=scope_rows)
+        verd = self._verdicts(ruleset, viols, scope_rows)
         stats = profile_long(scope_agg, prof_cols) if with_stats else None
         return RunResult(viols, verd, stats, ruleset.content_hash(), cached=cached)
 

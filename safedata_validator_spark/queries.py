@@ -430,7 +430,7 @@ FROM c
 # --------------------------------------------------------------------------
 
 def q_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem", spread=True)
+    li = _t(spark, sf_dir, "lineitem")
     disc = F.col("l_extendedprice").cast(DEC) * (F.lit(1).cast(DEC) - F.col("l_discount").cast(DEC))
     return (
         li.where(F.col("l_shipdate") <= F.lit("1998-09-02").cast("timestamp"))

@@ -4,8 +4,11 @@ subclass walker (field.py:1323-1350), made explicit.
 Two kinds of rules:
 * ROW rules compile to Column predicates and are fused into ONE scan
   (rules.compilers).
-* PLAN rules need their own relational shape (aggregation, window, join) and
-  are evaluated by functions (df, rule, ruleset, dims) → violations DataFrame.
+* PLAN rules need their own relational shape (aggregation, window, join).
+  The FUSED families are evaluated together over the run's shared
+  aggregates inside ``ValidationEngine._plan_violations``; the others are
+  evaluated one rule at a time by functions (df, rule, ruleset, dims) →
+  violations DataFrame.
 
 Unknown rule types raise at compile time — the reference degrades unknown
 field types to base checks with an error (field.py:641-651); an engine
@@ -20,42 +23,45 @@ from typing import Callable
 from pyspark.sql import DataFrame
 
 from safedata_validator_spark.engine.drift import eval_drift
-from safedata_validator_spark.engine.extents import eval_extent, eval_extent_congruence
 from safedata_validator_spark.engine.hierarchy import (
     eval_hierarchy_congruence,
     eval_name_resolution,
 )
 from safedata_validator_spark.engine.typing_rules import eval_format_consistency
-from safedata_validator_spark.engine.ordering import (
-    eval_monotone,
-    eval_sequential,
-    eval_transition_grammar,
-)
-from safedata_validator_spark.engine.referential import eval_levels_audit, eval_ref_integrity
 from safedata_validator_spark.engine.uniqueness import eval_unique_key
 from safedata_validator_spark.rules.compilers import ROW_COMPILERS
 from safedata_validator_spark.rules.model import Rule, RuleSet
 
 PlanEvaluator = Callable[[DataFrame, Rule, RuleSet, dict], DataFrame]
 
+#: Plan families evaluated one rule at a time. ``unique_key`` over a
+#: sequential rule's (group, order) instead shares that rule's key counts.
 PLAN_EVALUATORS: dict[str, PlanEvaluator] = {
     "unique_key": eval_unique_key,
-    "sequential": eval_sequential,
-    "monotone": eval_monotone,
-    "transition_grammar": eval_transition_grammar,
-    "ref_integrity": eval_ref_integrity,
-    "levels_audit": eval_levels_audit,
-    "extent": eval_extent,
-    "extent_congruence": eval_extent_congruence,
     "drift": eval_drift,
     "hierarchy_congruence": eval_hierarchy_congruence,
     "name_resolution": eval_name_resolution,
     "format_consistency": eval_format_consistency,
 }
 
+#: Plan families evaluated together over the run's shared aggregates.
+FUSED_PLAN_RULES = frozenset(
+    {
+        "sequential",
+        "monotone",
+        "transition_grammar",
+        "ref_integrity",
+        "levels_audit",
+        "extent",
+        "extent_congruence",
+    }
+)
+
+PLAN_RULE_TYPES = FUSED_PLAN_RULES | set(PLAN_EVALUATORS)
+
 
 def known_rule_types() -> set[str]:
-    return set(ROW_COMPILERS) | set(PLAN_EVALUATORS)
+    return set(ROW_COMPILERS) | PLAN_RULE_TYPES
 
 
 def lint_ruleset(ruleset: RuleSet, df_columns: list[str]) -> list[str]:

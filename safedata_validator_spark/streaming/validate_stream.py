@@ -25,7 +25,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from safedata_validator_spark.engine.validator import ValidationEngine
+from safedata_validator_spark.engine.validator import row_violations
 from safedata_validator_spark.rules import registry
 from safedata_validator_spark.rules.model import RuleSet
 
@@ -44,8 +44,7 @@ def stream_row_ruleset(ruleset: RuleSet) -> RuleSet:
 def stream_violations(stream_df: DataFrame, ruleset: RuleSet) -> DataFrame:
     """Map the fused row-rule scan over a streaming DataFrame (stateless —
     safe in append mode)."""
-    engine = ValidationEngine()
-    return engine._row_violations(stream_df, ruleset, stream_row_ruleset(ruleset).rules)
+    return row_violations(stream_df, ruleset, stream_row_ruleset(ruleset).rules)
 
 
 #: Output schema of the stateful sequence check.
@@ -226,9 +225,7 @@ def windowed_verdicts(
     """Per-event-time-window violation counts by rule — the streaming
     analogue of the verdicts table (late data handled by the watermark)."""
     viol_struct_df = stream_df.withWatermark(ts_col, watermark)
-    engine = ValidationEngine()
     rows = stream_row_ruleset(ruleset).rules
-    checks = [(r, engine) for r in rows]
     from safedata_validator_spark.rules.compilers import compile_row_rule
 
     def col_name(rule_id: str) -> str:

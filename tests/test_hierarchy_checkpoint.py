@@ -60,7 +60,7 @@ def test_hierarchy_congruence_rule(spark, dims):
                          "child_col": "leaf", "ancestor_col": "family"}),
         ],
     )
-    got = {v["entity"]: v["message"] for v in ENGINE.violations(df, rs, d).collect()}
+    got = {v["entity"]: v["message"] for v in ENGINE.validate(df, rs, d, with_stats=False).violations.collect()}
     assert set(got) == {"leaf=bash/family=io", "leaf=ghost/family=io"}
     assert "not an ancestor" in got["leaf=bash/family=io"]
     assert "unknown node" in got["leaf=ghost/family=io"]

@@ -182,7 +182,7 @@ def test_declared_end_day_fully_inclusive(spark):
     outside."""
     from datetime import datetime
 
-    from safedata_validator_spark.engine.extents import eval_extent_congruence
+    from safedata_validator_spark.engine.validator import ValidationEngine
     from safedata_validator_spark.rules.manifest import declared_extent_rules
     from safedata_validator_spark.rules.model import RuleSet
 
@@ -193,12 +193,13 @@ def test_declared_end_day_fully_inclusive(spark):
     inside = spark.createDataFrame(
         [(1, datetime(2024, 12, 31, 15, 0, 0))], "id int, ts timestamp"
     )
-    assert eval_extent_congruence(inside, rule, rs, {}).count() == 0
+    engine = ValidationEngine()
+    assert engine.validate(inside, rs, with_stats=False).violations.count() == 0
 
     outside = spark.createDataFrame(
         [(1, datetime(2025, 1, 1, 0, 0, 1))], "id int, ts timestamp"
     )
-    assert eval_extent_congruence(outside, rule, rs, {}).count() == 1
+    assert engine.validate(outside, rs, with_stats=False).violations.count() == 1
 
 
 def test_doi_check_skips_gracefully_offline():

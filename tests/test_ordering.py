@@ -55,7 +55,7 @@ def test_sequential_detects_each_failure_mode(spark):
     )
     df = spark.createDataFrame(data, "g string, i int")
     rule = Rule("seq", "sequential", column="i", params={"group": "g", "order": "i"})
-    got = {v["entity"]: v["message"] for v in ENGINE.violations(df, _rs(rule)).collect()}
+    got = {v["entity"]: v["message"] for v in ENGINE.validate(df, _rs(rule), with_stats=False).violations.collect()}
     assert set(got) == {"g=gap", "g=zero", "g=dup", "g=null"}
     assert "nulls=1" in got["g=null"]
 
@@ -103,9 +103,9 @@ def test_monotone_strict_vs_nonstrict(spark):
     strict = Rule(
         "m", "monotone", column="v", params={"group": "g", "order": "i", "direction": "increasing"}
     )
-    got1 = [v["entity"] for v in ENGINE.violations(df, _rs(nonstrict)).collect()]
+    got1 = [v["entity"] for v in ENGINE.validate(df, _rs(nonstrict), with_stats=False).violations.collect()]
     assert got1 == ["g=a/i=3"]
-    got2 = sorted(v["entity"] for v in ENGINE.violations(df, _rs(strict)).collect())
+    got2 = sorted(v["entity"] for v in ENGINE.validate(df, _rs(strict), with_stats=False).violations.collect())
     assert got2 == ["g=a/i=2", "g=a/i=3"]
 
 
@@ -125,7 +125,7 @@ def test_grammar_start_and_transitions(spark):
             "allowed_start": ["system"],
         },
     )
-    got = {v["entity"]: v["message"] for v in ENGINE.violations(df, _rs(rule)).collect()}
+    got = {v["entity"]: v["message"] for v in ENGINE.validate(df, _rs(rule), with_stats=False).violations.collect()}
     assert set(got) == {"g=b/i=1"}
     assert "bad opening role" in got["g=b/i=1"]
 
@@ -143,7 +143,7 @@ def test_hot_conversation_blocks_actually_split(spark):
                  params={"group": "conv_id", "order": "turn_idx", "block_size": 50}),
         ],
     )
-    assert ENGINE.violations(df, rs).count() == 0
+    assert ENGINE.validate(df, rs, with_stats=False).violations.count() == 0
     n_blocks = (
         df.where(F.col("conv_id") == "conv-00000")
         .select(F.floor(F.col("turn_idx") / 50).alias("b"))

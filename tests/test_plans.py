@@ -30,7 +30,7 @@ def test_ref_integrity_uses_broadcast_join(spark, dims):
         rules=[Rule("r", "ref_integrity", column="tool",
                     params={"dim": "tools", "dim_key": "tool"})],
     )
-    plan = _physical(ValidationEngine().violations(df, rs, dims))
+    plan = _physical(ValidationEngine().validate(df, rs, dims, with_stats=False).violations)
     assert "BroadcastHashJoin" in plan or "BroadcastNestedLoopJoin" in plan
     assert "SortMergeJoin" not in plan  # dimension must never shuffle the fact side
 
@@ -56,7 +56,7 @@ def test_row_rules_fuse_into_single_scan(spark):
             Rule("c", "bounds", column="l_quantity", params={"lo": 0.0, "hi": 100.0}),
         ],
     )
-    plan = _optimized(ValidationEngine().violations(li, rs))
+    plan = _optimized(ValidationEngine().validate(li, rs, with_stats=False).violations)
     assert plan.count("Relation") == 1  # one scan feeds all three rules
 
 
@@ -91,7 +91,7 @@ def test_adjacency_default_windows_are_block_bounded(spark):
             ],
         )
 
-    plan = _physical(ValidationEngine().violations(df, make_rs()))
+    plan = _physical(ValidationEngine().validate(df, make_rs(), with_stats=False).violations)
     specs = re.findall(r"windowspecdefinition\(([^)]*)\)", plan)
     assert specs, plan[:2000]
     assert all("__block" in s for s in specs), specs
@@ -99,12 +99,14 @@ def test_adjacency_default_windows_are_block_bounded(spark):
     # Hash/Object/Sort aggregate variants print keys= or key=
     assert re.search(r"Aggregate\(keys?=\[conv_id[^\]]*__block", plan), plan[:2000]
 
-    plan_join = _physical(ValidationEngine().violations(df, make_rs(adjacency="join")))
+    plan_join = _physical(ValidationEngine().validate(df, make_rs(adjacency="join"), with_stats=False).violations)
     assert "Window" not in plan_join, plan_join[:2000]
     assert "BroadcastHashJoin" in plan_join or "SortMergeJoin" in plan_join
 
 
 def test_sequential_unique_share_level1_exchange(spark):
+    import re
+
     df = transcripts_good(spark, n_convs=5, mean_turns=8, hot_factor=2)
     rs = RuleSet(
         name="t", key_cols=["conv_id", "turn_idx"],
@@ -114,7 +116,7 @@ def test_sequential_unique_share_level1_exchange(spark):
                  params={"group": "conv_id", "order": "turn_idx"}),
         ],
     )
-    viols = ValidationEngine().violations(df, rs)
+    viols = ValidationEngine().validate(df, rs, with_stats=False).violations
     plan = _physical(viols)
     # the scale property: NO distinct aggregate anywhere — the distinct count
     # is derived from level-1 row counts, so no Expand node and no
@@ -123,10 +125,16 @@ def test_sequential_unique_share_level1_exchange(spark):
     assert "count(distinct" not in plan.lower()
     # both rules consume the same level-1 (conv_id, turn_idx) aggregation
     assert plan.count("HashAggregate(keys=[conv_id") >= 2
-    # and at runtime AQE reuses the identical level-1 exchange
-    viols.collect()
+    # the fast path's promise: the key-level (conv_id, turn_idx) exchange is
+    # planned, but on clean data the conversation-level screen flags
+    # nothing, so the final adaptive plan runs none
+    key_level = re.compile(r"Exchange hashpartitioning\(conv_id#\d+, turn_idx#")
+    assert key_level.search(plan), plan
+    assert viols.collect() == []
     final = _physical(viols)
-    assert "ReusedExchange" in final or final.count("Exchange hashpartitioning(conv_id") <= 2
+    assert "isFinalPlan=true" in final
+    final_plan = final.split("== Initial Plan ==")[0]
+    assert not key_level.search(final_plan), final
 
 
 def test_full_validate_bounds_fact_scans(spark, dims, tmp_path):

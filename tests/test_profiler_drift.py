@@ -39,6 +39,52 @@ def test_profile_exact_against_pandas(spark):
     assert x["quantiles"][0] == pytest.approx(30.0)  # exact median of 5 values
 
 
+def test_profile_quotes_hostile_names_and_sentinels(spark):
+    """The profiler's parsed-SQL aggregates quote identifiers and string
+    literals: stats for columns whose names hold a backtick, a quote and
+    unicode, and an NA sentinel holding a backslash, equal Column-API counts
+    over the same data under plain names."""
+    from pyspark.sql import types as T
+
+    from safedata_validator_spark.engine.validator import ValidationEngine
+    from safedata_validator_spark.rules.model import Rule, RuleSet
+
+    num, txt = "we`i'rd ü", "s`'\\ß"
+    schema = T.StructType(
+        [
+            T.StructField("id", T.IntegerType()),
+            T.StructField(num, T.IntegerType()),
+            T.StructField(txt, T.StringType()),
+        ]
+    )
+    df = spark.createDataFrame(
+        [(1, 5, "a"), (2, None, "N\\A"), (3, 5, "NA"), (4, 7, "NA")], schema
+    )
+    plain = df.toDF("id", "num", "txt")
+
+    def want(c: str, sentinel: str = "NA") -> tuple:
+        col = F.col(c)
+        return (
+            plain.count(),
+            plain.where(col.isNull()).count(),
+            plain.where(col == sentinel).count() if c == "txt" else 0,
+            plain.select(c).where(col.isNotNull()).distinct().count(),
+        )
+
+    def got(stats, name: str) -> tuple:
+        (r,) = stats.where(F.col("column") == name).collect()
+        return (r["n"], r["n_null"], r["n_na"], r["n_distinct"])
+
+    # default stats profile every typed column, the hostile int included
+    rs = RuleSet(name="t", key_cols=["id"], rules=[Rule("r", "not_blank", column="id")])
+    res = ValidationEngine().validate(df, rs)
+    assert got(res.stats, num) == want("num")
+
+    stats = profile(df, [num, txt], approx_distinct=False, na_sentinel="N\\A")
+    assert got(stats, num) == want("num")
+    assert got(stats, txt) == want("txt", "N\\A") == (4, 0, 1, 3)
+
+
 def test_profile_is_single_stage_scan(spark):
     """The fused profile must not multiply scans: the optimized plan reads the
     source once (one scan node), with all metrics as one aggregate."""
@@ -83,7 +129,7 @@ def test_drift_rule_split_cohorts(spark):
                          "psi_threshold": 0.2, "ks_threshold": 0.2}),
         ],
     )
-    got = ValidationEngine().violations(df, rs).collect()
+    got = ValidationEngine().validate(df, rs, with_stats=False).violations.collect()
     assert len(got) == 1 and "drift on v" in got[0]["message"]
 
     # identical cohorts → no drift
@@ -91,7 +137,7 @@ def test_drift_rule_split_cohorts(spark):
         [("A", float(i % 10)) for i in range(200)] + [("B", float(i % 10)) for i in range(200)],
         "cohort string, v double",
     )
-    assert ValidationEngine().violations(df2, rs).count() == 0
+    assert ValidationEngine().validate(df2, rs, with_stats=False).violations.count() == 0
 
 def test_drift_rule_against_stored_baseline_histogram(spark):
     """Cross-snapshot drift: the baseline is a STORED (scope, bucket, n)
@@ -112,7 +158,7 @@ def test_drift_rule_against_stored_baseline_histogram(spark):
                         params={"baseline_dim": "hist", "lo": 0.0, "hi": 15.0,
                                 "bins": 15, "psi_threshold": 0.2})],
         )
-        return ValidationEngine().violations(cur, rs, {"hist": baseline}).collect()
+        return ValidationEngine().validate(cur, rs, {"hist": baseline}, with_stats=False).violations.collect()
 
     assert run(baseline_same) == []
     breach = run(baseline_shifted)

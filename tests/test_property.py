@@ -67,7 +67,7 @@ def test_sequential_matches_python_oracle(spark, table):
     )
     flagged = {
         r["entity"].split("=", 1)[1]
-        for r in ENGINE.violations(df, rs).collect()
+        for r in ENGINE.validate(df, rs, with_stats=False).violations.collect()
     }
     expect = {
         f"c{ci:03d}"
@@ -87,7 +87,7 @@ def test_unique_key_matches_python_oracle(spark, table):
     )
     flagged = {
         (r["entity"].split("/")[0].split("=")[1], int(r["entity"].split("=")[-1]))
-        for r in ENGINE.violations(df, rs).collect()
+        for r in ENGINE.validate(df, rs, with_stats=False).violations.collect()
     }
     expect = set()
     for ci, conv in enumerate(table):
@@ -117,7 +117,7 @@ def test_monotone_matches_python_oracle_on_unique_orders(spark, table):
     )
     flagged = {
         (r["entity"].split("/")[0].split("=")[1], int(r["entity"].split("=")[-1]))
-        for r in ENGINE.violations(df, rs).collect()
+        for r in ENGINE.validate(df, rs, with_stats=False).violations.collect()
     }
     expect = set()
     for ci, conv in enumerate(dedup):
@@ -156,7 +156,7 @@ def test_grammar_matches_python_oracle_on_unique_orders(spark, table):
     )
     flagged = {
         (r["entity"].split("/")[0].split("=")[1], int(r["entity"].split("=")[-1]))
-        for r in ENGINE.violations(df, rs).collect()
+        for r in ENGINE.validate(df, rs, with_stats=False).violations.collect()
     }
     expect = set()
     for ci, conv in enumerate(dedup):

@@ -19,7 +19,7 @@ def _ruleset(*rules, key_cols=None):
 def _viols(spark, data, ddl, *rules, key_cols=None):
     df = spark.createDataFrame(data, ddl)
     rs = _ruleset(*rules, key_cols=key_cols)
-    return ENGINE.violations(df, rs).collect()
+    return ENGINE.validate(df, rs, with_stats=False).violations.collect()
 
 
 def test_not_blank(spark):
@@ -113,7 +113,7 @@ def test_lint_rejects_unknown(spark):
     df = spark.createDataFrame([(1,)], "id int")
     rs = _ruleset(Rule("r", "no_such_type", column="id"))
     try:
-        ENGINE.violations(df, rs)
+        ENGINE.validate(df, rs, with_stats=False).violations
         raise AssertionError("expected lint failure")
     except ValueError as e:
         assert "no_such_type" in str(e)
@@ -161,7 +161,7 @@ def test_format_pattern_presets(spark):
             P.r_name_rule("rname.fmt", "rname"),
         ],
     )
-    viols = ValidationEngine().violations(df, rs).collect()
+    viols = ValidationEngine().validate(df, rs, with_stats=False).violations.collect()
     got = {(v["rule_id"], v["entity"]) for v in viols}
     want = {
         ("name.fmt", "id=2"), ("name.fmt", "id=4"),
@@ -178,7 +178,7 @@ def test_format_pattern_presets(spark):
     )
     rs2 = RuleSet(name="dms", key_cols=["id"],
                   rules=[P.dms_smell_rule("coord.dms", "coord")])
-    got2 = {v["entity"] for v in ValidationEngine().violations(dms, rs2).collect()}
+    got2 = {v["entity"] for v in ValidationEngine().validate(dms, rs2, with_stats=False).violations.collect()}
     assert got2 == {"id=1"}
 
 

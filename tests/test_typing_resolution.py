@@ -28,13 +28,13 @@ def test_format_consistency_mixed_column(spark):
         name="t", key_cols=["id"],
         rules=[Rule("fmt", "format_consistency", column="d")],
     )
-    got = ENGINE.violations(df, rs).collect()
+    got = ENGINE.validate(df, rs, with_stats=False).violations.collect()
     assert len(got) == 1
     assert "date:2" in got[0]["message"] and "timestamp:1" in got[0]["message"]
 
     # homogeneous column (blanks ignored) → clean
     df2 = spark.createDataFrame([(1, "2024-01-01"), (2, None), (3, "1999-12-31")], "id int, d string")
-    assert ENGINE.violations(df2, rs).count() == 0
+    assert ENGINE.validate(df2, rs, with_stats=False).violations.count() == 0
 
 
 def test_name_resolution_rule(spark, dims):
@@ -52,7 +52,7 @@ def test_name_resolution_rule(spark, dims):
         rules=[Rule("cap.resolve", "name_resolution", column="cap", severity="ERROR",
                     params={"dim": "taxonomy_nodes", "name_col": "cap", "rank_col": "rank"})],
     )
-    got = {v["rule_id"]: v for v in ENGINE.violations(df, rs, dims).collect()}
+    got = {v["rule_id"]: v for v in ENGINE.validate(df, rs, dims, with_stats=False).violations.collect()}
     assert set(got) == {"cap.resolve.synonym", "cap.resolve.missing"}
     assert got["cap.resolve.synonym"]["severity"] == "WARNING"
     assert got["cap.resolve.missing"]["severity"] == "ERROR"
@@ -67,7 +67,7 @@ def test_sequential_examples_drilldown(spark):
         rules=[Rule("seq", "sequential", column="i",
                     params={"group": "g", "order": "i", "examples": True})],
     )
-    got = ENGINE.violations(df, rs).collect()
+    got = ENGINE.validate(df, rs, with_stats=False).violations.collect()
     by_rule = {}
     for v in got:
         by_rule.setdefault(v["rule_id"], []).append(v)
