@@ -38,7 +38,7 @@ def entity_col(key_cols: list[str]) -> Column:
     """Stable row identity for violation reporting: 'k1=v1/k2=v2'."""
     parts = []
     for k in key_cols:
-        parts.append(F.concat(F.lit(f"{k}="), F.coalesce(F.col(k).cast("string"), F.lit("∅"))))
+        parts.append(F.concat(F.lit(f"{k}="), F.coalesce(F.col(sql_ident(k)).cast("string"), F.lit("∅"))))
     return F.concat_ws("/", *parts)
 
 

@@ -363,7 +363,6 @@ class ValidationEngine:
         ruleset: RuleSet,
         dims: dict[str, DataFrame] | None = None,
         with_stats: bool = True,
-        approx_distinct: bool = True,
         profile_columns: list[str] | None = None,
     ) -> RunResult:
         """Full run with cross-output pass fusion. Fact passes, total:
@@ -444,7 +443,7 @@ class ValidationEngine:
 
         aggs = [F.count(F.lit(1)).alias("__n_rows")]
         if prof_cols:
-            aggs += profile_aggs(df, prof_cols, approx_distinct=approx_distinct)
+            aggs += profile_aggs(df, prof_cols)
         aggs += ext.extent_aggs(extent_rules)
         # global max of each sequential order column rides the same pass —
         # it gates + sizes the hash-sum fast path (see _plan_violations)

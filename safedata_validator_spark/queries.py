@@ -3404,10 +3404,6 @@ BENCH_QUERIES = {
     "sessionize_events": q_sessionize_events,
     "lsh_ann_topk": q_lsh_ann_topk,
     "ivf_ann_topk": q_ivf_ann_topk,
-    "png_decode_audit": q_png_decode_audit,
-    "jpeg_decode_audit": q_jpeg_decode_audit,
-    "avi_frames_audit": q_avi_frames_audit,
-    "mp4_frames_audit": q_mp4_frames_audit,
     # chars-only packing under the r2-r4 name so the timed curation-suite
     # composition stays comparable (the catalog entry now adds a BPE branch)
     "pack_sequences_docs": q_pack_sequences_chars_docs,

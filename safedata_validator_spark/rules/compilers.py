@@ -22,6 +22,7 @@ from typing import Callable
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from safedata_validator_spark.engine.common import sql_ident
 from safedata_validator_spark.rules.model import EXCEL_ERRORS, Rule
 
 
@@ -56,14 +57,14 @@ def is_blank(col: Column) -> Column:
 @row_compiler("not_blank")
 def compile_not_blank(rule: Rule) -> RowCheck:
     """Reference IsNotBlank/IsNotNone (validators.py:252-288)."""
-    c = F.col(rule.column)
+    c = F.col(sql_ident(rule.column))
     return RowCheck(rule, is_blank(c), c, f"{rule.column} is null/blank")
 
 
 @row_compiler("not_na")
 def compile_not_na(rule: Rule) -> RowCheck:
     """Reference IsNotNA (validators.py:333-350); sentinel configurable."""
-    c = F.col(rule.column)
+    c = F.col(sql_ident(rule.column))
     sentinel = rule.params.get("sentinel", "NA")
     return RowCheck(rule, c == F.lit(sentinel), c, f"{rule.column} is the '{sentinel}' missing sentinel")
 
@@ -71,14 +72,14 @@ def compile_not_na(rule: Rule) -> RowCheck:
 @row_compiler("no_excel_error")
 def compile_no_excel_error(rule: Rule) -> RowCheck:
     """Reference IsNotExcelError (validators.py:353-371, set at 28-39)."""
-    c = F.col(rule.column)
+    c = F.col(sql_ident(rule.column))
     return RowCheck(rule, c.isin(list(EXCEL_ERRORS)), c, f"{rule.column} contains a spreadsheet error sentinel")
 
 
 @row_compiler("not_padded")
 def compile_not_padded(rule: Rule) -> RowCheck:
     """Reference IsNotPadded (validators.py:311-330)."""
-    c = F.col(rule.column)
+    c = F.col(sql_ident(rule.column))
     return RowCheck(rule, c.isNotNull() & (c != F.trim(c)), c, f"{rule.column} has leading/trailing whitespace")
 
 
@@ -87,7 +88,7 @@ def compile_in_levels(rule: Rule) -> RowCheck:
     """Row-level categorical membership against a small declared level set
     (reference CategoricalField levels, field.py:1561-1633). For large or
     external level sets use the plan-level 'ref_integrity' rule instead."""
-    c = F.col(rule.column)
+    c = F.col(sql_ident(rule.column))
     levels = list(rule.params["levels"])
     allow_null = bool(rule.params.get("allow_null", False))
     pred = ~c.isin(levels)
@@ -101,7 +102,7 @@ def compile_pattern(rule: Rule) -> RowCheck:
     match when ``negate``). Covers the reference's format batteries: NoPunctuation
     (validators.py:393-409), valid_r_name (validators.py:50-95), name/email/
     ORCID/DOI regexes (summary.py:27-31), DMS-coordinate smell (validators.py:21)."""
-    c = F.col(rule.column)
+    c = F.col(sql_ident(rule.column))
     regex = rule.params["regex"]
     negate = bool(rule.params.get("negate", False))
     matches = c.rlike(regex)
@@ -114,7 +115,7 @@ def compile_pattern(rule: Rule) -> RowCheck:
 def compile_numeric_string(rule: Rule) -> RowCheck:
     """Reference IsNotNumericString (validators.py:204-226): a string column
     that parses as a number is suspect (numbers stored as text)."""
-    c = F.col(rule.column)
+    c = F.col(sql_ident(rule.column))
     pred = c.isNotNull() & c.try_cast("double").isNotNull()
     return RowCheck(rule, pred, c, f"{rule.column} is a numeric string")
 
@@ -124,7 +125,7 @@ def compile_castable(rule: Rule) -> RowCheck:
     """Dynamic-type conformance on string columns: value must try_cast cleanly
     to ``to`` (reference cell-type checks, field.py:1958-1978, re-expressed as
     try_cast null-delta per SURVEY §1.2)."""
-    c = F.col(rule.column)
+    c = F.col(sql_ident(rule.column))
     to = rule.params["to"]
     pred = c.isNotNull() & c.try_cast(to).isNull()
     return RowCheck(rule, pred, c, f"{rule.column} does not parse as {to}")
@@ -135,7 +136,7 @@ def compile_bounds(rule: Rule) -> RowCheck:
     """Row-level extent bounds (reference Extent.update, extent.py:121-161).
     ``lo``/``hi`` inclusive-lo, exclusive-hi like the reference's hard bounds.
     Severity conveys hard (ERROR) vs soft (WARNING)."""
-    c = F.col(rule.column)
+    c = F.col(sql_ident(rule.column))
     lo = rule.params.get("lo")
     hi = rule.params.get("hi")
     pred = F.lit(False)
@@ -153,7 +154,7 @@ def compile_expr(rule: Rule) -> RowCheck:
     The analogue of Filter.tfunc overriding (reference validators.py:143-151)
     — but a Catalyst expression, not per-row Python."""
     must_hold = F.expr(rule.params["sql"])
-    value_col = F.col(rule.column) if rule.column else F.lit(None).cast("string")
+    value_col = F.col(sql_ident(rule.column)) if rule.column else F.lit(None).cast("string")
     pred = ~F.coalesce(must_hold, F.lit(False))
     return RowCheck(rule, pred, value_col, rule.params.get("message", f"expr violated: {rule.params['sql']}"))
 

@@ -1,44 +1,67 @@
-"""Env-parsing pins for the scaling-bench harnesses: empty or partial
-SDV_BENCH_* values must parse (an empty SDV_BENCH_PAIRS crashed
-bench_scaling.py at import until round 4). Subprocess imports only — no
-Spark, no measurement."""
+"""Pins for the bench harness's pure parts (bench.py): level/pair parsing,
+same-round scaling efficiency and window stamping. Imports only — no Spark,
+no measurement."""
 
 from __future__ import annotations
 
-import os
-import subprocess
+import importlib
 import sys
 from pathlib import Path
 
+import pytest
+
 REPO = Path(__file__).resolve().parents[1]
 
-SCRIPTS = [
-    "bench_scaling",
-    "bench_scaling_dedup",
-    "bench_scaling_cc",
-    "bench_scaling_hygiene",
-]
+
+@pytest.fixture(scope="module")
+def bench():
+    sys.path.insert(0, str(REPO))
+    try:
+        return importlib.import_module("bench")
+    finally:
+        sys.path.remove(str(REPO))
 
 
-def _import_ok(module: str, env_overrides: dict) -> None:
-    env = dict(os.environ, **env_overrides)
-    out = subprocess.run(
-        [sys.executable, "-c",
-         f"import {module}; print(len({module}.PAIRS), len({module}.LEVELS))"],
-        capture_output=True, text=True, env=env, cwd=str(REPO), timeout=60,
-    )
-    assert out.returncode == 0, f"{module}: {out.stderr[-500:]}"
+def test_empty_pairs_parse(bench):
+    assert bench.parse_pairs("", (4,)) == ()
+    assert bench.parse_levels("") == ()
+    # partial values: trailing or doubled commas and a half pair
+    assert bench.parse_levels("1,4,") == (1, 4)
+    assert bench.parse_pairs("1-4,,2-", (1, 2, 4)) == ((1, 4),)
 
 
-def test_empty_pairs_parse():
-    for module in SCRIPTS:
-        _import_ok(module, {"SDV_BENCH_PAIRS": "", "SDV_BENCH_LEVELS": "4"})
-
-
-def test_pairs_filtered_to_levels():
+def test_pairs_filtered_to_levels(bench):
     # pairs referencing absent levels are dropped, not an error
-    for module in SCRIPTS:
-        _import_ok(
-            module,
-            {"SDV_BENCH_PAIRS": "1-4,2-8", "SDV_BENCH_LEVELS": "1,4"},
-        )
+    levels = bench.parse_levels("1,4")
+    assert bench.parse_pairs("1-4,2-8", levels) == ((1, 4),)
+    assert bench.parse_pairs("8-32", levels) == ()
+
+
+def test_same_round_efficiency_and_best_runs(bench):
+    levels, pairs = (1, 4), ((1, 4),)
+    # round 0 scores (8/2.5)/4 = 0.8, round 1 (6/2)/4 = 0.75. Pairing each
+    # level's minimum across rounds would mix windows and also give 0.75.
+    rounds = [
+        [{"cores": 1, "sec": 8.0}, {"cores": 4, "sec": 2.5}],
+        [{"cores": 1, "sec": 6.0}, {"cores": 4, "sec": 2.0}],
+    ]
+    effs = bench.same_round_efficiency(rounds, levels, pairs, "sec")
+    assert effs == {(1, 4): pytest.approx(0.8)}
+    assert bench.best_runs(rounds, levels, "sec") == {1: rounds[1][0], 4: rounds[1][1]}
+    # job families key each record by job
+    jobs = [[{"cores": 1, "minhash_sec": 9.0}, {"cores": 4, "minhash_sec": 3.0}]]
+    assert bench.same_round_efficiency(jobs, levels, pairs, "minhash_sec") == {
+        (1, 4): pytest.approx(0.75)
+    }
+
+
+def test_window_stamped_contended_above_drift_ratio(bench):
+    ratio = bench.CONTENTION_RATIO
+    probe = {"procs": 4, "spin_sec": 1.0, "stream_sec": 2.0}
+    calm = {"procs": 4, "spin_sec": 1.0, "stream_sec": 2.0 * ratio}
+    noisy = {"procs": 4, "spin_sec": 1.0, "stream_sec": 2.0 * ratio + 0.01}
+    assert bench.window_stamp(bench.probe_drift(probe, calm)) == "clean"
+    assert bench.window_stamp(bench.probe_drift(probe, noisy)) == "contended"
+    # drift is symmetric: a probe that got faster drifted just as much
+    assert bench.probe_drift(noisy, probe) == bench.probe_drift(probe, noisy)
+    assert bench.window_stamp(bench.probe_drift(probe, probe)) == "clean"

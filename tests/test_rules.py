@@ -303,3 +303,67 @@ def test_levels_audit_coerces_mixed_numeric_types(spark):
     got = {(v["rule_id"], v["value"]) for v in viols}
     # 30.5 undeclared; declared 20 never used; 10.0 matches declared 10
     assert got == {("level.levels_audit", "30.5"), ("level.levels_audit.unused", "20")}
+
+
+def test_row_rules_quote_hostile_column_names(spark):
+    """Row-rule and key columns are referenced by quoted identifier, never
+    parsed as a path: names holding a dot, a backtick and unicode validate
+    to the rows the Column API finds over a plain-named copy."""
+    from pyspark.sql import types as T
+
+    key, s, t, n = "k.é`y", "a.b", "c`d ü", "n.ü`m"
+    schema = T.StructType(
+        [
+            T.StructField(key, T.IntegerType()),
+            T.StructField(s, T.StringType()),
+            T.StructField(t, T.StringType()),
+            T.StructField(n, T.DoubleType()),
+        ]
+    )
+    data = [
+        (1, "ok", "x", 1.0),
+        (2, None, " x", 5.0),
+        (3, "  ", "NA", -1.0),
+        (4, "12", "#N/A", None),
+        (5, "ab-c", "y", 2.5),
+    ]
+    df = spark.createDataFrame(data, schema)
+    rules = [
+        Rule("blank", "not_blank", column=s),
+        Rule("na", "not_na", column=t),
+        Rule("xl", "no_excel_error", column=t),
+        Rule("pad", "not_padded", column=t),
+        Rule("lv", "in_levels", column=t, params={"levels": ["x", "y"]}),
+        Rule("pat", "pattern", column=s, params={"regex": "^[a-z]+$"}),
+        Rule("numstr", "numeric_string", column=s),
+        Rule("cast", "castable", column=s, params={"to": "int"}),
+        Rule("bnd", "bounds", column=n, params={"lo": 0.0, "hi": 3.0}),
+    ]
+    got = {
+        (v["rule_id"], v["entity"], v["column"], v["value"])
+        for v in _viols(spark, data, schema, *rules, key_cols=[key])
+    }
+
+    plain = df.toDF("key", "s", "t", "n")
+    c = {"s": F.col("s"), "t": F.col("t"), "n": F.col("n")}
+    preds = {
+        "blank": ("s", c["s"].isNull() | (F.trim(c["s"]) == "")),
+        "na": ("t", c["t"] == "NA"),
+        "xl": ("t", c["t"] == "#N/A"),
+        "pad": ("t", c["t"] != F.trim(c["t"])),
+        "lv": ("t", ~c["t"].isin("x", "y") | c["t"].isNull()),
+        "pat": ("s", ~c["s"].rlike("^[a-z]+$")),
+        "numstr": ("s", c["s"].try_cast("double").isNotNull()),
+        "cast": ("s", c["s"].isNotNull() & c["s"].try_cast("int").isNull()),
+        "bnd": ("n", (c["n"] < 0.0) | (c["n"] >= 3.0)),
+    }
+    names = {"s": s, "t": t, "n": n}
+    want = {
+        (rid, f"{key}={r['key']}", names[col], r["v"])
+        for rid, (col, pred) in preds.items()
+        for r in plain.where(pred)
+        .select("key", F.col(col).cast("string").alias("v"))
+        .collect()
+    }
+    assert got == want
+    assert {g[0] for g in got} == set(preds)

@@ -3,11 +3,12 @@ behind the 10M-doc MinHash N→4N windows (VERDICT r04 §next 4: "quote
 per-level shuffle-bytes to declare the socket limit definitively").
 
 Given two event-log directories from the SAME job run at two parallelism
-levels (bench_scaling_dedup.py with SDV_BENCH_SPILL=1 leaves them under
-/tmp/sdv_evlog_<cores>_*), align stages by (name, total input volume
-rank) and report, per stage: wall time, summed task time, shuffle
-read/write bytes, spill bytes, and the wall-time scaling efficiency
-between the levels. The stage whose efficiency is far below the others
+levels (``SDV_EVLOG=<dir> python bench.py scaling dedup`` writes one per
+level under <dir>; each level's record in the JSON names its ``app_id``,
+and its directory is the one whose name holds that id), align stages by
+(name, total input volume rank) and report, per stage: wall time, summed
+task time, shuffle read/write bytes, spill bytes, and the wall-time
+scaling efficiency between the levels. The stage whose efficiency is far below the others
 is the scaling bottleneck; if its task-time ratio is ~1 while its wall
 ratio is poor, the residual is scheduler/overlap, not plan shape.
 
