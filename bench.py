@@ -208,16 +208,18 @@ def cached_parquet(spark, path: str, n_rows: int, build):
 
 
 def transcripts_input(spark, n_turns: int) -> str:
-    """Path of the cached n_turns transcripts table (or
-    $SPARK_GRAFT_TRANSCRIPTS). Layout _c64: 64 files hash-partitioned by
+    """Path of the cached n_turns transcripts table, or
+    $SPARK_GRAFT_TRANSCRIPTS as is: a user-given table is read whatever its
+    size and never written. Layout _c64: 64 files hash-partitioned by
     conv_id, conversations sorted contiguously within each — many even files
     AND write-clustering (so RLE compression works); the generator's own
     4-file layout capped the scan at ~8 skewed splits."""
     from safedata_validator_spark.data.synth import transcripts_scaled
 
-    path = os.environ.get("SPARK_GRAFT_TRANSCRIPTS") or cache_path(
-        "transcripts", n_turns, transcripts_scaled
-    )
+    user_path = os.environ.get("SPARK_GRAFT_TRANSCRIPTS")
+    if user_path:
+        return user_path
+    path = cache_path("transcripts", n_turns, transcripts_scaled)
     cached_parquet(
         spark,
         path,

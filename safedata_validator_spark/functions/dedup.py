@@ -16,14 +16,27 @@ Scale notes:
   Jaccard verifies them. False negatives are bounded by the usual
   (1-s^r)^b curve; verification removes false positives.
 * All hashing is xxhash64 with literal seeds — deterministic, JVM-side.
+* The duplicate graph is small by design next to the corpus. Up to
+  ``LOCAL_EDGES`` edges, connected components is a union-find on the
+  driver and ``minhash_lsh_dedup(adaptive_cut=True)`` holds its candidate
+  set as a driver-local table: at that size a distributed stage costs more
+  in per-job overhead than in data. Larger graphs take the distributed
+  paths (star contraction, a persisted candidate set).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
+from safedata_validator_spark.engine.common import local_table
 from safedata_validator_spark.functions.text import fingerprint64, normalize_text
+
+#: Edge count up to which a duplicate graph is closed on the driver: the
+#: ``connected_components`` union-find, and ``minhash_lsh_dedup``'s
+#: driver-local candidate set under ``adaptive_cut``.
+LOCAL_EDGES = 50_000
 
 
 def exact_dedup_groups(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -179,7 +192,7 @@ def ngram_jaccard_pairs(
         if adaptive_cut:
             hot = hot.persist()
             caches = caches + (hot,)
-            cut = hot.limit(1).count() > 0
+            cut = hot.count() > 0
         if cut:
             # persist the cut table: sizes and both self-join sides read it
             # as separate cache hits instead of each re-running the hot cut
@@ -424,9 +437,15 @@ def minhash_lsh_dedup(
     64-min-column aggregation. The only |shingles|-row shuffle left is the
     frequency-cut repack, and ``adaptive_cut=True`` skips even that when the
     hot-list aggregation (which must run anyway) proves the cut is a no-op —
-    the common case on real corpora with a sane ``max_df``. The probe is one
-    tiny driver action, so the default stays False: catalog plan-building
-    must stay job-free (tests/test_plans.py); scale runs opt in."""
+    the common case on real corpora with a sane ``max_df``.
+
+    ``adaptive_cut=True`` means the call may run bounded probes while it
+    builds the plan: the hot-list count above, and one collect of at most
+    ``LOCAL_EDGES + 1`` candidate pairs, which become a driver-local table
+    (``common.local_table``) when they fit, so the verify stage's
+    broadcasts of them launch no job. The default stays False: catalog
+    plan-building must stay job-free (tests/test_plans.py); scale runs opt
+    in."""
     arr = (
         shingle_hash_array(df, id_col, text_col, n)
         .where(F.size("hs") > 0)
@@ -446,7 +465,7 @@ def minhash_lsh_dedup(
         if adaptive_cut:
             hot = hot.persist()
             caches = caches + (hot,)
-            repack = hot.limit(1).count() > 0
+            repack = hot.count() > 0
         if repack:
             # cut + repack: the one remaining |shingles|-row shuffle; light
             # 8-byte rows, collect_list buffers bounded by partition input
@@ -464,6 +483,16 @@ def minhash_lsh_dedup(
     cand = lsh_candidate_pairs(sig, bands, num_perm=num_perm)
     caches = caches + tuple(getattr(cand, "_sdv_cached", ()))
     cand = cand.persist()
+    if adaptive_cut:
+        # the candidate set is bounded by the near-dup volume: when it fits,
+        # hold it as a driver-local table (JVM rows, no Python round trip),
+        # whose broadcasts below launch no job
+        jrows = cand.limit(LOCAL_EDGES + 1)._jdf.collectAsList()
+        if jrows.size() <= LOCAL_EDGES:
+            cand.unpersist()
+            cand = local_table(df.sparkSession, jrows, cand.schema)
+    if cand.is_cached:
+        caches = caches + (cand,)
     # semi-filter down to candidate-pair MEMBERS before any verify work —
     # on the COMPACT packed table (|docs| rows): without this, the verify
     # joins shuffle the full corpus to serve a candidate set many orders
@@ -497,7 +526,7 @@ def minhash_lsh_dedup(
     n_b = F.size("__hs_b").cast("bigint")
     j = j.withColumn("jaccard", n_common / (n_a + n_b - n_common))
     out = j.where(F.col("jaccard") >= threshold).select("id_a", "id_b", "jaccard")
-    return _hand_off_cache(out, caches + (cand,))
+    return _hand_off_cache(out, caches)
 
 
 def connected_components(
@@ -512,21 +541,89 @@ def connected_components(
     CLUSTERS (keep one representative per transitively-connected group —
     A~B, B~C must collapse to one kept doc even when A~C was never emitted).
 
-    Alternating large-star / small-star contraction (Kiveris et al.,
-    "Connected Components in MapReduce and Beyond", SoCC'14) — the
-    MapReduce-native algorithm: converges in O(log^2 n) rounds on ANY graph
-    shape (a chain of near-dups does not cost diameter rounds, unlike naive
-    min-label propagation), and large-star splits high-degree hubs so a
-    viral duplicate cluster never concentrates on one reducer key beyond a
-    single min() aggregation — which partial-aggregates map-side. Each
+    Eager. The normalized edge set (hi > lo, no self-loops, distinct) is
+    persisted and probed with one bounded collect of ``LOCAL_EDGES + 1``
+    rows. When it fits (and the ids are integral or strings), the
+    components come from a union-find on the driver and return as a
+    driver-local table (``common.local_table``): a dedup graph is tiny by
+    design next to the corpus, and at that size the per-round jobs of the
+    distributed path cost far more than the data. ``stats["rounds"]`` is
+    then 0.
+
+    Larger graphs run alternating large-star / small-star contraction
+    (Kiveris et al., "Connected Components in MapReduce and Beyond",
+    SoCC'14) from the persisted edges — the MapReduce-native algorithm:
+    converges in O(log^2 n) rounds on ANY graph shape (a chain of near-dups
+    does not cost diameter rounds, unlike naive min-label propagation), and
+    large-star splits high-degree hubs so a viral duplicate cluster never
+    concentrates on one reducer key beyond a single min() aggregation. Each
     round is two groupBy().min() + two joins on the edge table, whose size
-    only shrinks; lineage is truncated per round with an eager
-    localCheckpoint (the same discipline as engine/hierarchy.build_closure).
+    only shrinks; lineage is truncated per round with a localCheckpoint
+    (the same discipline as engine/hierarchy.build_closure).
 
     Real dedup graphs (dense near-clique clusters) converge in 2-3 rounds;
     ``max_iterations`` is a backstop, not a tuning knob. Output covers every
     node incident to an edge — singletons are the caller's join-back.
     """
+    a, b = F.col(id_a), F.col(id_b)
+    edges = (
+        pairs.select(F.greatest(a, b).alias("hi"), F.least(a, b).alias("lo"))
+        .where(F.col("hi") != F.col("lo"))
+        .distinct()
+        .persist()
+    )
+    id_type = edges.schema["hi"].dataType
+    # integral ids, or strings in the default binary collation: the ids
+    # Python orders exactly as Spark does
+    if isinstance(id_type, T.IntegralType) or id_type == T.StringType():
+        rows = edges.limit(LOCAL_EDGES + 1).collect()
+        if len(rows) <= LOCAL_EDGES:
+            edges.unpersist()
+            if stats is not None:
+                stats["rounds"] = 0
+            return _local_components(pairs.sparkSession, rows, id_type)
+    return _star_contraction(edges, max_iterations, stats)
+
+
+def _local_components(spark, edges, id_type: T.DataType) -> DataFrame:
+    """Union-find over the (hi, lo) edge rows, each root the minimum of its
+    set (strings order by code point in Python, i.e. by UTF-8 bytes as in
+    Spark) → a local (id, component) table. Integral ids cross as longs
+    and are cast back in a projection the optimizer folds into the
+    relation."""
+    parent: dict = {}
+
+    def find(x):
+        root = x
+        while parent[root] != root:
+            root = parent[root]
+        while parent[x] != root:
+            parent[x], x = root, parent[x]
+        return root
+
+    for hi, lo in edges:
+        parent.setdefault(hi, hi)
+        parent.setdefault(lo, lo)
+        r_hi, r_lo = find(hi), find(lo)
+        if r_hi != r_lo:
+            parent[max(r_hi, r_lo)] = min(r_hi, r_lo)
+    carrier = T.StringType() if isinstance(id_type, T.StringType) else T.LongType()
+    out = local_table(
+        spark,
+        [(x, find(x)) for x in parent],
+        T.StructType([T.StructField("id", carrier), T.StructField("component", carrier)]),
+    )
+    if carrier == id_type:
+        return out
+    return out.select(*[F.col(c).cast(id_type).alias(c) for c in ("id", "component")])
+
+
+def _star_contraction(
+    edges: DataFrame, max_iterations: int, stats: dict | None
+) -> DataFrame:
+    """The distributed path of ``connected_components`` over the persisted
+    normalized ``edges`` (hi > lo), which it checkpoints and unpersists
+    before the first round."""
     # localCheckpoint persists at the RDD level — invisible to the SQL
     # CacheManager and to DataFrame.unpersist — so each round must evict
     # the PREVIOUS round's checkpoint explicitly or a long-lived session
@@ -539,35 +636,33 @@ def connected_components(
     # localCheckpoint call — a concurrent persist would be captured into
     # the eviction set. Validation runs drive one contraction at a time,
     # so the assumption holds by construction here.
-    jsc = pairs.sparkSession.sparkContext._jsc
+    spark = edges.sparkSession
+    jsc = spark.sparkContext._jsc
 
     def _live_ids() -> set:
         return set(jsc.getPersistentRDDs().keySet().toArray())
 
     prev_cp_ids: set = set()
 
-    def _ckpt(df: DataFrame, with_state: bool = False):
-        """Checkpoint *df*, evict the previous round's checkpoint, and
-        (optionally) compute the convergence state. With ``with_state`` the
-        checkpoint is LAZY and the convergence aggregate itself is the
-        materializing action, so each contraction round runs exactly ONE
-        Spark job — checkpoint persist and (count, checksum) in the same
-        pass over the data — instead of a materialize-job plus an agg-job.
-        Eviction of the previous round happens only AFTER the new
-        checkpoint is fully materialized, so no recompute is ever needed.
-        """
+    def _ckpt(df: DataFrame):
+        """Checkpoint *df* lazily, compute the convergence state (the
+        materializing action, so each contraction round runs ONE action:
+        checkpoint persist and state in the same pass over the data), then
+        evict the previous round's checkpoint — only after the new one is
+        fully materialized, so no recompute is ever needed."""
         nonlocal prev_cp_ids
         pre = _live_ids()
-        out = df.localCheckpoint(eager=not with_state)
+        out = df.localCheckpoint(eager=False)
         new_ids = _live_ids() - pre
-        state = None
-        if with_state:
-            # decimal(38,0) accumulator: a long sum of 64-bit hashes
-            # overflows ANSI arithmetic after a handful of rows
-            state = out.agg(
+        # (count, order-insensitive checksum); decimal(38,0) accumulator: a
+        # long sum of 64-bit hashes overflows ANSI arithmetic after a
+        # handful of rows
+        state = tuple(
+            out.agg(
                 F.count(F.lit(1)),
                 F.sum(F.xxhash64("hi", "lo").cast("decimal(38,0)")),
             ).first()
+        )
         for rid in prev_cp_ids:
             r = jsc.getPersistentRDDs().get(rid)
             if r is not None:
@@ -575,72 +670,72 @@ def connected_components(
         prev_cp_ids = new_ids
         return out, state
 
-    # normalize: (hi > lo), no self-loops, distinct. The checkpoint is lazy
-    # with the (count, checksum) state as the materializing action, so the
-    # edge count is known for free — it both seeds the convergence state
-    # (an input that is already a fixpoint star set converges one round
-    # earlier) and sizes the loop's shuffles below.
-    a, b = F.col(id_a), F.col(id_b)
-    e, state0 = _ckpt(
-        pairs.select(F.greatest(a, b).alias("hi"), F.least(a, b).alias("lo"))
-        .where(F.col("hi") != F.col("lo"))
-        .distinct(),
-        with_state=True,
+    # Round 1 reads a checkpoint of the edges, not the cache: AQE plans
+    # each of a round's references to a cached relation as its own stage,
+    # and the shuffles above them were not reused (measured at 1M edges,
+    # local[4]: 8 copies of the first shuffle, 44.8 s for round 1 against
+    # 18.5 s from a checkpoint). The edge state seeds convergence (an input
+    # that is already a fixpoint star set converges one round earlier) and
+    # sizes the rounds below.
+    e, prev = _ckpt(edges)
+    edges.unpersist()
+    # Each round's inputs are repartitioned into k partitions on the key
+    # the next aggregate and join group by, so they reuse that partitioning
+    # instead of each shuffling at spark.sql.shuffle.partitions; the
+    # session conf is never touched (other actions may share the session).
+    # k follows the edge volume (~24 B per (hi, lo) row, ≥8 MB per
+    # partition), capped at the session's shuffle partitions: a tiny edge
+    # set at the session default pays dozens of empty-task launches per
+    # round, and an explicit partition count is never coalesced by AQE.
+    k = max(
+        1,
+        min(
+            int(spark.conf.get("spark.sql.shuffle.partitions")),
+            int(prev[0] or 0) * 24 // (8 << 20) + 1,
+        ),
     )
-    # Size the contraction rounds' shuffle partitions from the measured
-    # edge volume (~24 B per (hi, lo) row, ≥8 MB per reduce partition):
-    # the per-round groupBys/joins/distincts execute through the RDD
-    # checkpoint path, which gets NO AQE coalescing, so a tiny edge set
-    # at the session default (cores) pays dozens of empty-task stage
-    # launches per round. Data-derived, never the core count — a 10M-edge
-    # graph keeps the session default. Restored after the loop; the
-    # returned frame plans under the caller's conf.
-    spark = pairs.sparkSession
-    orig_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    k = max(1, min(int(orig_parts), int(state0[0] or 0) * 24 // (8 << 20) + 1))
-    spark.conf.set("spark.sql.shuffle.partitions", str(k))
-    try:
-        prev = (state0[0], state0[1])
-        rounds = 0
-        for _ in range(max_iterations):
-            # large-star: every node u links its LARGER neighbours to
-            # m = min(neighbours(u) ∪ {u}) — hubs fan out, never in
-            sym = e.select(F.col("hi").alias("u"), F.col("lo").alias("v")).unionByName(
-                e.select(F.col("lo").alias("u"), F.col("hi").alias("v"))
+    rounds = 0
+    for _ in range(max_iterations):
+        # large-star: every node u links its LARGER neighbours to
+        # m = min(neighbours(u) ∪ {u}) — hubs fan out, never in
+        sym = (
+            e.select(F.col("hi").alias("u"), F.col("lo").alias("v"))
+            .unionByName(e.select(F.col("lo").alias("u"), F.col("hi").alias("v")))
+            .repartition(k, "u")
+        )
+        mins = sym.groupBy("u").agg(F.min("v").alias("mv"))
+        large = (
+            sym.join(mins, "u")
+            .where(F.col("v") > F.col("u"))
+            .select(
+                F.col("v").alias("hi"),
+                F.least(F.col("u"), F.col("mv")).alias("lo"),
             )
-            mins = sym.groupBy("u").agg(F.min("v").alias("mv"))
-            large = (
-                sym.join(mins, "u")
-                .where(F.col("v") > F.col("u"))
-                .select(
-                    F.col("v").alias("hi"),
-                    F.least(F.col("u"), F.col("mv")).alias("lo"),
+            .repartition(k, "hi")
+            .distinct()
+        )
+        # small-star: on the (hi > lo) edges, u re-points its smaller
+        # neighbours (and itself) at m = min of its smaller neighbourhood
+        mins2 = large.groupBy("hi").agg(F.min("lo").alias("m"))
+        withm = large.join(mins2, "hi")
+        small = (
+            withm.select(F.col("hi"), F.col("m").alias("lo"))
+            .unionByName(
+                withm.where(F.col("lo") != F.col("m")).select(
+                    F.col("lo").alias("hi"), F.col("m").alias("lo")
                 )
-                .distinct()
             )
-            # small-star: on the (hi > lo) edges, u re-points its smaller
-            # neighbours (and itself) at m = min of its smaller neighbourhood
-            mins2 = large.groupBy("hi").agg(F.min("lo").alias("m"))
-            withm = large.join(mins2, "hi")
-            small = (
-                withm.select(F.col("hi"), F.col("m").alias("lo"))
-                .unionByName(
-                    withm.where(F.col("lo") != F.col("m")).select(
-                        F.col("lo").alias("hi"), F.col("m").alias("lo")
-                    )
-                )
-                .distinct()
-            )
-            # converged when the edge set is stable: (count, order-insensitive
-            # checksum). The lazy-checkpoint + state aggregate is ONE job per
-            # round; no driver collect of rows.
-            e, state = _ckpt(small, with_state=True)
-            rounds += 1
-            if (state[0], state[1]) == prev:
-                break
-            prev = (state[0], state[1])
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", orig_parts)
+            .repartition(k, "hi")
+            .distinct()
+        )
+        # converged when the edge set is stable: (count, order-insensitive
+        # checksum). The lazy-checkpoint + state aggregate is ONE action per
+        # round; no driver collect of rows.
+        e, state = _ckpt(small)
+        rounds += 1
+        if state == prev:
+            break
+        prev = state
     if stats is not None:
         stats["rounds"] = rounds
     # fixpoint: every edge points a member directly at its component root

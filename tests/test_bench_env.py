@@ -1,6 +1,6 @@
 """Pins for the bench harness's pure parts (bench.py): level/pair parsing,
-same-round scaling efficiency and window stamping. Imports only — no Spark,
-no measurement."""
+same-round scaling efficiency and window stamping, without Spark; and one
+Spark test of how the input cache treats a user-given table."""
 
 from __future__ import annotations
 
@@ -65,3 +65,14 @@ def test_window_stamped_contended_above_drift_ratio(bench):
     # drift is symmetric: a probe that got faster drifted just as much
     assert bench.probe_drift(noisy, probe) == bench.probe_drift(probe, noisy)
     assert bench.window_stamp(bench.probe_drift(probe, probe)) == "clean"
+
+
+def test_user_transcripts_table_is_read_as_is(bench, spark, tmp_path, monkeypatch):
+    """$SPARK_GRAFT_TRANSCRIPTS names the user's table: it is returned
+    unread and unwritten, whatever its row count."""
+    path = str(tmp_path / "user_table")
+    spark.range(10).write.parquet(path)
+    monkeypatch.setenv("SPARK_GRAFT_TRANSCRIPTS", path)
+    assert bench.transcripts_input(spark, 2000) == path
+    table = spark.read.parquet(path)
+    assert table.count() == 10 and table.columns == ["id"]

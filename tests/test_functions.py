@@ -439,23 +439,31 @@ def test_minhash_intersect_verify_matches_exact_jaccard(spark):
         assert got, f"no pairs found at max_df={max_df}"
 
 
-def test_minhash_adaptive_cut_matches_default(spark, docs):
+def test_minhash_adaptive_cut_matches_default(spark, docs, monkeypatch):
     """adaptive_cut=True (scale path: skip the repack shuffle when the hot
     list is provably empty) must return exactly the default path's pairs —
     both when the cut is a no-op (high max_df) and when it bites (max_df=1
-    makes every shared shingle hot, so only the cut survivors pair)."""
+    makes every shared shingle hot, so only the cut survivors pair). It
+    holds a candidate set of up to LOCAL_EDGES pairs driver-locally and
+    persists a larger one (LOCAL_EDGES = 0); both give the same pairs."""
     for max_df in (100, 1):
         base = dd.minhash_lsh_dedup(
             docs, "doc_id", "text", threshold=0.1, max_df=max_df
         )
-        adaptive = dd.minhash_lsh_dedup(
-            docs, "doc_id", "text", threshold=0.1, max_df=max_df, adaptive_cut=True
-        )
         got_b = sorted(map(tuple, base.collect()))
-        got_a = sorted(map(tuple, adaptive.collect()))
         dd.release(base)
-        dd.release(adaptive)
-        assert got_a == got_b, f"max_df={max_df}"
+        for cap in (dd.LOCAL_EDGES, 0):
+            monkeypatch.setattr(dd, "LOCAL_EDGES", cap)
+            adaptive = dd.minhash_lsh_dedup(
+                docs, "doc_id", "text", threshold=0.1, max_df=max_df, adaptive_cut=True
+            )
+            persisted = [c for c in adaptive._sdv_cached if c.columns == ["id_a", "id_b"]]
+            # verified pairs are candidates, so with pairs found the
+            # candidate set exceeds LOCAL_EDGES = 0 (an empty one fits)
+            assert bool(persisted) == (cap == 0 and bool(got_b)), (max_df, cap)
+            got_a = sorted(map(tuple, adaptive.collect()))
+            dd.release(adaptive)
+            assert got_a == got_b, f"max_df={max_df}, LOCAL_EDGES={cap}"
 
 
 def test_minhash_persists_compact_arrays_only(spark, docs):

@@ -1,4 +1,5 @@
-"""``tools/job_decomp.py`` flags the stages that run Python-worker tasks."""
+"""``tools/job_decomp.py`` flags the stages that run Python-worker tasks and
+groups unlabelled jobs by SQL execution."""
 
 from __future__ import annotations
 
@@ -56,3 +57,61 @@ def test_python_rdd_stages_are_flagged_and_summed(tmp_path, capsys, monkeypatch)
     out = capsys.readouterr().out
     assert "s0 [py]" in out and "s1 [py]" not in out
     assert "PythonRDD stages: 1 of 2, executor run time 2.00s of 2.25s" in out
+
+
+def _job(jid: int, sid: int, props: dict) -> list[dict]:
+    return [
+        {
+            "Event": "SparkListenerJobStart",
+            "Job ID": jid,
+            "Submission Time": 1000,
+            "Stage Infos": [{"Stage ID": sid}],
+            "Properties": props,
+        },
+        _stage(sid, ["MapPartitionsRDD"]),
+        {"Event": "SparkListenerJobEnd", "Job ID": jid, "Completion Time": 2000},
+    ]
+
+
+def _plan(name: str, *children: dict) -> dict:
+    return {"nodeName": name, "simpleString": name, "children": list(children)}
+
+
+def test_unlabelled_jobs_group_by_sql_execution(tmp_path, capsys, monkeypatch):
+    sql = "org.apache.spark.sql.execution.ui."
+    events = [
+        {
+            "Event": sql + "SparkListenerSQLExecutionStart",
+            "executionId": 7,
+            "description": "collect at dedup.py:580",
+            "sparkPlanInfo": _plan("AdaptiveSparkPlan", _plan("HashAggregate")),
+        },
+        {
+            "Event": sql + "SparkListenerSQLAdaptiveExecutionUpdate",
+            "executionId": 7,
+            "sparkPlanInfo": _plan(
+                "AdaptiveSparkPlan",
+                _plan("ResultQueryStage", _plan("WholeStageCodegen (2)", _plan("CollectLimit"))),
+            ),
+        },
+        {
+            "Event": sql + "SparkListenerSQLExecutionStart",
+            "executionId": 8,
+            "description": "count at run.py:10",
+            "sparkPlanInfo": _plan("HashAggregate"),
+        },
+        *_job(0, 0, {"spark.sql.execution.id": "7"}),
+        *_job(1, 1, {"spark.sql.execution.id": "7"}),
+        *_job(2, 2, {"spark.sql.execution.id": "8"}),
+        *_job(3, 3, {}),
+        *_job(4, 4, {"spark.job.description": "verdicts", "spark.sql.execution.id": "8"}),
+    ]
+    log = tmp_path / "events"
+    log.write_text("\n".join(json.dumps(e) for e in events) + "\n")
+    monkeypatch.setattr(sys, "argv", ["job_decomp.py", str(log)])
+    assert job_decomp.main() == 0
+    out = capsys.readouterr().out
+    assert "== (none) sql 7: collect at dedup.py:580 [CollectLimit]  jobs=2" in out
+    assert "== (none) sql 8: count at run.py:10 [HashAggregate]  jobs=1" in out
+    assert "== (none)  jobs=1" in out
+    assert "== verdicts  jobs=1" in out

@@ -128,3 +128,39 @@ def test_hash_prefix_chunked_path_matches_single_window(spark, monkeypatch):
     chunked = ordering.hash_prefix(spark, n)
     assert "ExistingRDD" not in _physical(chunked)
     assert chunked.orderBy("__mx").collect() == small
+
+
+def test_literal_rows_cost_constant_gateway_calls(spark):
+    """Python rows cross the gateway in a constant number of py4j commands:
+    building 10 rows and 10,000 rows sends the same count (object release
+    commands, which py4j's finalizer thread sends, are not counted)."""
+    import threading
+
+    from py4j import protocol
+
+    client = spark.sparkContext._gateway._gateway_client
+    send = client.send_command
+    me = threading.get_ident()
+    schema = "s string, n long, x double, b boolean"
+
+    def calls_for(n: int) -> int:
+        rows = [(f"r{i}\n,'\"", i - 2**62, i / 3, i % 2 == 0) for i in range(n)]
+        sent = []
+
+        def counting(command, *args, **kwargs):
+            if threading.get_ident() == me and not command.startswith(
+                protocol.MEMORY_COMMAND_NAME
+            ):
+                sent.append(command)
+            return send(command, *args, **kwargs)
+
+        client.send_command = counting
+        try:
+            local = local_table(spark, rows, schema)
+        finally:
+            del client.send_command
+        assert local.count() == n
+        assert local.orderBy("n").limit(2).collect() == [tuple(r) for r in rows[:2]]
+        return len(sent)
+
+    assert calls_for(10) == calls_for(10_000)

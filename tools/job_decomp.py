@@ -1,5 +1,9 @@
 """Per-job / per-stage decomposition of a Spark event-log directory, grouped
-by job description (``setJobDescription``). Companion to stage_scaling.py for
+by job description (``setJobDescription``). Jobs without a description are
+grouped by their SQL execution (``spark.sql.execution.id``), each headed by
+the execution's description (its call site unless one was set) and the root
+operator of its final physical plan; only jobs outside any SQL execution
+stay under "(none)". Companion to stage_scaling.py for
 single-run analysis: which jobs a query runs, their wall times, and the
 slowest stages inside each. Stages whose RDD lineage contains a
 ``PythonRDD`` run Python-worker tasks (e.g. any read of a table built by
@@ -48,19 +52,45 @@ def event_files(root: str) -> list[str]:
     return out
 
 
+#: plan nodes that wrap the operator a query actually ends in
+_WRAPPERS = ("AdaptiveSparkPlan", "ResultQueryStage", "WholeStageCodegen", "InputAdapter")
+
+
+def root_operator(plan: dict) -> str:
+    """Name of the first plan node below the AQE / codegen wrappers."""
+    while plan.get("nodeName", "").startswith(_WRAPPERS) and plan.get("children"):
+        plan = plan["children"][0]
+    return plan.get("nodeName", "?")
+
+
 def load(root: str):
     jobs: dict[int, dict] = {}
     stages: dict[int, dict] = {}
     task_time: dict[int, float] = defaultdict(float)
+    executions: dict[int, dict] = {}
     for path in event_files(root):
         with open(path) as fh:
             for line in fh:
-                if '"SparkListenerJobStart"' in line:
+                if '.SparkListenerSQLExecutionStart"' in line:
                     ev = json.loads(line)
+                    executions[ev["executionId"]] = {
+                        "desc": ev.get("description", ""),
+                        "root": root_operator(ev.get("sparkPlanInfo") or {}),
+                    }
+                elif '.SparkListenerSQLAdaptiveExecutionUpdate"' in line:
+                    # the final adaptive plan supersedes the initial one
+                    ev = json.loads(line)
+                    if ev["executionId"] in executions:
+                        executions[ev["executionId"]]["root"] = root_operator(
+                            ev.get("sparkPlanInfo") or {}
+                        )
+                elif '"SparkListenerJobStart"' in line:
+                    ev = json.loads(line)
+                    props = ev.get("Properties") or {}
+                    eid = props.get("spark.sql.execution.id")
                     jobs[ev["Job ID"]] = {
-                        "desc": (ev.get("Properties") or {}).get(
-                            "spark.job.description", ""
-                        ),
+                        "desc": props.get("spark.job.description", ""),
+                        "execution": None if eid is None else int(eid),
                         "start": ev["Submission Time"],
                         "end": None,
                         "stages": [s["Stage ID"] for s in ev["Stage Infos"]],
@@ -89,19 +119,29 @@ def load(root: str):
                     ev = json.loads(line)
                     m = ev.get("Task Metrics") or {}
                     task_time[ev["Stage ID"]] += m.get("Executor Run Time", 0) / 1000.0
-    return jobs, stages, task_time
+    return jobs, stages, task_time, executions
+
+
+def group_name(job: dict, executions: dict[int, dict]) -> str:
+    if job["desc"]:
+        return job["desc"]
+    eid = job["execution"]
+    if eid is None:
+        return "(none)"
+    ex = executions.get(eid, {})
+    return f"(none) sql {eid}: {ex.get('desc', '?')} [{ex.get('root', '?')}]"
 
 
 def main() -> int:
     root = sys.argv[1]
     flt = sys.argv[2] if len(sys.argv) > 2 else None
-    jobs, stages, task_time = load(root)
+    jobs, stages, task_time, executions = load(root)
     bydesc: dict[str, list] = defaultdict(list)
     seen: set[int] = set()
     for jid, j in sorted(jobs.items()):
         if j["end"] is None:
             continue
-        bydesc[j["desc"] or "(none)"].append((jid, j))
+        bydesc[group_name(j, executions)].append((jid, j))
     for desc, js in bydesc.items():
         if flt and flt not in desc:
             continue
