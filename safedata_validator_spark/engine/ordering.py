@@ -334,51 +334,21 @@ def sequential_examples(
     return as_violations(bad_rows, example_rule, F.col("__scope"), entity, F.col(order), msg, column=order)
 
 
-def adjacent_pairs_join(
-    df: DataFrame, group: str, order: str, values: list[str], carry: list[str] | None = None
-) -> DataFrame:
-    """Adjacency via a self equi-join on (group, order-1): row t is matched
-    with row t-1. Requires a DENSE integer ``order`` (1..n per group — which
-    the sequential rule owns and asserts); rows whose predecessor index is
-    absent keep NULL ``__prev_*`` columns.
-
-    Scale shape: ONE hash-partitioned join keyed on (group, order) — no sort,
-    no window, and NO hot-key skew at all, because the join key includes the
-    order column, so a 10^8-turn conversation spreads uniformly over all
-    partitions. This is strictly better than windowing whenever density
-    holds; the window/block method (adjacent_pairs) remains for arbitrary
-    orders."""
-    carry = carry or []
-    lhs = df.select(group, order, *values, *carry)
-    rhs = df.select(
-        F.col(group),
-        (F.col(order) + 1).alias(order),
-        F.col(order).alias(f"__prev_{order}"),
-        *[F.col(v).alias(f"__prev_{v}") for v in values],
-    )
-    # No join hint: sort-merge spills safely at any partition size. A
-    # SHUFFLE_HASH hint is ~2× faster when partitions fit in memory but
-    # builds a NON-SPILLABLE per-task hash map — measured to OOM once
-    # partitions exceed a few million rows — so the safe default wins;
-    # partition sizing (shuffle.partitions / AQE) recovers the throughput.
-    return lhs.join(rhs, on=[group, order], how="left")
-
-
 def rule_pair_key(rule: Rule, ruleset) -> tuple:
-    """Fusion key: adjacency rules sharing (group, order, method, block_size)
-    are evaluated from ONE shared pairs plan (the validator groups rules by
+    """Fusion key: adjacency rules sharing (group, order, block_size) are
+    evaluated from ONE shared pairs plan (the validator groups rules by
     this key; identical subplans collapse via ReuseExchange).
 
-    Default adjacency is the blocked-window method: ONE full-data shuffle
-    (vs two for the self-join), measured 1.3-2.1× faster at 40M turns, and
-    it is the bounded-partition salting strategy the north rule mandates for
-    hot conversations. ``adjacency: join`` remains available where the dense
-    1..n order makes the equi-join preferable (e.g. pre-bucketed tables
-    where the join becomes shuffle-free)."""
+    Adjacency is the blocked-window method (``adjacent_pairs``): ONE
+    full-data shuffle (vs two for a self-join on ``order - 1``, measured
+    1.3-2.1× slower at 40M turns), and it is the bounded-partition salting
+    strategy the north rule mandates for hot conversations. A self-join
+    cannot see transitions between duplicate-key rows, so it is not
+    offered: ``registry.lint_ruleset`` rejects a rule that still carries
+    the retired ``adjacency`` parameter."""
     return (
         rule.params.get("group", ruleset.key_cols[0]),
         rule.params.get("order", "turn_idx"),
-        rule.params.get("adjacency", "window"),
         int(rule.params.get("block_size", DEFAULT_BLOCK_SIZE)),
     )
 
@@ -390,12 +360,9 @@ def build_pairs(
     order: str,
     value_cols: list[str],
     block_size: int,
-    method: str = "join",
 ) -> DataFrame:
     scope_col = F.expr(ruleset.scope).alias("__scope")
     base = df.select(group, order, *value_cols, scope_col)
-    if method == "join":
-        return adjacent_pairs_join(base, group, order, value_cols, carry=["__scope"])
     return adjacent_pairs(base, group, order, value_cols, block_size, carry=["__scope"])
 
 
@@ -403,7 +370,7 @@ def _monotone_check(rule: Rule, group: str, order: str):
     """(violation predicate, value, message) columns over a pairs stream:
     the column must be non-decreasing (or, with direction 'increasing',
     strictly increasing) in ``order`` within ``group``. params: group,
-    order, direction, adjacency (join|window), block_size."""
+    order, direction, block_size."""
     col = rule.column
     strict = rule.params.get("direction", "non_decreasing") == "increasing"
     prev = F.col(f"__prev_{col}")
@@ -420,12 +387,12 @@ def _grammar_check(rule: Rule, group: str, order: str):
     each adjacent (prev, cur) pair within a conversation must be in the
     declared transition set; the first turn's role must be in
     ``allowed_start``. params: group, order, transitions: list[[from,to]],
-    allowed_start: list[str], start (first index, default 1), adjacency,
-    block_size. Compiled to an ``isin`` over 'from→to' literals (transition
-    alphabets are tiny), staying fully inside codegen — no join for the
-    membership test.
+    allowed_start: list[str], start (first index, default 1), block_size.
+    Compiled to an ``isin`` over 'from→to' literals (transition alphabets
+    are tiny), staying fully inside codegen — no join for the membership
+    test.
 
-    Semantics (blocked-window adjacency, the default): the grammar judges the
+    Semantics (blocked-window adjacency): the grammar judges the
     sequence AS OBSERVED — each row's predecessor is the physically previous
     row in ``order``-sorted position, so an illegal edge across an index gap
     (or between duplicate-index rows) IS flagged, exactly what a sequential
@@ -462,7 +429,7 @@ def fused_pairs_violations(
     """ALL adjacency rules sharing one pairs plan evaluated in ONE projection
     — each rule contributes a conditional violation struct, non-null structs
     explode out (the same fusion shape as the validator's row-rule scan).
-    With a single consumer the pairs self-join executes exactly once per run;
+    With a single consumer the pairs plan executes exactly once per run;
     two separate consumers would defeat exchange reuse the moment column
     pruning differentiates their subplans."""
     structs = []

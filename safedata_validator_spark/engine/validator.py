@@ -176,15 +176,15 @@ class ValidationEngine:
 
         # -- adjacency fusion ------------------------------------------------
         # ALL adjacency rules sharing (group, order) evaluate in ONE projection
-        # over ONE pairs plan — a single consumer guarantees the self-join runs
+        # over ONE pairs plan — a single consumer guarantees the pairs plan runs
         # once (separate consumers defeat ReuseExchange under column pruning)
         adj = [r for r in plan_rules if r.rule_type in ("monotone", "transition_grammar")]
         by_key: dict[tuple, list[Rule]] = defaultdict(list)
         for r in adj:
             by_key[ordering.rule_pair_key(r, ruleset)].append(r)
-        for (group, order, method, block_size), rules in by_key.items():
+        for (group, order, block_size), rules in by_key.items():
             values = sorted({r.column for r in rules})
-            pairs = ordering.build_pairs(df, ruleset, group, order, values, block_size, method)
+            pairs = ordering.build_pairs(df, ruleset, group, order, values, block_size)
             parts.append(ordering.fused_pairs_violations(pairs, rules, group, order))
             handled.update(id(r) for r in rules)
 

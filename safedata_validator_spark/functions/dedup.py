@@ -30,7 +30,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from safedata_validator_spark.engine.common import local_table
+from safedata_validator_spark.engine.common import local_table, sql_ident
 from safedata_validator_spark.functions.text import fingerprint64, normalize_text
 
 #: Edge count up to which a duplicate graph is closed on the driver: the
@@ -43,7 +43,10 @@ def exact_dedup_groups(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """Group exact duplicates (after normalisation) →
     (fingerprint, keep_id, n_dups, member_ids). ``keep_id`` = min id."""
     return (
-        df.select(F.col(id_col).alias("id"), fingerprint64(F.col(text_col)).alias("fp"))
+        df.select(
+            F.col(sql_ident(id_col)).alias("id"),
+            fingerprint64(F.col(sql_ident(text_col))).alias("fp"),
+        )
         .groupBy("fp")
         .agg(
             F.min("id").alias("keep_id"),
@@ -56,7 +59,7 @@ def exact_dedup_groups(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
 
 def word_shingles(df: DataFrame, id_col: str, text_col: str, n: int = 3) -> DataFrame:
     """Distinct word n-gram shingles per document → (id, shingle)."""
-    toks = F.split(normalize_text(F.col(text_col)), " ")
+    toks = F.split(normalize_text(F.col(sql_ident(text_col))), " ")
     # n shifted slices zipped — O(n) array ops per row; a per-index slice
     # inside transform() would be O(len²) interpreted work per document
     length = F.size(toks) - (n - 1)
@@ -72,7 +75,7 @@ def word_shingles(df: DataFrame, id_col: str, text_col: str, n: int = 3) -> Data
     # dominated the 1M-doc pipeline)
     return (
         df.select(
-            F.col(id_col).alias("id"),
+            F.col(sql_ident(id_col)).alias("id"),
             F.explode(F.array_distinct(sh)).alias("shingle"),
         )
         .where(F.col("shingle") != "")
@@ -262,7 +265,7 @@ def shingle_hash_array(
     spilled the signature aggregation — the measured cause of the 10M-doc
     1→4 scaling miss (BENCH/dedup_window_10M.json). Exploded views derive
     from this cache row-locally wherever a consumer needs rows."""
-    toks = F.split(normalize_text(F.col(text_col)), " ")
+    toks = F.split(normalize_text(F.col(sql_ident(text_col))), " ")
     length = F.size(toks) - (n - 1)
     shifted = [F.slice(toks, i + 1, F.greatest(length, F.lit(0))) for i in range(n)]
     zipped = F.arrays_zip(*shifted)
@@ -273,7 +276,7 @@ def shingle_hash_array(
         F.filter(F.array_distinct(sh), lambda x: x != ""),
         lambda s: F.xxhash64(s),
     )
-    return df.select(F.col(id_col).alias("id"), hs.alias("hs"))
+    return df.select(F.col(sql_ident(id_col)).alias("id"), hs.alias("hs"))
 
 
 def signatures_from_hash_arrays(packed: DataFrame, num_perm: int = 64) -> DataFrame:
@@ -796,8 +799,8 @@ def simhash64(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     materialized per-permutation arrays — codegen was never available."""
     toks = (
         df.select(
-            F.col(id_col).alias("id"),
-            F.explode(F.split(normalize_text(F.col(text_col)), " ")).alias("tok"),
+            F.col(sql_ident(id_col)).alias("id"),
+            F.explode(F.split(normalize_text(F.col(sql_ident(text_col))), " ")).alias("tok"),
         )
         .where(F.col("tok") != "")
         .select("id", F.xxhash64("tok").alias("h"))

@@ -1,8 +1,5 @@
-"""Pure-stdlib GIF codec — the built-in VIDEO-frame branch of the
-multimodal operators: animated GIF is the one multi-frame container that
-is fully decodable on stdlib+numpy (LZW is a dictionary coder — no
-entropy tables, no DCT), so ``multimodal.sample_frames`` can seek REAL
-frames in this container instead of being environment-gated on
+"""Pure-stdlib GIF codec: animated GIF is fully decodable on stdlib+numpy
+(LZW is a dictionary coder — no entropy tables, no DCT), without
 ffmpeg/imageio.
 
 Decoder: GIF87a/GIF89a header, logical screen descriptor, global + local
@@ -18,15 +15,13 @@ full-canvas RGB image a video player would show.
 LZW compression — not the fixed-code shortcut — so the decoder's table
 growth path is exercised).
 
-Scale note: runs inside Arrow-batched ``mapInPandas`` stages; LZW decode
-is a per-payload Python loop over codes (GIF payloads in training corpora
-are small previews/clips), and all compositing is vectorized numpy.  A
-100-TB video corpus would swap ffmpeg/DALI into the same one-function
-seam (``multimodal.decode_frames``); the Spark-side plan is already the
-production shape.
+LZW decode is a per-payload Python loop over codes, and all compositing
+is vectorized numpy.
 
-No reference parity: the reference validator has no media handling — this
-is the training-data-pipeline extension surface.
+No package code path calls this module: the Spark media stages and
+the media catalog gates that used it are gone, and media is out of scope
+for the validator (ROADMAP direction 4). It stays, with its tests, until
+its own deletion.
 """
 
 from __future__ import annotations

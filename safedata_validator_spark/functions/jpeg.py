@@ -14,14 +14,14 @@ successive approximation, EOB runs, AC/DC refinement). Arithmetic coding,
 lossless modes, and 12-bit precision are out of scope and raise
 ``JPEGError`` with the reason.
 
-Like ``functions.png``, this exists so the multimodal pipeline decodes FOR
-REAL everywhere: pillow (when installed) is a parity oracle, not a
-dependency. Pure-Python bit-twiddling runs per 8x8 block, not per pixel;
-the numpy IDCT/color steps are vectorized over whole planes.
+Pillow (when installed) is a parity oracle, not a dependency. Pure-Python
+bit-twiddling runs per 8x8 block, not per pixel; the numpy IDCT/color
+steps are vectorized over whole planes.
 
-Reference parity note: the reference repo contains no media handling at
-all — this is engine-addition surface for the LLM-data pipeline (see
-SURVEY.md §2.10 multimodal).
+No package code path calls this module: the Spark media stages and
+the media catalog gates that used it are gone, and media is out of scope
+for the validator (ROADMAP direction 4). It stays, with its tests, until
+its own deletion.
 """
 
 from __future__ import annotations

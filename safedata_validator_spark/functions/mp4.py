@@ -1,5 +1,4 @@
-"""Pure-stdlib MP4 / ISO-BMFF container parser — the MJPEG-in-MP4 video
-branch for ``multimodal.decode_frames``.
+"""Pure-stdlib MP4 / ISO-BMFF container parser for MJPEG-in-MP4 video.
 
 MP4 (ISO/IEC 14496-12 "ISO base media file format") is a box tree, not a
 bitstream: every structural element is ``struct``-parseable, and the
@@ -7,9 +6,8 @@ sample tables (``stsd``/``stts``/``stsc``/``stsz``/``stco``) fully
 describe where each video sample lives in the file and when it plays.
 For tracks whose sample entry is MJPEG (fourcc ``jpeg``/``mjpa``), each
 sample is a standalone baseline JPEG stream that ``functions.jpeg``
-already decodes — so, exactly like the RIFF/AVI path (``functions.avi``),
-this container decodes for REAL in any environment.  H.264/H.265/VP9
-tracks still need ffmpeg and raise through the same one-function seam.
+already decodes — so this container decodes in any environment.
+H.264/H.265/VP9 tracks raise ``MP4Error``.
 
 Box layout handled (single video track; 32-bit and 64-bit box sizes,
 ``co64`` chunk offsets, multi-entry ``stts``/``stsc``):
@@ -19,14 +17,14 @@ Box layout handled (single video track; 32-bit and 64-bit box sizes,
 
 Frame timing comes from ``stts`` decode deltas over the ``mdhd`` media
 timescale; timestamps are ``cum_delta * 1000 // timescale`` ms — integer
-arithmetic, so container parsing is exactly reproducible by an arithmetic
-oracle (the ``mp4_frames_audit`` catalog query).  ``encode_mp4`` writes
+arithmetic, so container parsing is exactly reproducible.  ``encode_mp4`` writes
 the same minimal layout (constant-delta stts, one chunk, mdat-before-moov)
 for fixtures and round-trip tests.
 
-Reference parity note: the reference validator (safedata_validator) has no
-media handling at all — this module belongs to the engine's multimodal
-extension surface (SURVEY.md §2.10), not to reference parity.
+No package code path calls this module: the Spark media stages and
+the media catalog gates that used it are gone, and media is out of scope
+for the validator (ROADMAP direction 4). It stays, with its tests, until
+its own deletion.
 """
 
 from __future__ import annotations
@@ -262,8 +260,8 @@ def encode_mp4(
 ) -> bytes:
     """Write a minimal single-track MJPEG MP4 around pre-encoded JPEG sample
     payloads (fixtures / round-trip tests): media timescale = fps with
-    per-sample delta 1 (so t_ms = i * 1000 // fps, matching ``encode_avi``'s
-    integer timing), mdat before moov.  ``samples_per_chunk=None`` puts all
+    per-sample delta 1 (so t_ms = i * 1000 // fps, integer
+    timing), mdat before moov.  ``samples_per_chunk=None`` puts all
     samples in one chunk; an integer splits them into chunks of that many
     samples (ragged last chunk → a second stsc entry), exercising the full
     stsc/stco chunk map a real muxer produces."""

@@ -1,27 +1,24 @@
-"""Pure-stdlib PNG codec — the built-in image branch for
-``multimodal.decode_image`` when pillow is absent.
+"""Pure-stdlib PNG codec.
 
 PNG is stdlib-decodable: chunk framing + CRC32 and DEFLATE both live in
 ``zlib``, and scanline unfiltering (the only image math) vectorizes in
-numpy.  This makes the *real*-payload path of the multimodal operators
-executable in this container instead of environment-gated: any
-non-interlaced PNG (greyscale, grey+alpha, RGB, RGBA, palette, every
-legal bit depth — 1/2/4/8/16) decodes to the HxWxC array pillow would
-produce (uint16 for 16-bit, uint8 otherwise).  When pillow
-IS importable, ``decode_image`` still prefers it (full format coverage —
-JPEG etc.); the parity test in tests/test_env_gated.py pins the two
-branches to agree on PNG the moment the library is present.
+numpy.  Any non-interlaced PNG (greyscale, grey+alpha, RGB, RGBA, palette,
+every legal bit depth — 1/2/4/8/16) decodes to the HxWxC array pillow
+would produce (uint16 for 16-bit, uint8 otherwise); the parity test in
+tests/test_env_gated.py pins the two to agree the moment pillow is present.
 
 ``encode_png`` exists for fixtures and round-trip tests: it writes any of
 the five scanline filter types, so the decoder's Sub/Up/Average/Paeth
 reconstruction paths are exercised, not just filter 0.
 
-Scale note: this runs inside Arrow-batched ``mapInPandas`` stages; per-row
-cost is one zlib inflate + one numpy pass per scanline.  Sequential
-filters (Sub/Average/Paeth) reconstruct left-to-right with a per-pixel
-inner loop over width — fine for the thumbnail/feature payloads these
-operators handle; a 100-TB image corpus would swap pillow-SIMD/DALI into
-the same one-function seam.
+Cost: one zlib inflate + one numpy pass per scanline.  Sequential filters
+(Sub/Average/Paeth) reconstruct left-to-right with a per-pixel inner loop
+over width.
+
+No package code path calls this module: the Spark media stages and
+the media catalog gates that used it are gone, and media is out of scope
+for the validator (ROADMAP direction 4). It stays, with its tests, until
+its own deletion.
 """
 
 from __future__ import annotations

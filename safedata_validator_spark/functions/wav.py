@@ -1,7 +1,5 @@
-"""Pure-stdlib WAV/PCM codec — the built-in AUDIO branch of the multimodal
-operators, closing the same environment gap ``functions.png`` /
-``functions.jpeg`` closed for images: audio payloads decode for REAL in
-this container instead of being environment-gated on torchaudio/soundfile.
+"""Pure-stdlib WAV/PCM codec: audio payloads decode without
+torchaudio/soundfile.
 
 WAV (RIFF/WAVE, the canonical uncompressed interchange format) is
 stdlib-decodable: the container is plain ``struct`` framing and the sample
@@ -17,16 +15,12 @@ write the compressed variants for fixtures and round-trip tests.
 
 The feature math (``audio_features``) is vectorized numpy over the whole
 clip: RMS / peak on the [-1, 1]-normalized signal, zero-crossing count on
-channel 0, spectral centroid via one rfft.  It runs inside Arrow-batched
-``mapInPandas`` stages (see ``multimodal.extract_audio_features``); per-row
-cost is one memcpy-shaped decode + a few numpy passes.  A 100-TB audio
-corpus would swap a SIMD resampler/codec into the same one-function seam —
-the Spark-side plan (partition-preserving mapInPandas, typed schema) is
-already the production shape.
+channel 0, spectral centroid via one rfft.
 
-Reference parity note: the reference validator (safedata_validator) has no
-audio handling at all — this module is part of the training-data-pipeline
-extension surface, not a port.
+No package code path calls this module: the Spark media stages and
+the media catalog gates that used it are gone, and media is out of scope
+for the validator (ROADMAP direction 4). It stays, with its tests, until
+its own deletion.
 """
 
 from __future__ import annotations

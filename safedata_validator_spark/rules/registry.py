@@ -75,6 +75,14 @@ def lint_ruleset(ruleset: RuleSet, df_columns: list[str]) -> list[str]:
             problems.append(f"{r.rule_id}: unknown rule_type {r.rule_type!r}")
         if r.column is not None and r.column not in df_columns:
             problems.append(f"{r.rule_id}: column {r.column!r} not in table columns")
+        if "adjacency" in r.params:
+            # the self-join method was retired: it cannot see transitions
+            # between duplicate-key rows, so honouring the parameter would
+            # change semantics and ignoring it would do so silently
+            problems.append(
+                f"{r.rule_id}: 'adjacency' is no longer a rule parameter "
+                "(adjacency is always the blocked window)"
+            )
     for k in ruleset.key_cols:
         if k not in df_columns:
             problems.append(f"key column {k!r} not in table columns")

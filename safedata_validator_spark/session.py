@@ -35,7 +35,7 @@ def warm_python_workers(spark: SparkSession) -> None:
         from pyspark.sql import functions as F
 
         def _warm_fn(s):
-            import numpy as np  # preload into the worker: ANN/media UDFs use it
+            import numpy as np  # preload into the worker: the ANN and geo UDFs use it
 
             return s + np.int64(0)
 

@@ -1,9 +1,9 @@
-"""Unit batteries for the two built-in backends added in round 3 —
-pure-numpy OGC geometry validity (functions/geo_validity.py) and the
-pure-stdlib PNG codec (functions/png.py). No Spark session: these pin the
-kernels the pandas-UDF / mapInPandas stages wrap. Reference analogue:
-locations.py:353-364 (shapely is_valid / has_z) for geometry; the image
-codec is the engine-addition multimodal path (SURVEY §2.10)."""
+"""Unit batteries for the built-in pure-Python backends: pure-numpy OGC
+geometry validity (functions/geo_validity.py) and the stdlib codecs
+(functions/png.py, jpeg.py, wav.py, gif.py, mp4.py). No Spark session.
+Reference analogue: locations.py:353-364 (shapely is_valid / has_z) for
+geometry; the codecs have none (media is out of scope, ROADMAP
+direction 4)."""
 
 from __future__ import annotations
 
@@ -346,18 +346,6 @@ def test_progressive_jpeg_compresses_comparably():
     assert p < b * 1.15, (p, b)
 
 
-def test_decode_image_uses_builtin_jpeg_without_pillow():
-    # decode_image must route JPEG payloads through the built-in codec when
-    # pillow is absent (it IS absent in this container; when present this
-    # still passes — PIL decodes the same baseline stream)
-    from safedata_validator_spark.functions.multimodal import decode_image
-
-    img = _test_image(16, 32)
-    out = decode_image(encode_jpeg(img, quality=95))
-    assert out.shape == (16, 32, 3)
-    assert np.abs(out.astype(int) - img.astype(int)).mean() < 8
-
-
 # --------------------------------------------------------------------------
 # WAV codec (functions/wav.py) — the built-in audio branch (round 4)
 # --------------------------------------------------------------------------
@@ -581,102 +569,6 @@ def test_gif_rejects_malformed():
         decode_gif(good[:12])  # truncated header
 
 
-# ---------------------------------------------------------------------- AVI
-
-
-def _mk_avi(values, w=9, h=6, fps=8, layout="444"):
-    from safedata_validator_spark.functions.avi import encode_avi
-    from safedata_validator_spark.functions.jpeg import encode_jpeg
-
-    jpegs = []
-    for v in values:
-        if layout == "gray":
-            jpegs.append(encode_jpeg(np.full((h, w), v, np.uint8), quality=100))
-        else:
-            jpegs.append(
-                encode_jpeg(np.full((h, w, 3), v, np.uint8), quality=100,
-                            subsample=layout)
-            )
-    return encode_avi(jpegs, width=w, height=h, fps=fps)
-
-
-@pytest.mark.parametrize("layout", ["gray", "444", "420"])
-def test_avi_mjpeg_round_trip_exact(layout):
-    from safedata_validator_spark.functions.avi import avi_meta, decode_avi, is_avi
-
-    values = [10, 120, 250]
-    data = _mk_avi(values, w=9, h=6, fps=8, layout=layout)
-    assert is_avi(data)
-    meta = avi_meta(data)
-    assert (meta["width"], meta["height"]) == (9, 6)
-    assert (meta["scale"], meta["rate"]) == (1, 8)
-    assert meta["total_frames"] == 3 and meta["handler"] == "MJPG"
-    out = decode_avi(data)
-    assert [t for t, _ in out] == [0, 125, 250]
-    for (_, img), v in zip(out, values):
-        assert img.shape == (6, 9, 3)
-        assert (img == v).all()  # flat q100 JPEG decodes exactly
-
-
-def test_avi_timestamps_integer_floor():
-    from safedata_validator_spark.functions.avi import decode_avi
-
-    data = _mk_avi([1, 2, 3, 4], fps=7)
-    assert [t for t, _ in decode_avi(data)] == [0, 142, 285, 428]
-
-
-def test_avi_odd_length_frame_padding():
-    # force an odd-length JPEG payload so the RIFF even-padding path runs
-    from safedata_validator_spark.functions.avi import avi_frames, encode_avi
-    from safedata_validator_spark.functions.jpeg import encode_jpeg
-
-    j = encode_jpeg(np.full((2, 2), 7, np.uint8), quality=100)
-    odd = j + b"\x00" if len(j) % 2 == 0 else j  # JPEG ignores trailing pad
-    data = encode_avi([odd, j], width=2, height=2, fps=4)
-    _, frames = avi_frames(data)
-    assert [len(f) for _, f in frames] == [len(odd), len(j)]
-
-
-def test_avi_decode_frames_seam():
-    from safedata_validator_spark.functions.multimodal import decode_frames
-
-    out = decode_frames(_mk_avi([5, 200], fps=10))
-    assert [(t, img.shape) for t, img in out] == [(0, (6, 9, 3)), (100, (6, 9, 3))]
-    with pytest.raises(NotImplementedError):
-        decode_frames(b"\x1a\x45\xdf\xa3 webm/EBML is not decodable")
-
-
-def test_avi_rejects_malformed():
-    from safedata_validator_spark.functions.avi import (
-        AVIError,
-        avi_meta,
-        decode_avi,
-        encode_avi,
-        is_avi,
-    )
-
-    assert not is_avi(b"RIFF\x00\x00\x00\x00WAVE")
-    with pytest.raises(AVIError):
-        decode_avi(b"RIFF\x04\x00\x00\x00AVI ")  # no headers
-    data = _mk_avi([1, 2])
-    with pytest.raises(AVIError):
-        decode_avi(data[: len(data) // 2])  # truncated mid-movi
-    # non-MJPEG frame payload behind a valid container
-    bad = encode_avi([b"not a jpeg stream!"], width=2, height=2, fps=5)
-    with pytest.raises(AVIError, match="not MJPEG"):
-        decode_avi(bad)
-    with pytest.raises(AVIError):
-        encode_avi([], width=2, height=2)
-    with pytest.raises(AVIError):
-        encode_avi([b"x"], width=2, height=2, fps=0)
-    # headers present but no video stream: strip the movi list tag
-    mut = bytearray(data)
-    i = mut.find(b"vids")
-    mut[i : i + 4] = b"auds"
-    with pytest.raises(AVIError, match="no video stream"):
-        avi_meta(bytes(mut))
-
-
 # ---------------------------------------------------------------------- MP4
 
 
@@ -763,13 +655,6 @@ def test_mp4_multi_entry_stts():
     assert [t for t, _ in frames] == [0, 100, 200, 500]
 
 
-def test_mp4_decode_frames_seam():
-    from safedata_validator_spark.functions.multimodal import decode_frames
-
-    out = decode_frames(_mk_mp4([5, 200], fps=10))
-    assert [(t, img.shape) for t, img in out] == [(0, (6, 9, 3)), (100, (6, 9, 3))]
-
-
 def test_mp4_rejects_malformed():
     import struct
 
@@ -811,242 +696,3 @@ def test_mp4_rejects_malformed():
     assert mp4_meta(bytes(mut2))["total_frames"] == 99
     with pytest.raises(MP4Error, match="chunk map covers fewer"):
         mp4_frames(bytes(mut2))
-
-
-# --------------------------------------------------------------------- FLAC
-
-from safedata_validator_spark.functions.flac import (  # noqa: E402
-    FLACError,
-    decode_flac,
-    decode_flac_int,
-    encode_flac,
-    is_flac,
-)
-from safedata_validator_spark.functions.flac import (  # noqa: E402
-    _BitWriter as _FlacBW,
-)
-from safedata_validator_spark.functions.flac import (  # noqa: E402
-    _crc8 as _flac_crc8,
-)
-from safedata_validator_spark.functions.flac import (  # noqa: E402
-    _crc16 as _flac_crc16,
-)
-from safedata_validator_spark.functions.flac import (  # noqa: E402
-    _zigzag as _flac_zigzag,
-)
-
-
-def _smooth(n=5000, scale=3000, seed=0):
-    t = np.arange(n)
-    rng = np.random.default_rng(seed)
-    s = scale * np.sin(t / 37) + scale / 4 * np.sin(t / 5)
-    return (s + rng.integers(-20, 21, n)).astype(np.int64)
-
-
-@pytest.mark.parametrize("bits", [8, 12, 16, 20, 24])
-def test_flac_round_trip_bit_depths(bits):
-    lim = 1 << (bits - 1)
-    s = np.clip(_smooth(scale=lim // 3), -lim, lim - 1)
-    enc = encode_flac(s, 44100, bits=bits)
-    assert is_flac(enc)
-    rate, dec, b = decode_flac_int(enc)
-    assert rate == 44100 and b == bits
-    assert np.array_equal(dec[:, 0], s)
-
-
-def test_flac_round_trip_stereo_multiframe():
-    rng = np.random.default_rng(3)
-    s = np.stack([_smooth(9001, seed=1), rng.integers(-500, 500, 9001)], axis=1)
-    rate, dec, _ = decode_flac_int(encode_flac(s, 48000, bits=16, block_size=1024))
-    assert np.array_equal(dec, s)
-
-
-def test_flac_compresses_smooth_audio():
-    s = _smooth(20000)
-    enc = encode_flac(s, 44100, bits=16)
-    assert len(enc) < 0.5 * s.size * 2  # fixed predictors must actually help
-
-
-def test_flac_constant_and_verbatim_paths():
-    # constant: few bytes per frame
-    const = encode_flac(np.full(4096, -7), 8000, bits=16)
-    assert len(const) < 100
-    _, dec, _ = decode_flac_int(const)
-    assert (dec == -7).all()
-    # pure noise at full range: falls back to verbatim, still lossless
-    rng = np.random.default_rng(9)
-    s = rng.integers(-32768, 32768, 2000)
-    _, dec, _ = decode_flac_int(encode_flac(s, 8000, bits=16))
-    assert np.array_equal(dec[:, 0], s)
-
-
-def test_flac_decode_audio_seam():
-    from safedata_validator_spark.functions.multimodal import decode_audio
-
-    s = np.array([16384, -16384, 0, 8192])
-    rate, f = decode_audio(encode_flac(s, 22050, bits=16))
-    assert rate == 22050
-    assert np.allclose(f[:, 0], s / 32768.0)
-
-
-def test_flac_rejects_malformed():
-    assert not is_flac(b"RIFFxxxxWAVE")
-    with pytest.raises(FLACError):
-        decode_flac(b"not audio")
-    good = encode_flac(_smooth(1000), 8000, bits=16)
-    with pytest.raises(FLACError):
-        decode_flac(good[:30])  # truncated STREAMINFO
-    # corrupt one audio byte: CRC-16 (or MD5) must catch it
-    mut = bytearray(good)
-    mut[-10] ^= 0xFF
-    with pytest.raises(FLACError):
-        decode_flac(bytes(mut))
-    with pytest.raises(FLACError):
-        encode_flac(np.array([0.5, 0.2]), 8000)  # float input
-    with pytest.raises(FLACError):
-        encode_flac(np.array([40000]), 8000, bits=16)  # out of range
-
-
-# ---- hand-built streams for the decoder-only paths (LPC, stereo
-# decorrelation, rice partitions, wasted bits, 5-bit parameters). The
-# builder uses only the public bit-level format; the decode path under
-# test is fully independent of it.
-
-
-def _build_stream(bs, ch, bits, chan_code, subframe_writers, rate=8000):
-    bw = _FlacBW()
-    bw.write(bs, 16)
-    bw.write(bs, 16)
-    bw.write(0, 24)
-    bw.write(0, 24)
-    bw.write(rate, 20)
-    bw.write(ch - 1, 3)
-    bw.write(bits - 1, 5)
-    bw.write(0, 36)  # total unknown -> decode until EOF, skip MD5
-    bw.align()
-    out = bytearray(b"fLaC")
-    body = bytes(bw.buf) + b"\x00" * 16
-    out += bytes([0x80]) + struct.pack(">I", len(body))[1:] + body
-    hdr = _FlacBW()
-    hdr.write(0b11111111111110, 14)
-    hdr.write(0, 2)
-    hdr.write(0b0111, 4)  # 16-bit blocksize follows
-    hdr.write(0, 4)       # rate from STREAMINFO
-    hdr.write(chan_code, 4)
-    hdr.write({8: 1, 16: 4}[bits], 3)
-    hdr.write(0, 1)
-    hdr.align()
-    hdr.buf += b"\x00"    # frame number 0
-    hdr.buf += struct.pack(">H", bs - 1)
-    hdr.buf.append(_flac_crc8(bytes(hdr.buf)))
-    fw = _FlacBW()
-    fw.buf += hdr.buf
-    for write_subframe in subframe_writers:
-        write_subframe(fw)
-    fw.align()
-    fw.buf += struct.pack(">H", _flac_crc16(bytes(fw.buf)))
-    out += fw.buf
-    return bytes(out)
-
-
-def _verbatim_writer(s, bits):
-    def w(fw):
-        fw.write(0, 1)
-        fw.write(1, 6)
-        fw.write(0, 1)
-        for v in np.asarray(s).tolist():
-            fw.write_signed(int(v), bits)
-    return w
-
-
-def test_flac_decodes_lpc_subframes():
-    # signal + LPC(2) with coeffs [3, -1], shift 1: res = s - ((3a - b) >> 1)
-    s = _smooth(512, scale=2000, seed=4)
-    order, coefs, shift, prec = 2, [3, -1], 1, 4
-    res = [
-        int(s[i]) - ((coefs[0] * int(s[i - 1]) + coefs[1] * int(s[i - 2])) >> shift)
-        for i in range(order, len(s))
-    ]
-
-    def lpc_writer(fw):
-        fw.write(0, 1)
-        fw.write(32 | (order - 1), 6)
-        fw.write(0, 1)
-        for v in s[:order].tolist():
-            fw.write_signed(int(v), 16)
-        fw.write(prec - 1, 4)
-        fw.write(shift, 5)
-        for c in coefs:
-            fw.write_signed(c, prec)
-        fw.write(0, 2)   # 4-bit rice
-        fw.write(0, 4)   # partition order 0
-        u = _flac_zigzag(np.array(res, dtype=np.int64))
-        p = 6
-        fw.write(p, 4)
-        for v in u.tolist():
-            fw.write_unary(int(v) >> p)
-            fw.write(int(v) & ((1 << p) - 1), p)
-
-    data = _build_stream(len(s), 1, 16, 0, [lpc_writer])
-    _, dec, _ = decode_flac_int(data)
-    assert np.array_equal(dec[:, 0], s)
-
-
-@pytest.mark.parametrize("chan_code", [8, 9, 10])
-def test_flac_decodes_stereo_decorrelation(chan_code):
-    rng = np.random.default_rng(chan_code)
-    left = rng.integers(-3000, 3000, 256).astype(np.int64)
-    right = rng.integers(-3000, 3000, 256).astype(np.int64)
-    side = left - right
-    if chan_code == 8:    # left/side
-        subs = [_verbatim_writer(left, 16), _verbatim_writer(side, 17)]
-    elif chan_code == 9:  # right/side
-        subs = [_verbatim_writer(side, 17), _verbatim_writer(right, 16)]
-    else:                 # mid/side
-        mid = (left + right) >> 1
-        subs = [_verbatim_writer(mid, 16), _verbatim_writer(side, 17)]
-    data = _build_stream(256, 2, 16, chan_code, subs)
-    _, dec, _ = decode_flac_int(data)
-    assert np.array_equal(dec[:, 0], left)
-    assert np.array_equal(dec[:, 1], right)
-
-
-def test_flac_decodes_partitions_escapes_and_wasted_bits():
-    # FIXED(1) with partition order 2 (4 partitions), mixing 5-bit rice
-    # parameters and a raw-escape partition, all samples scaled by 4 so the
-    # subframe carries 2 wasted bits
-    bs = 256
-    s4 = _smooth(bs, scale=1500, seed=6)
-    s = s4 * 4
-    eff = s4  # what the subframe codes after the wasted-bit shift
-    res = np.diff(eff, n=1)
-
-    def writer(fw):
-        fw.write(0, 1)
-        fw.write(0b001000 | 1, 6)  # FIXED order 1
-        fw.write(1, 1)             # wasted-bits flag
-        fw.write_unary(1)          # k - 1 = 1 -> two wasted bits
-        fw.write_signed(int(eff[0]), 14)  # warmup at 16 - 2 bits
-        fw.write(1, 2)             # 5-bit rice parameters
-        fw.write(2, 4)             # partition order 2 -> 4 partitions
-        counts = [bs // 4 - 1, bs // 4, bs // 4, bs // 4]
-        start = 0
-        for part, n in enumerate(counts):
-            chunk = res[start : start + n]
-            start += n
-            if part == 2:          # escape partition: raw 15-bit residuals
-                fw.write(31, 5)
-                fw.write(15, 5)
-                for v in chunk.tolist():
-                    fw.write_signed(int(v), 15)
-            else:
-                u = _flac_zigzag(chunk)
-                p = 5
-                fw.write(p, 5)
-                for v in u.tolist():
-                    fw.write_unary(int(v) >> p)
-                    fw.write(int(v) & ((1 << p) - 1), p)
-
-    data = _build_stream(bs, 1, 16, 0, [writer])
-    _, dec, _ = decode_flac_int(data)
-    assert np.array_equal(dec[:, 0], s)

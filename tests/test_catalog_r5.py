@@ -4,8 +4,9 @@ The 50-entry driver catalog traded three relational extras
 (pricing_summary, top_revenue_orders, sessionize_events — all reachable
 via BENCH_QUERIES and still timed by bench.py's fixed HEADLINE list) for
 driver-visible rows on the round-5 training-hygiene ops (span_dedup_docs,
-decon_spans_docs, lm_quality_docs). Nothing may lose its oracle gate in
-the swap:
+decon_spans_docs, lm_quality_docs); the five media-codec slots later went
+to engine-level gates (engine_*: validate() over sf-derived tables).
+Nothing may lose its oracle gate in a swap:
 
 * the DISPLACED queries keep a full Spark-vs-DuckDB value gate HERE
   (the same row-count + columns + order-insensitive-values compare the
@@ -29,7 +30,17 @@ from oracle_parity import TABLES, _canon  # noqa: E402
 SF = "/root/testdata/sf0.001"
 
 DISPLACED = ["pricing_summary", "top_revenue_orders", "sessionize_events"]
-NEW_ENTRIES = ["span_dedup_docs", "decon_spans_docs", "lm_quality_docs"]
+NEW_ENTRIES = [
+    "span_dedup_docs",
+    "decon_spans_docs",
+    "lm_quality_docs",
+    # the engine-level gates that took the media slots
+    "engine_ordering_events",
+    "engine_keys_events",
+    "engine_categorical_events",
+    "engine_row_rules_customer",
+    "engine_verdicts_orders",
+]
 
 
 @pytest.fixture(scope="module")

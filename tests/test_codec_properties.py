@@ -1,5 +1,5 @@
 """Hypothesis property batteries for the built-in media codecs
-(functions/png.py, jpeg.py, gif.py, wav.py, flac.py, avi.py, mp4.py):
+(functions/png.py, jpeg.py, gif.py, wav.py, mp4.py):
 random-input round-trip invariants beyond the hand-picked cases in
 test_builtin_codecs.py. No Spark session — pure kernel fuzzing.
 
@@ -10,14 +10,11 @@ Properties pinned:
   bit-exact.
 * GIF: palette frames round-trip exactly (LZW is lossless); timestamps
   are the cumulative delays.
-* AVI: container framing returns the exact payload bytes in order and
-  floor-division timestamps for any frame sizes/fps.
-* JPEG (q100 flat): exact for any flat image at any size — the invariant
-  the arithmetic catalog oracles rely on.
+* MP4: container framing returns the exact payload bytes in order and
+  floor-division timestamps for any frame sizes/fps/chunk layout.
+* JPEG (q100 flat): exact for any flat image at any size.
 * JPEG progressive: decodes pixel-identical to the baseline stream for
   any content/size/quality/subsampling.
-* FLAC: encode→decode is the identity for any samples/depth/channels/
-  frame split — lossless by spec.
 """
 
 from __future__ import annotations
@@ -26,7 +23,6 @@ import numpy as np
 from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
-from safedata_validator_spark.functions.avi import avi_frames, encode_avi
 from safedata_validator_spark.functions.gif import decode_gif, encode_gif
 from safedata_validator_spark.functions.jpeg import (
     decode_jpeg,
@@ -125,21 +121,6 @@ def test_gif_round_trip_property(h, w, nf, npal, seed):
 @given(
     sizes=st.lists(st.integers(min_value=1, max_value=200), min_size=1, max_size=6),
     fps=st.integers(min_value=1, max_value=60),
-    seed=st.integers(min_value=0, max_value=2**31),
-)
-def test_avi_container_framing_property(sizes, fps, seed):
-    rng = np.random.default_rng(seed)
-    payloads = [rng.integers(0, 256, size=n, dtype=np.uint8).tobytes() for n in sizes]
-    meta, frames = avi_frames(encode_avi(payloads, width=4, height=4, fps=fps))
-    assert meta["rate"] == fps and meta["total_frames"] == len(payloads)
-    assert [f for _, f in frames] == payloads
-    assert [t for t, _ in frames] == [i * 1000 // fps for i in range(len(payloads))]
-
-
-@settings(max_examples=25, deadline=None)
-@given(
-    sizes=st.lists(st.integers(min_value=1, max_value=200), min_size=1, max_size=6),
-    fps=st.integers(min_value=1, max_value=60),
     spc=st.one_of(st.none(), st.integers(min_value=1, max_value=7)),
     seed=st.integers(min_value=0, max_value=2**31),
 )
@@ -208,18 +189,8 @@ def test_progressive_jpeg_exact_vs_baseline_property(h, w, quality, layout, seed
 # single-byte corruption of a valid payload, every container walker /
 # decoder either returns a result or raises its TYPED error (a ValueError
 # subclass) — never an untyped crash (struct.error, IndexError,
-# OverflowError, MemoryError from a bogus size field, ...) that would
-# abort a whole Arrow batch in the mapInPandas UDFs.
+# OverflowError, MemoryError from a bogus size field, ...).
 # ---------------------------------------------------------------------------
-
-
-def _real_avi(seed: int, nf: int, fps: int) -> bytes:
-    rng = np.random.default_rng(seed)
-    frames = [
-        encode_jpeg(rng.integers(0, 256, size=(4, 5), dtype=np.uint8), quality=90)
-        for _ in range(nf)
-    ]
-    return encode_avi(frames, width=5, height=4, fps=fps)
 
 
 def _real_mp4(seed: int, nf: int, fps: int) -> bytes:
@@ -236,32 +207,6 @@ def _assert_typed(decode, data: bytes) -> None:
         decode(data)
     except ValueError:
         pass  # typed rejection (every codec error subclasses ValueError)
-
-
-@settings(max_examples=120, deadline=None)
-@given(
-    seed=st.integers(min_value=0, max_value=2**31),
-    nf=st.integers(min_value=1, max_value=4),
-    fps=st.integers(min_value=1, max_value=30),
-    cut=st.floats(min_value=0.0, max_value=1.0),
-)
-def test_avi_truncation_typed_errors(seed, nf, fps, cut):
-    data = _real_avi(seed, nf, fps)
-    _assert_typed(lambda d: avi_frames(d), data[: int(len(data) * cut)])
-
-
-@settings(max_examples=120, deadline=None)
-@given(
-    seed=st.integers(min_value=0, max_value=2**31),
-    nf=st.integers(min_value=1, max_value=4),
-    fps=st.integers(min_value=1, max_value=30),
-    pos=st.floats(min_value=0.0, max_value=1.0),
-    val=st.integers(min_value=0, max_value=255),
-)
-def test_avi_corruption_typed_errors(seed, nf, fps, pos, val):
-    data = bytearray(_real_avi(seed, nf, fps))
-    data[min(int(len(data) * pos), len(data) - 1)] = val
-    _assert_typed(lambda d: avi_frames(d), bytes(data))
 
 
 @settings(max_examples=120, deadline=None)
@@ -326,63 +271,6 @@ def test_image_audio_mutation_typed_errors(seed, kind, mode, pos, val):
         b[min(int(len(b) * pos), len(b) - 1)] = val
         data = bytes(b)
     _assert_typed(dec, data)
-
-
-# --------------------------------------------------------------------- FLAC
-
-from safedata_validator_spark.functions.flac import (  # noqa: E402
-    decode_flac_int,
-    encode_flac,
-)
-
-
-@settings(max_examples=60, deadline=None)
-@given(
-    n=st.integers(min_value=1, max_value=600),
-    ch=st.integers(min_value=1, max_value=3),
-    bits=st.sampled_from([8, 12, 16, 20, 24]),
-    block_size=st.sampled_from([64, 256, 4096]),
-    shape=st.sampled_from(["noise", "smooth", "constant", "scaled"]),
-    seed=st.integers(min_value=0, max_value=2**31),
-)
-def test_flac_round_trip_property(n, ch, bits, block_size, shape, seed):
-    """FLAC is lossless by spec: encode→decode must return the identical
-    integers for any sample content (noise → verbatim, smooth → fixed
-    predictors, constant subframes, multiples-of-2^k values), any depth,
-    any channel count, and any frame split."""
-    rng = np.random.default_rng(seed)
-    lim = 1 << (bits - 1)
-    if shape == "noise":
-        s = rng.integers(-lim, lim, (n, ch))
-    elif shape == "smooth":
-        t = np.arange(n)[:, None]
-        s = (lim // 3 * np.sin(t / 11 + np.arange(ch))).astype(np.int64)
-    elif shape == "constant":
-        s = np.full((n, ch), int(rng.integers(-lim, lim)))
-    else:  # scaled: all values share low zero bits (wasted-bits shape)
-        s = (rng.integers(-lim >> 3, lim >> 3, (n, ch)) << 3)
-    rate, dec, b = decode_flac_int(encode_flac(s, 44100, bits=bits, block_size=block_size))
-    assert rate == 44100 and b == bits
-    assert np.array_equal(dec, np.asarray(s, dtype=np.int64))
-
-
-@settings(max_examples=100, deadline=None)
-@given(
-    seed=st.integers(min_value=0, max_value=2**31),
-    mode=st.sampled_from(["cut", "flip"]),
-    pos=st.floats(min_value=0.0, max_value=1.0),
-    val=st.integers(min_value=0, max_value=255),
-)
-def test_flac_mutation_typed_errors(seed, mode, pos, val):
-    rng = np.random.default_rng(seed)
-    data = encode_flac(rng.integers(-2000, 2000, (300, 2)), 8000, bits=16)
-    if mode == "cut":
-        data = data[: int(len(data) * pos)]
-    else:
-        b = bytearray(data)
-        b[min(int(len(b) * pos), len(b) - 1)] = val
-        data = bytes(b)
-    _assert_typed(decode_flac_int, data)
 
 
 # ------------------------------------------------- G.711 & IMA ADPCM (WAV)

@@ -1,22 +1,17 @@
-"""Environment-gated batteries for the three environment boundaries
-(VERDICT r02 §next 5-7). Round 3 closed two of them with BUILT-IN
-backends: OGC geometry validity now has a pure-numpy engine
-(functions/geo_validity.py) and PNG payloads decode through a
-pure-stdlib codec (functions/png.py), so those batteries run in EVERY
-environment; shapely/pillow, when present, additionally run as parity
-oracles against the built-ins. Only the Iceberg runtime (a jar, not a
-library) remains skipped-not-absent."""
+"""Environment-gated batteries for the three environment boundaries.
+OGC geometry validity has a built-in pure-numpy engine
+(functions/geo_validity.py), so that battery runs in EVERY environment;
+shapely and pillow, when present, run as parity oracles against the
+built-in geometry engine and the built-in PNG/JPEG codecs. Only the
+Iceberg runtime (a jar, not a library) remains skipped-not-absent."""
 
 from __future__ import annotations
 
 import importlib.util
 import os
-import struct
 import sys
-import zlib
 
 import pytest
-from pyspark.sql import functions as F
 
 HAVE_SHAPELY = importlib.util.find_spec("shapely") is not None
 HAVE_PIL = importlib.util.find_spec("PIL") is not None
@@ -95,73 +90,8 @@ def test_builtin_validity_parity_with_shapely(spark):
 
 
 # --------------------------------------------------------------------------
-# 2. Real image codec (functions/multimodal.py decode_image PIL branch)
+# 2. Built-in image codecs (functions/png.py, functions/jpeg.py) against PIL
 # --------------------------------------------------------------------------
-
-def tiny_png(w: int, h: int, rgb: tuple[int, int, int]) -> bytes:
-    """A minimal valid solid-colour PNG built with the stdlib only, so the
-    fixture needs no codec to CREATE — only to decode."""
-
-    def chunk(tag: bytes, data: bytes) -> bytes:
-        return (
-            struct.pack(">I", len(data)) + tag + data
-            + struct.pack(">I", zlib.crc32(tag + data) & 0xFFFFFFFF)
-        )
-
-    ihdr = struct.pack(">IIBBBBB", w, h, 8, 2, 0, 0, 0)  # 8-bit RGB
-    raw = b"".join(b"\x00" + bytes(rgb) * w for _ in range(h))
-    return (
-        b"\x89PNG\r\n\x1a\n"
-        + chunk(b"IHDR", ihdr)
-        + chunk(b"IDAT", zlib.compress(raw))
-        + chunk(b"IEND", b"")
-    )
-
-
-def test_decode_image_real_png():
-    """Runs in EVERY environment: pillow when installed, else the built-in
-    pure-stdlib PNG codec — identical output either way."""
-    import numpy as np
-
-    from safedata_validator_spark.functions.multimodal import decode_image
-
-    img = decode_image(tiny_png(5, 3, (10, 200, 30)))
-    assert img.shape == (3, 5, 3) and img.dtype == np.uint8
-    assert (img == np.array([10, 200, 30], dtype=np.uint8)).all()
-
-
-def test_extract_features_over_real_png(spark):
-    """The mapInPandas plumbing over a REAL payload with codec='real': the
-    pooled features are computed from the actual decoded pixels (a solid
-    (60, 120, 180) image pools to exactly those channel means)."""
-    from safedata_validator_spark.functions.multimodal import extract_features
-
-    payload = tiny_png(8, 8, (60, 120, 180))
-    media = spark.createDataFrame(
-        [(1, "image", "image/png", 8, 8, None, bytearray(payload))],
-        "media_id long, kind string, mime string, width int, height int, "
-        "duration_ms int, payload binary",
-    )
-    (row,) = extract_features(media, codec="real").collect()
-    assert row["n_bytes"] == len(payload) and len(row["features"]) == 16
-    # flattened RGBRGB... stream pooled into 16 buckets of 12 samples each:
-    # every bucket holds 4 whole pixels, so each mean = mean(60,120,180)
-    assert all(abs(f - (60 + 120 + 180) / 3 / 255.0) < 1e-6 for f in row["features"])
-
-
-def test_decode_image_other_formats_without_pil():
-    """Formats beyond PNG and baseline JPEG still need pillow; a malformed
-    payload of a BUILT-IN format fails as malformed, not as missing-codec."""
-    from safedata_validator_spark.functions.jpeg import JPEGError
-    from safedata_validator_spark.functions.multimodal import decode_image
-
-    if HAVE_PIL:
-        pytest.skip("pillow installed - every format decodes")
-    with pytest.raises(NotImplementedError, match="pillow"):
-        decode_image(b"GIF89a not a built-in format")
-    with pytest.raises(JPEGError):
-        decode_image(b"\xff\xd8\xff\xe0 truncated jpeg")
-
 
 @pytest.mark.skipif(not HAVE_PIL, reason="pillow not installed")
 def test_builtin_png_parity_with_pil():
@@ -235,17 +165,6 @@ def test_builtin_jpeg_parity_with_pil():
     with Image.open(io.BytesIO(pil_stream)) as im:
         pil_px = np.asarray(im.convert("RGB"), dtype=np.int32)
     assert np.abs(decode_jpeg(pil_stream).astype(np.int32) - pil_px).max() <= 2
-
-
-def test_decode_image_surrogate_deterministic():
-    """The fake path (used by every in-container plan) is payload-keyed and
-    deterministic — runs in every environment."""
-    from safedata_validator_spark.functions.multimodal import decode_image
-
-    a = decode_image(b"payload", fake=True)
-    b = decode_image(b"payload", fake=True)
-    c = decode_image(b"other", fake=True)
-    assert (a == b).all() and a.shape == (8, 8, 3) and not (a == c).all()
 
 
 # --------------------------------------------------------------------------

@@ -1,5 +1,5 @@
 """Tests for the training-data pipeline operators: text analysis, dedup
-(exact / jaccard / minhash-LSH / simhash), similarity search, multimodal."""
+(exact / jaccard / minhash-LSH / simhash), similarity search."""
 
 from __future__ import annotations
 
@@ -9,7 +9,6 @@ from pyspark.sql import functions as F
 from safedata_validator_spark.functions import text as tx
 from safedata_validator_spark.functions import dedup as dd
 from safedata_validator_spark.functions import similarity as sim
-from safedata_validator_spark.functions import multimodal as mm
 
 DOC = "the quick brown fox jumps over the lazy dog near the river bank today"
 NEAR = "the quick brown fox jumps over the lazy dog near the river bank tonight"
@@ -112,6 +111,25 @@ def test_simhash_near_pairs(spark, docs):
     assert (1, 5) not in got and (1, 6) not in got
 
 
+@pytest.mark.parametrize("id_col, text_col", [("doc.id", "te.xt"), ("`doc`", "te`xt")])
+def test_dedup_quotes_user_column_names(spark, docs, id_col, text_col):
+    """Column names are identifiers, not expressions: a dotted or
+    backticked id/text column gives the same rows as plain names."""
+    odd = docs.toDF(id_col, text_col)
+
+    def rows(df):
+        return sorted(tuple(r) for r in df.collect())
+
+    for op in (dd.exact_dedup_groups, dd.simhash64):
+        assert rows(op(odd, id_col, text_col)) == rows(op(docs, "doc_id", "text"))
+    got = dd.minhash_lsh_dedup(odd, id_col, text_col, threshold=0.5)
+    want = dd.minhash_lsh_dedup(docs, "doc_id", "text", threshold=0.5)
+    pairs = rows(want)
+    assert pairs and rows(got) == pairs
+    dd.release(got)
+    dd.release(want)
+
+
 @pytest.fixture(scope="module")
 def vectors(spark):
     import numpy as np
@@ -164,26 +182,6 @@ def test_ivf_topk_recall_vs_brute_force(spark, vectors):
     # deterministic: same seed → same quantizer → same output
     again = sim.ivf_topk(vectors, queries, k=3, n_centroids=4, nprobe=2)
     assert {tuple(r) for r in again.collect()} == {tuple(r) for r in ann.collect()}
-
-
-def test_multimodal_features_and_rules(spark, dims):
-    media = mm.synth_media(spark, n=30)
-    feats = mm.extract_features(media)
-    rows = feats.collect()
-    assert len(rows) == 30
-    assert all(len(r["features"]) == mm.FEATURE_DIM for r in rows)
-    # deterministic: same payload → same features
-    again = {r["media_id"]: r["features"] for r in mm.extract_features(media).collect()}
-    assert all(again[r["media_id"]] == r["features"] for r in rows)
-
-    from safedata_validator_spark.engine.validator import ValidationEngine
-
-    res = ValidationEngine().validate(media, mm.media_integrity_ruleset(), with_stats=False)
-    assert res.passed()
-
-    # decode stub is explicit about being a stub
-    with pytest.raises(NotImplementedError):
-        mm.decode_image(b"\x00\x01")
 
 
 def test_wkt_kind_syntax_bounds(spark):
@@ -298,37 +296,6 @@ def test_curate_documents_pipeline(spark, docs):
     # quality floor actually filters
     strict = curate_documents(docs, "doc_id", "text", min_quality=0.99, langs=("en",))
     assert strict.count() == 0
-
-
-def test_multimodal_resize_and_frame_sampling(spark):
-    """Resize and frame-sample stages: real Spark plumbing + vectorized
-    batch math over the stubbed codec; deterministic across runs."""
-    media = mm.synth_media(spark, n=24)
-    resized = mm.resize_images(media, out_w=4, out_h=4).collect()
-    assert len(resized) == 24
-    for r in resized:
-        if r["kind"] == "image":
-            assert len(r["pixels"]) == 4 * 4 * 3
-            assert all(0.0 <= p <= 1.0 for p in r["pixels"])
-        else:
-            assert r["pixels"] is None
-
-    frames = mm.sample_frames(media, n_frames=3)
-    rows = frames.collect()
-    n_videos = media.where("kind = 'video' AND duration_ms IS NOT NULL").count()
-    assert len(rows) == 3 * n_videos
-    by_media = {}
-    for r in rows:
-        by_media.setdefault(r["media_id"], []).append(r)
-    for mid, fr in by_media.items():
-        assert sorted(f["frame_idx"] for f in fr) == [0, 1, 2]
-        stamps = [f["frame_ms"] for f in sorted(fr, key=lambda x: x["frame_idx"])]
-        assert stamps == sorted(stamps)  # evenly spaced, non-decreasing
-        feats = {tuple(f["features"]) for f in fr}
-        assert len(feats) == 3  # per-frame features differ (frame-keyed decode)
-    again = {(r["media_id"], r["frame_idx"]): r["features"]
-             for r in mm.sample_frames(media, n_frames=3).collect()}
-    assert all(again[(r["media_id"], r["frame_idx"])] == r["features"] for r in rows)
 
 
 def test_chargram_winnowing_fingerprints(spark, docs):
@@ -482,100 +449,3 @@ def test_minhash_persists_compact_arrays_only(spark, docs):
         else:
             assert cached.count() <= n_docs, cached.columns
     dd.release(out)
-
-
-def test_audio_features_stage_real_wav(spark):
-    """extract_audio_features over REAL WAV payloads through the built-in
-    codec: Arrow-batch stage decodes, features match the numpy kernel, and
-    non-audio rows are dropped inside the batch."""
-    import numpy as np
-    from pyspark.sql import types as T
-
-    from safedata_validator_spark.functions.wav import audio_features, encode_wav
-
-    rows = []
-    expected = {}
-    for i in range(12):
-        a = 1000 + i * 700
-        n = 400 + i * 16
-        sq = np.where((np.arange(n) // (i % 4 + 2)) % 2 == 0, a, -a)
-        payload = encode_wav(sq, 16000, bits=16)
-        rows.append((i, "audio", "audio/wav", None, None, None, bytearray(payload)))
-        expected[i] = audio_features(16000, (sq / 32768.0)[:, None])
-    rows.append((99, "image", None, 2, 2, None, bytearray(b"notaudio")))
-    media = spark.createDataFrame(rows, mm.MEDIA_SCHEMA)
-    out = {r["media_id"]: r for r in mm.extract_audio_features(media).collect()}
-    assert set(out) == set(expected)  # image row dropped in-batch
-    for i, exp in expected.items():
-        r = out[i]
-        assert r["sample_rate"] == 16000
-        assert r["n_frames"] == exp["n_frames"]
-        assert r["rms"] == exp["rms"]  # exact dyadic doubles
-        assert r["zero_crossings"] == exp["zero_crossings"]
-        assert abs(r["spectral_centroid_hz"] - exp["spectral_centroid_hz"]) < 1e-9
-
-
-def test_sample_frames_real_gif(spark):
-    """sample_frames(codec='real') seeks ACTUAL animated-GIF frames via the
-    built-in codec: container timestamps, even spacing over the decoded
-    frame list, features derived from the real pixels."""
-    import numpy as np
-
-    from safedata_validator_spark.functions.gif import encode_gif
-
-    pal = np.array(
-        [[0, 0, 0], [255, 0, 0], [0, 255, 0], [0, 0, 255]], np.uint8
-    )
-    rows = []
-    for i in range(6):
-        nf = i % 3 + 4  # 4..6 frames
-        frames = [np.full((4, 4), fi % 4, np.uint8) for fi in range(nf)]
-        payload = encode_gif(frames, pal, delays_ms=[30] * nf)
-        rows.append((i, "video", "image/gif", 4, 4, 30 * nf, bytearray(payload)))
-    media = spark.createDataFrame(rows, mm.MEDIA_SCHEMA)
-    out = mm.sample_frames(media, n_frames=3, codec="real").collect()
-    assert len(out) == 3 * 6
-    for r in out:
-        nf = r["media_id"] % 3 + 4
-        pick = min(r["frame_idx"] * nf // 3, nf - 1)
-        assert r["frame_ms"] == 30 * pick  # real container timestamps
-        # solid 4x4 frame of palette color pick%4: each of the 16 pooled
-        # buckets spans exactly one pixel's interleaved (r, g, b), so every
-        # feature equals that color's channel mean / 255
-        exp = pal[pick % 4].astype(float).mean() / 255.0
-        assert np.allclose(r["features"], [exp] * mm.FEATURE_DIM)
-
-
-def test_sample_frames_real_avi(spark):
-    """sample_frames(codec='real') decodes MJPEG-AVI payloads through the
-    built-in RIFF walker + baseline JPEG codec: stream-header timestamps
-    (fi * 1000 // fps), features from the real (exactly decoded) pixels."""
-    import numpy as np
-
-    from safedata_validator_spark.functions.avi import encode_avi
-    from safedata_validator_spark.functions.jpeg import encode_jpeg
-
-    rows = []
-    for i in range(5):
-        nf = i % 2 + 3  # 3..4 frames
-        fps = i % 3 + 4  # 4..6
-        jpegs = [
-            encode_jpeg(np.full((4, 4, 3), (i * 40 + fi * 60) % 256, np.uint8),
-                        quality=100, subsample="444")
-            for fi in range(nf)
-        ]
-        payload = encode_avi(jpegs, width=4, height=4, fps=fps)
-        rows.append(
-            (i, "video", "video/x-msvideo", 4, 4, nf * 1000 // fps,
-             bytearray(payload))
-        )
-    media = spark.createDataFrame(rows, mm.MEDIA_SCHEMA)
-    out = mm.sample_frames(media, n_frames=2, codec="real").collect()
-    assert len(out) == 2 * 5
-    for r in out:
-        i = r["media_id"]
-        nf, fps = i % 2 + 3, i % 3 + 4
-        pick = min(r["frame_idx"] * nf // 2, nf - 1)
-        assert r["frame_ms"] == pick * 1000 // fps
-        exp = ((i * 40 + pick * 60) % 256) / 255.0  # flat q100: exact decode
-        assert np.allclose(r["features"], [exp] * mm.FEATURE_DIM)

@@ -61,37 +61,34 @@ def test_row_rules_fuse_into_single_scan(spark):
 
 
 def test_adjacency_default_windows_are_block_bounded(spark):
-    """The skew-safety property itself: the default (blocked-window)
-    adjacency never builds an unbounded per-conversation window over raw
+    """The skew-safety property itself: the blocked-window adjacency
+    never builds an unbounded per-conversation window over raw
     rows — a bare Window.partitionBy(conv_id).orderBy(turn_idx) is exactly
     the hot-key hazard the engine exists to avoid. Every window spec in the
     plan must involve __block: phase-1 lags partition by (conv_id, __block)
     (≤ block_size rows per partition regardless of conversation size); the
     per-conversation boundary stitch orders by __block and runs over the
     per-block summary that a HashAggregate keyed (conv_id, __block) has
-    already shrunk by block_size×. The join adjacency stays available and
-    window-free (useful when the table is bucketed so the join is
-    shuffle-free)."""
+    already shrunk by block_size×."""
     import re
 
     df = transcripts_good(spark, n_convs=5, mean_turns=8, hot_factor=2)
 
-    def make_rs(**extra):
-        return RuleSet(
-            name="t", key_cols=["conv_id", "turn_idx"],
-            rules=[
-                Rule("m", "monotone", column="ts",
-                     params={"group": "conv_id", "order": "turn_idx", **extra}),
-                Rule("g", "transition_grammar", column="role",
-                     params={"group": "conv_id", "order": "turn_idx",
-                             "transitions": [["system", "user"], ["user", "assistant"],
-                                             ["assistant", "tool"], ["assistant", "user"],
-                                             ["tool", "assistant"]],
-                             "allowed_start": ["system"], **extra}),
-            ],
-        )
+    rs = RuleSet(
+        name="t", key_cols=["conv_id", "turn_idx"],
+        rules=[
+            Rule("m", "monotone", column="ts",
+                 params={"group": "conv_id", "order": "turn_idx"}),
+            Rule("g", "transition_grammar", column="role",
+                 params={"group": "conv_id", "order": "turn_idx",
+                         "transitions": [["system", "user"], ["user", "assistant"],
+                                         ["assistant", "tool"], ["assistant", "user"],
+                                         ["tool", "assistant"]],
+                         "allowed_start": ["system"]}),
+        ],
+    )
 
-    plan = _physical(ValidationEngine().validate(df, make_rs(), with_stats=False).violations)
+    plan = _physical(ValidationEngine().validate(df, rs, with_stats=False).violations)
     specs = re.findall(r"windowspecdefinition\(([^)]*)\)", plan)
     assert specs, plan[:2000]
     assert all("__block" in s for s in specs), specs
@@ -99,9 +96,6 @@ def test_adjacency_default_windows_are_block_bounded(spark):
     # Hash/Object/Sort aggregate variants print keys= or key=
     assert re.search(r"Aggregate\(keys?=\[conv_id[^\]]*__block", plan), plan[:2000]
 
-    plan_join = _physical(ValidationEngine().validate(df, make_rs(adjacency="join"), with_stats=False).violations)
-    assert "Window" not in plan_join, plan_join[:2000]
-    assert "BroadcastHashJoin" in plan_join or "SortMergeJoin" in plan_join
 
 
 def test_sequential_unique_share_level1_exchange(spark):
@@ -252,6 +246,13 @@ EAGER_BY_DESIGN = {
     "dedup_ngram_jaccard",  # same adaptive_cut probe (r6): skips the
     #   no-op anti-join + the second full-shingle cache
     "transcript_verdicts",
+    # validate() computes its two shared aggregates eagerly (one small job
+    # each) in every engine-level gate
+    "engine_ordering_events",
+    "engine_keys_events",
+    "engine_categorical_events",
+    "engine_row_rules_customer",
+    "engine_verdicts_orders",
     "hierarchy_closure",
     "hierarchy_congruence_events",
     "ann_topk",
@@ -468,3 +469,25 @@ def test_small_scan_spread_restores_parallelism(spark):
     assert "hashpartitioning" in _physical(spread)
     bare = _t(spark, sf, "documents")
     assert "Exchange" not in _physical(bare)
+
+
+def test_spread_guard_follows_file_split_settings(spark):
+    """The guard's cached split count belongs to the file-split settings it
+    was planned under: once they change (as session.tune_scan_splits does),
+    the next spread read plans against the new split count."""
+    from safedata_validator_spark.queries import _t
+
+    sf = SF.replace("sf0.001", "sf0.01")  # lineitem: one 1 MB file
+    keys = ("spark.sql.files.maxPartitionBytes", "spark.sql.files.openCostInBytes")
+    saved = [spark.conf.get(k) for k in keys]
+    try:
+        spark.conf.set(keys[0], str(128 * 1024 * 1024))
+        assert "hashpartitioning" in _physical(_t(spark, sf, "lineitem", spread=True))
+        spark.conf.set(keys[0], str(64 * 1024))
+        spark.conf.set(keys[1], str(16 * 1024))
+        split = _t(spark, sf, "lineitem", spread=True)
+        assert split.rdd.getNumPartitions() >= spark.sparkContext.defaultParallelism
+        assert "Exchange" not in _physical(split)
+    finally:
+        for k, v in zip(keys, saved):
+            spark.conf.set(k, v)

@@ -111,12 +111,19 @@ def test_expr_rule(spark):
 
 def test_lint_rejects_unknown(spark):
     df = spark.createDataFrame([(1,)], "id int")
-    rs = _ruleset(Rule("r", "no_such_type", column="id"))
-    try:
-        ENGINE.validate(df, rs, with_stats=False).violations
-        raise AssertionError("expected lint failure")
-    except ValueError as e:
-        assert "no_such_type" in str(e)
+    stale = [
+        (Rule("r", "no_such_type", column="id"), "no_such_type"),
+        # the retired self-join adjacency must fail before any job runs,
+        # never fall back to the blocked window silently
+        (Rule("m", "monotone", column="id",
+              params={"group": "id", "order": "id", "adjacency": "join"}), "'adjacency'"),
+    ]
+    for rule, needle in stale:
+        try:
+            ENGINE.validate(df, _ruleset(rule), with_stats=False).violations
+            raise AssertionError("expected lint failure")
+        except ValueError as e:
+            assert needle in str(e)
 
 
 def test_verdicts_zero_fill(spark):
