@@ -2,8 +2,10 @@
 
 No reference analogue (the reference's "resume" is rerunning the file); this
 is the north-rule requirement: "resumable from an Iceberg checkpoint/manifest
-recording per-partition lineage (snapshot-id, rule-set hash, metrics)". On a
-cluster the manifest lives as an Iceberg table keyed by
+recording per-partition lineage (snapshot-id, rule-set hash, metrics)". Of
+the metrics, the manifest stores counts only (rows, violations, errors and
+the pass flag, ``MANIFEST_DDL``); timings and job counts per run are ROADMAP
+direction 1. On a cluster the manifest lives as an Iceberg table keyed by
 (partition, ruleset_hash); in this sandbox (no Iceberg jars, see
 sources.tables.ICEBERG_AVAILABLE) the same manifest is an append-only parquet
 directory — the schema and resume semantics are identical.

@@ -3,6 +3,11 @@
 Violations are data, not log lines (the reference's verdict mechanism is a
 counting log handler, logger.py:68-107; here it is a DataFrame with a fixed
 schema so counting, scoping and persistence are relational).
+
+Small results (the validator's two shared aggregates, the LSH candidate set,
+the duplicate graph) are held on the driver when they fit. ``localize`` is
+the one bounded probe that decides it, and ``local_table`` builds the
+driver-local table (a JVM ``LocalRelation``).
 """
 
 from __future__ import annotations
@@ -115,3 +120,46 @@ def local_table(spark, rows, schema: T.StructType | str) -> DataFrame:
         F.from_json("value", schema, {"mode": "FAILFAST"}).alias("v")
     )
     return parsed.select("v.*")
+
+
+def _row_width(schema: T.StructType) -> int:
+    """Rough serialized bytes per row from the schema: enough to turn a byte
+    ceiling into a row cap (array columns such as sketches dominate)."""
+    width = 0
+    for f in schema.fields:
+        t = f.dataType
+        if isinstance(t, T.ArrayType):
+            width += 8 * 32
+        elif isinstance(t, (T.MapType, T.BinaryType)):
+            width += 1024
+        elif isinstance(t, T.StringType):
+            width += 64
+        else:
+            width += 16
+    return max(width, 64)
+
+
+def localize(
+    df: DataFrame, max_rows: int, max_bytes: int | None = None
+) -> tuple[DataFrame, bool]:
+    """Hold a (by-design small) result on the driver when it fits.
+
+    ``df`` is persisted, then at most ``cap + 1`` rows are collected as JVM
+    rows, where ``cap`` is ``max_rows``, lowered to what ``max_bytes`` allows
+    at the schema's estimated row width. When they fit, the plan is
+    unpersisted and the rows come back as a driver-local table
+    (``local_table``): every consumer reads the rows, never the build plan,
+    and reading the table (or a projection of it) back into Python runs no
+    Spark job. Otherwise the persisted plan comes back, and because it was
+    persisted BEFORE the probe, its first consumer reuses the computed
+    partitions instead of recomputing them; the caller owns its release.
+    Returns ``(table, is_local)``."""
+    cap = max_rows
+    if max_bytes is not None:
+        cap = min(cap, max(1, max_bytes // _row_width(df.schema)))
+    plan = df.persist()
+    rows = plan.limit(cap + 1)._jdf.collectAsList()
+    if rows.size() > cap:
+        return plan, False
+    plan.unpersist()
+    return local_table(df.sparkSession, rows, df.schema), True

@@ -35,10 +35,23 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from safedata_validator_spark.engine import checkpoint as ckpt
-from safedata_validator_spark.engine.common import empty_violations, entity_col, local_table
+from safedata_validator_spark.engine.common import (
+    empty_violations,
+    entity_col,
+    local_table,
+    localize,
+)
 from safedata_validator_spark.rules.compilers import compile_row_rule
 from safedata_validator_spark.rules.model import ERROR, Rule, RuleSet
 from safedata_validator_spark.rules import registry
+
+#: Shared aggregates larger than this many rows stay distributed (persisted)
+#: instead of being collected to the driver (``common.localize``)...
+LOCALIZE_ROWS = 500_000
+#: ...and a byte ceiling alongside it: the scope aggregate carries
+#: per-column sketch columns (quantile arrays, counters), so a row cap alone
+#: under-protects the driver for wide schemas.
+LOCALIZE_BYTES = 256 * 1024 * 1024
 
 
 @dataclass
@@ -309,54 +322,6 @@ class ValidationEngine:
             .select("scope", "rule_id", "severity", "n_rows", "n_failed", "passed")
         )
 
-    #: Shared aggregates larger than this many rows stay distributed
-    #: (persisted) instead of being collected to the driver.
-    localize_cap = 500_000
-    #: ...and a byte-denominated ceiling alongside it: the scope aggregate
-    #: carries per-column sketch columns (quantile arrays, counters), so a
-    #: row cap alone under-protects the driver for wide schemas.
-    localize_bytes_cap = 256 * 1024 * 1024
-
-    @staticmethod
-    def _est_row_width(schema) -> int:
-        """Rough serialized bytes per row from the schema — enough to turn
-        the byte ceiling into a row cap (sketch arrays dominate)."""
-        from pyspark.sql import types as T
-
-        width = 0
-        for f in schema.fields:
-            t = f.dataType
-            if isinstance(t, T.ArrayType):
-                width += 8 * 32
-            elif isinstance(t, (T.MapType, T.BinaryType)):
-                width += 1024
-            elif isinstance(t, T.StringType):
-                width += 64
-            else:
-                width += 16
-        return max(width, 64)
-
-    def _localize(self, agg: DataFrame) -> tuple[DataFrame, bool]:
-        """Materialize a (by-design tiny) aggregate as a driver-local table
-        (a JVM ``LocalRelation``, see ``common.local_table``) so every
-        downstream consumer reads rows, never the build plan. The collected
-        rows stay in the JVM; reading the local table (or a projection of
-        it) back into Python runs no Spark job. Falls back to a persisted
-        distributed plan when the aggregate exceeds the row or byte cap. The
-        plan is persisted BEFORE the probing collect, so the fallback's first
-        consumer reuses the already-computed partitions instead of
-        recomputing the whole aggregation. Returns (table, is_local)."""
-        cap = min(
-            self.localize_cap,
-            max(1, self.localize_bytes_cap // self._est_row_width(agg.schema)),
-        )
-        plan = agg.persist()
-        rows = plan.limit(cap + 1)._jdf.collectAsList()
-        if rows.size() > cap:
-            return plan, False
-        plan.unpersist()
-        return local_table(agg.sparkSession, rows, agg.schema), True
-
     def validate(
         self,
         df: DataFrame,
@@ -392,14 +357,15 @@ class ValidationEngine:
 
         The shared aggregates are computed EAGERLY (two small jobs at call
         time) and re-injected as driver-local tables (JVM LocalRelations,
-        see ``_localize``): their size is bounded by #scopes and Σ distinct
-        categorical-column values — both bounded by design (verdict
+        see ``common.localize``): their size is bounded by #scopes and
+        Σ distinct categorical-column values — both bounded by design (verdict
         partitions; level/membership domains) — and a local table guarantees
         every downstream consumer reads the computed rows instead of
         replaying the fact scan inside broadcast-subquery jobs, which do not
         share adaptive query stages with the main action. Should a
         categorical column turn out high-cardinality, the aggregate falls
-        back to a persisted distributed plan (``localize_cap`` rows).
+        back to a persisted distributed plan (over ``LOCALIZE_ROWS`` rows or
+        ``LOCALIZE_BYTES`` bytes).
         """
         from safedata_validator_spark.engine import extents as ext
         from safedata_validator_spark.engine import referential
@@ -458,11 +424,15 @@ class ValidationEngine:
         from concurrent.futures import ThreadPoolExecutor
 
         with ThreadPoolExecutor(max_workers=2) as pool:
-            scope_fut = pool.submit(self._localize, scope_agg_plan)
+            scope_fut = pool.submit(
+                localize, scope_agg_plan, LOCALIZE_ROWS, LOCALIZE_BYTES
+            )
             cat_fut = (
                 pool.submit(
-                    self._localize,
+                    localize,
                     referential.categorical_counts(df, ruleset.scope, cat_cols),
+                    LOCALIZE_ROWS,
+                    LOCALIZE_BYTES,
                 )
                 if cat_cols
                 else None

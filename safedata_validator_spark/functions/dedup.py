@@ -20,8 +20,9 @@ Scale notes:
   ``LOCAL_EDGES`` edges, connected components is a union-find on the
   driver and ``minhash_lsh_dedup(adaptive_cut=True)`` holds its candidate
   set as a driver-local table: at that size a distributed stage costs more
-  in per-job overhead than in data. Larger graphs take the distributed
-  paths (star contraction, a persisted candidate set).
+  in per-job overhead than in data. ``engine.common.localize``, the
+  package's one bounded probe, decides both. Larger graphs take the
+  distributed paths (star contraction, a persisted candidate set).
 """
 
 from __future__ import annotations
@@ -30,7 +31,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from safedata_validator_spark.engine.common import local_table, sql_ident
+from safedata_validator_spark.engine.common import local_table, localize, sql_ident
 from safedata_validator_spark.functions.text import fingerprint64, normalize_text
 
 #: Edge count up to which a duplicate graph is closed on the driver: the
@@ -443,12 +444,12 @@ def minhash_lsh_dedup(
     the common case on real corpora with a sane ``max_df``.
 
     ``adaptive_cut=True`` means the call may run bounded probes while it
-    builds the plan: the hot-list count above, and one collect of at most
-    ``LOCAL_EDGES + 1`` candidate pairs, which become a driver-local table
-    (``common.local_table``) when they fit, so the verify stage's
-    broadcasts of them launch no job. The default stays False: catalog
-    plan-building must stay job-free (tests/test_plans.py); scale runs opt
-    in."""
+    builds the plan: the hot-list count above, and the bounded probe of
+    ``common.localize`` over the candidate pairs, which become a
+    driver-local table when at most ``LOCAL_EDGES`` of them exist, so the
+    verify stage's broadcasts of them launch no job. The default stays
+    False: catalog plan-building must stay job-free (tests/test_plans.py);
+    scale runs opt in."""
     arr = (
         shingle_hash_array(df, id_col, text_col, n)
         .where(F.size("hs") > 0)
@@ -485,15 +486,12 @@ def minhash_lsh_dedup(
     # persist so the signature/banding pipeline runs exactly once
     cand = lsh_candidate_pairs(sig, bands, num_perm=num_perm)
     caches = caches + tuple(getattr(cand, "_sdv_cached", ()))
-    cand = cand.persist()
     if adaptive_cut:
         # the candidate set is bounded by the near-dup volume: when it fits,
-        # hold it as a driver-local table (JVM rows, no Python round trip),
-        # whose broadcasts below launch no job
-        jrows = cand.limit(LOCAL_EDGES + 1)._jdf.collectAsList()
-        if jrows.size() <= LOCAL_EDGES:
-            cand.unpersist()
-            cand = local_table(df.sparkSession, jrows, cand.schema)
+        # it is a driver-local table, whose broadcasts below launch no job
+        cand, _ = localize(cand, LOCAL_EDGES)
+    else:
+        cand = cand.persist()
     if cand.is_cached:
         caches = caches + (cand,)
     # semi-filter down to candidate-pair MEMBERS before any verify work —
@@ -544,14 +542,15 @@ def connected_components(
     CLUSTERS (keep one representative per transitively-connected group —
     A~B, B~C must collapse to one kept doc even when A~C was never emitted).
 
-    Eager. The normalized edge set (hi > lo, no self-loops, distinct) is
-    persisted and probed with one bounded collect of ``LOCAL_EDGES + 1``
-    rows. When it fits (and the ids are integral or strings), the
-    components come from a union-find on the driver and return as a
-    driver-local table (``common.local_table``): a dedup graph is tiny by
+    Eager. When the ids are integral or strings, the normalized edge set
+    (hi > lo, no self-loops, distinct) goes through ``common.localize``
+    with a cap of ``LOCAL_EDGES`` rows. When it fits, the edges are a
+    driver-local table, the components come from a union-find over its
+    rows and return as a driver-local table too: a dedup graph is tiny by
     design next to the corpus, and at that size the per-round jobs of the
     distributed path cost far more than the data. ``stats["rounds"]`` is
-    then 0.
+    then 0. Any other id type, or a graph over the cap, leaves the edges
+    persisted.
 
     Larger graphs run alternating large-star / small-star contraction
     (Kiveris et al., "Connected Components in MapReduce and Beyond",
@@ -573,24 +572,25 @@ def connected_components(
         pairs.select(F.greatest(a, b).alias("hi"), F.least(a, b).alias("lo"))
         .where(F.col("hi") != F.col("lo"))
         .distinct()
-        .persist()
     )
     id_type = edges.schema["hi"].dataType
     # integral ids, or strings in the default binary collation: the ids
     # Python orders exactly as Spark does
     if isinstance(id_type, T.IntegralType) or id_type == T.StringType():
-        rows = edges.limit(LOCAL_EDGES + 1).collect()
-        if len(rows) <= LOCAL_EDGES:
-            edges.unpersist()
+        edges, is_local = localize(edges, LOCAL_EDGES)
+        if is_local:
             if stats is not None:
                 stats["rounds"] = 0
-            return _local_components(pairs.sparkSession, rows, id_type)
+            return _local_components(edges, id_type)
+    else:
+        edges = edges.persist()
     return _star_contraction(edges, max_iterations, stats)
 
 
-def _local_components(spark, edges, id_type: T.DataType) -> DataFrame:
-    """Union-find over the (hi, lo) edge rows, each root the minimum of its
-    set (strings order by code point in Python, i.e. by UTF-8 bytes as in
+def _local_components(edges: DataFrame, id_type: T.DataType) -> DataFrame:
+    """Union-find over the rows of the driver-local (hi, lo) edge table
+    (reading them runs no Spark job), each root the minimum of its set
+    (strings order by code point in Python, i.e. by UTF-8 bytes as in
     Spark) → a local (id, component) table. Integral ids cross as longs
     and are cast back in a projection the optimizer folds into the
     relation."""
@@ -604,7 +604,7 @@ def _local_components(spark, edges, id_type: T.DataType) -> DataFrame:
             parent[x], x = root, parent[x]
         return root
 
-    for hi, lo in edges:
+    for hi, lo in edges.collect():
         parent.setdefault(hi, hi)
         parent.setdefault(lo, lo)
         r_hi, r_lo = find(hi), find(lo)
@@ -612,7 +612,7 @@ def _local_components(spark, edges, id_type: T.DataType) -> DataFrame:
             parent[max(r_hi, r_lo)] = min(r_hi, r_lo)
     carrier = T.StringType() if isinstance(id_type, T.StringType) else T.LongType()
     out = local_table(
-        spark,
+        edges.sparkSession,
         [(x, find(x)) for x in parent],
         T.StructType([T.StructField("id", carrier), T.StructField("component", carrier)]),
     )

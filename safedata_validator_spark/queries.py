@@ -13,8 +13,16 @@ Determinism rules used throughout (so Spark and DuckDB value-hashes match):
 
 from __future__ import annotations
 
+import glob
+import os
+import shutil
+import tempfile
+import uuid
+from collections.abc import Callable
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from safedata_validator_spark.engine.validator import ValidationEngine
 from safedata_validator_spark.functions import dedup as dd
@@ -24,18 +32,20 @@ from safedata_validator_spark.golden_oracles import GOLDEN_ORACLES
 from safedata_validator_spark.rules.model import EXCEL_ERRORS, WARNING, Rule, RuleSet
 
 
-#: (sf_dir, table) → inferred schema. Spark 4 runs one footer-read job per
-#: schema-less parquet read; caching the schema makes every load after the
-#: first touch job-free (a production deployment gets this for free from the
-#: Iceberg/metastore catalog — the schema never comes from data files).
-_SCHEMA_CACHE: dict[tuple[str, str], object] = {}
+#: (sf_dir, table, mtime_ns) → inferred schema. Spark 4 runs one
+#: footer-read job per schema-less parquet read; caching the schema makes
+#: every load after the first touch job-free (a production deployment gets
+#: this for free from the Iceberg/metastore catalog — the schema never comes
+#: from data files). The table path's modification time is part of the key,
+#: so a table rewritten at the same path is read afresh.
+_SCHEMA_CACHE: dict[tuple[str, str, int], object] = {}
 
-#: (sf_dir, table, maxPartitionBytes, openCostInBytes) → (planned scan
-#: splits, total file bytes): feeds the small-input parallelism guard below
-#: without re-planning per call. The split count depends on the two file
-#: settings (``session.tune_scan_splits`` changes them), so they are part
-#: of the key.
-_SPLIT_CACHE: dict[tuple[str, str, str, str], tuple[int, int]] = {}
+#: (sf_dir, table, mtime_ns, maxPartitionBytes, openCostInBytes) → (planned
+#: scan splits, total file bytes): feeds the small-input parallelism guard
+#: below without re-planning per call. The split count depends on the two
+#: file settings (``session.tune_scan_splits`` changes them) and on the
+#: files, so all of them are part of the key.
+_SPLIT_CACHE: dict[tuple[str, str, int, str, str], tuple[int, int]] = {}
 
 #: Tables below this size skip the guard: their downstream role is a
 #: broadcast/dimension side where an extra exchange buys nothing.
@@ -45,8 +55,8 @@ _SPREAD_MIN_BYTES = 128 * 1024
 def _t(
     spark: SparkSession, sf_dir: str, name: str, spread: bool = False
 ) -> DataFrame:
-    key = (sf_dir, name)
     path = f"{sf_dir}/{name}.parquet"
+    key = (sf_dir, name, os.stat(path).st_mtime_ns)
     if key not in _SCHEMA_CACHE:
         _SCHEMA_CACHE[key] = spark.read.parquet(path).schema
     df = spark.read.schema(_SCHEMA_CACHE[key]).parquet(path)
@@ -74,18 +84,16 @@ def _t(
         for k in ("maxPartitionBytes", "openCostInBytes")
     )
     if split_key not in _SPLIT_CACHE:
-        import os as _os
-
         total = 0
-        if _os.path.isdir(path):
-            for root, _dirs, files in _os.walk(path):
+        if os.path.isdir(path):
+            for root, _dirs, files in os.walk(path):
                 total += sum(
-                    _os.path.getsize(_os.path.join(root, f))
+                    os.path.getsize(os.path.join(root, f))
                     for f in files
                     if not f.startswith(("_", "."))
                 )
         else:
-            total = _os.path.getsize(path)
+            total = os.path.getsize(path)
         _SPLIT_CACHE[split_key] = (df.rdd.getNumPartitions(), total)
     n_splits, total = _SPLIT_CACHE[split_key]
     if n_splits < n and total >= _SPREAD_MIN_BYTES:
@@ -2249,6 +2257,59 @@ def _stream_turns(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _two_batch_stream(
+    spark: SparkSession,
+    batches: tuple[DataFrame, DataFrame],
+    schema: StructType,
+    build: Callable[[DataFrame], DataFrame],
+) -> DataFrame:
+    """Run a real two-micro-batch streaming query and return its output rows
+    as a batch DataFrame. Each of ``batches`` is staged as one parquet file
+    of a file source (``maxFilesPerTrigger=1``, so one micro-batch each);
+    ``build`` maps the stream (read with ``schema``) to the query's output,
+    which runs into a memory sink. The staging and checkpoint directory is
+    a fresh ``sdv_stream_*`` temporary directory and the query name is
+    unique to the run, so concurrent runs never share state; both are
+    removed once the rows are collected."""
+    root = tempfile.mkdtemp(prefix="sdv_stream_")
+    qname = f"sdv_stream_{uuid.uuid4().hex}"
+    try:
+        src = f"{root}/src"
+        os.makedirs(src)
+        now = None
+        for i, part in enumerate(batches):
+            stage = f"{root}/stage{i}"
+            part.coalesce(1).write.parquet(stage)
+            (pf,) = glob.glob(f"{stage}/part-*.parquet")
+            dst = f"{src}/batch{i}.parquet"
+            shutil.copyfile(pf, dst)
+            # the file source processes oldest-mtime first: pin batch order
+            # explicitly rather than trusting copy timestamps
+            if now is None:
+                now = os.path.getmtime(dst)
+            os.utime(dst, (now - 120 + 60 * i, now - 120 + 60 * i))
+        stream = (
+            spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(src)
+        )
+        out = build(stream)
+        q = (
+            out.writeStream.outputMode("append")
+            .format("memory")
+            .queryName(qname)
+            .option("checkpointLocation", f"{root}/ck")
+            .start()
+        )
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
+        rows = spark.table(qname).collect()
+        spark.catalog.dropTempView(qname)
+    finally:
+        shutil.rmtree(root, ignore_errors=True)
+    return spark.createDataFrame(rows, out.schema)
+
+
 def q_stream_dedup_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EAGER by necessity: real two-micro-batch streaming run of the
     first-seen-wins exact dedup (streaming.dedup_stream.stream_exact_dedup).
@@ -2256,50 +2317,15 @@ def q_stream_dedup_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     arrived in batch 0 must be flagged in batch 1 via carried state. The
     oracle replays the same decision in SQL: keeper = min (batch, doc_id)
     per normalized content."""
-    import glob
-    import hashlib
-    import os
-    import shutil
-
     from safedata_validator_spark.streaming.dedup_stream import stream_exact_dedup
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    tag = hashlib.sha256(sf_dir.encode()).hexdigest()[:8]
-    root = f"/tmp/sdv_stream_dedup_gate_{tag}"
-    shutil.rmtree(root, ignore_errors=True)
-    src = f"{root}/src"
-    os.makedirs(src)
-    now = None
-    for i, part in enumerate(
-        (docs.where(F.col("doc_id") % 2 == 0), docs.where(F.col("doc_id") % 2 == 1))
-    ):
-        stage = f"{root}/stage{i}"
-        part.coalesce(1).write.parquet(stage)
-        (pf,) = glob.glob(f"{stage}/part-*.parquet")
-        dst = f"{src}/batch{i}.parquet"
-        shutil.copyfile(pf, dst)
-        if now is None:
-            now = os.path.getmtime(dst)
-        os.utime(dst, (now - 120 + 60 * i, now - 120 + 60 * i))
-
-    stream = (
-        spark.readStream.schema(docs.schema).option("maxFilesPerTrigger", 1).parquet(src)
+    res = _two_batch_stream(
+        spark,
+        (docs.where(F.col("doc_id") % 2 == 0), docs.where(F.col("doc_id") % 2 == 1)),
+        docs.schema,
+        lambda stream: stream_exact_dedup(stream, "doc_id", "text"),
     )
-    out = stream_exact_dedup(stream, "doc_id", "text")
-    qname = "sdv_stream_dedup_gate"
-    q = (
-        out.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(qname)
-        .option("checkpointLocation", f"{root}/ck")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    rows = spark.table(qname).collect()
-    res = spark.createDataFrame(rows, out.schema)
     return res.select(F.col("id").alias("doc_id"), "is_dup", "keep_id")
 
 
@@ -2338,11 +2364,6 @@ def q_stream_drift_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     engine.drift.compare_histograms). The oracle replays everything in
     SQL, including the append-mode emission rule: only windows whose end
     <= max(ts) appear."""
-    import glob
-    import hashlib
-    import os
-    import shutil
-
     from safedata_validator_spark.engine.drift import histogram
     from safedata_validator_spark.streaming.drift_stream import (
         score_drift_windows,
@@ -2350,52 +2371,22 @@ def q_stream_drift_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     ev = _t(spark, sf_dir, "events").select("ts", "value")
-    tag = hashlib.sha256(sf_dir.encode()).hexdigest()[:8]
-    root = f"/tmp/sdv_stream_drift_gate_{tag}"
-    shutil.rmtree(root, ignore_errors=True)
-    src = f"{root}/src"
-    os.makedirs(src)
     split = F.lit(DRIFT_STREAM_SPLIT).cast("timestamp")
-    now = None
-    for i, part in enumerate(
-        (ev.where(F.col("ts") < split), ev.where(F.col("ts") >= split))
-    ):
-        stage = f"{root}/stage{i}"
-        part.coalesce(1).write.parquet(stage)
-        (pf,) = glob.glob(f"{stage}/part-*.parquet")
-        dst = f"{src}/batch{i}.parquet"
-        shutil.copyfile(pf, dst)
-        if now is None:
-            now = os.path.getmtime(dst)
-        os.utime(dst, (now - 120 + 60 * i, now - 120 + 60 * i))
-
-    stream = (
-        spark.readStream.schema(ev.schema).option("maxFilesPerTrigger", 1).parquet(src)
+    hist_df = _two_batch_stream(
+        spark,
+        (ev.where(F.col("ts") < split), ev.where(F.col("ts") >= split)),
+        ev.schema,
+        lambda stream: windowed_histogram(
+            stream,
+            "value",
+            DRIFT_STREAM_LO,
+            DRIFT_STREAM_HI,
+            DRIFT_STREAM_BINS,
+            ts_col="ts",
+            window_dur="1 day",
+            delay="0 seconds",
+        ),
     )
-    hist = windowed_histogram(
-        stream,
-        "value",
-        DRIFT_STREAM_LO,
-        DRIFT_STREAM_HI,
-        DRIFT_STREAM_BINS,
-        ts_col="ts",
-        window_dur="1 day",
-        delay="0 seconds",
-    )
-    qname = "sdv_stream_drift_gate"
-    q = (
-        hist.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(qname)
-        .option("checkpointLocation", f"{root}/ck")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    rows = spark.table(qname).collect()
-    hist_df = spark.createDataFrame(rows, hist.schema)
     base = histogram(
         ev, "value", DRIFT_STREAM_LO, DRIFT_STREAM_HI, DRIFT_STREAM_BINS
     ).select("bucket", "n")
@@ -2461,57 +2452,22 @@ def q_stream_sequence_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     emitted violations. Batch 1 = first 5 turns of every conversation,
     batch 2 = the rest — state (last idx/ts/role) must carry across the
     boundary for the result to equal the batch-SQL oracle."""
-    import glob
-    import hashlib
-    import os
-    import shutil
-
     from safedata_validator_spark.streaming.validate_stream import (
         stateful_sequence_violations,
     )
 
     turns = _stream_turns(spark, sf_dir)
-    tag = hashlib.sha256(sf_dir.encode()).hexdigest()[:8]
-    root = f"/tmp/sdv_stream_gate_{tag}"
-    shutil.rmtree(root, ignore_errors=True)
-    src = f"{root}/src"
-    os.makedirs(src)
-    now = None
-    for i, part in enumerate(
-        (turns.where(F.col("__seq") <= 5), turns.where(F.col("__seq") > 5))
-    ):
-        stage = f"{root}/stage{i}"
-        part.drop("__seq").coalesce(1).write.parquet(stage)
-        (pf,) = glob.glob(f"{stage}/part-*.parquet")
-        dst = f"{src}/batch{i}.parquet"
-        shutil.copyfile(pf, dst)
-        # the file source processes oldest-mtime first: pin batch order
-        # explicitly rather than trusting copy timestamps
-        if now is None:
-            now = os.path.getmtime(dst)
-        os.utime(dst, (now - 120 + 60 * i, now - 120 + 60 * i))
-
-    schema = turns.drop("__seq").schema
-    stream = (
-        spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(src)
+    res = _two_batch_stream(
+        spark,
+        (
+            turns.where(F.col("__seq") <= 5).drop("__seq"),
+            turns.where(F.col("__seq") > 5).drop("__seq"),
+        ),
+        turns.drop("__seq").schema,
+        lambda stream: stateful_sequence_violations(
+            stream, transitions=STREAM_TRANSITIONS, allowed_start=["user"]
+        ),
     )
-    out = stateful_sequence_violations(
-        stream, transitions=STREAM_TRANSITIONS, allowed_start=["user"]
-    )
-    qname = "sdv_stream_sequence_gate"
-    q = (
-        out.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(qname)
-        .option("checkpointLocation", f"{root}/ck")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    rows = spark.table(qname).collect()
-    res = spark.createDataFrame(rows, out.schema)
     return res.orderBy("conv_id", "turn_idx", "rule_id", "message")
 
 

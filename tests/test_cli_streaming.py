@@ -367,3 +367,30 @@ def test_windowed_histogram_drift_across_batches(spark, tmp_path):
     # the 10:00 window (mass in under/overflow) must show positive drift
     d = scored["2024-01-01 10:00:00"]
     assert d["psi"] > 0.1 and d["ks"] > 0.1
+
+
+def test_stream_gate_removes_its_staging_directory(spark, monkeypatch):
+    """A catalog stream gate stages its micro-batches and checkpoint in a
+    temporary ``sdv_stream_*`` directory of its own and removes it once the
+    rows are collected; the memory sink's view goes with it."""
+    import os
+    import tempfile
+
+    from safedata_validator_spark.queries import q_stream_dedup_events
+
+    made = []
+    mkdtemp = tempfile.mkdtemp
+
+    def spy(*args, **kwargs):
+        path = mkdtemp(*args, **kwargs)
+        if os.path.basename(path).startswith("sdv_stream_"):
+            made.append(path)
+        return path
+
+    monkeypatch.setattr(tempfile, "mkdtemp", spy)
+    rows = q_stream_dedup_events(spark, "/root/testdata/sf0.001").collect()
+    assert rows
+    assert made
+    assert not [p for p in made if os.path.exists(p)]
+    views = [t.name for t in spark.catalog.listTables() if t.name.startswith("sdv_stream")]
+    assert views == []

@@ -169,13 +169,15 @@ def test_scoped_verdicts(spark, bad, dims):
     assert hard["2019-06"] == 1 and hard["2024-01"] == 0
 
 
-def test_localize_fallback_keeps_exact_counts(spark, bad, dims):
-    """When a shared aggregate exceeds localize_cap the engine falls back to
+def test_localize_fallback_keeps_exact_counts(spark, bad, dims, monkeypatch):
+    """When a shared aggregate exceeds LOCALIZE_ROWS the engine falls back to
     a persisted distributed plan (and skips the hash-sum sequence screen,
     which needs the driver-local max) — violation counts must be identical."""
-    eng = ValidationEngine()
-    eng.localize_cap = 0  # force the distributed fallback for every aggregate
-    res = eng.validate(bad, transcript_ruleset(), dims, with_stats=False)
+    from safedata_validator_spark.engine import validator
+
+    # force the distributed fallback for every aggregate
+    monkeypatch.setattr(validator, "LOCALIZE_ROWS", 0)
+    res = ENGINE.validate(bad, transcript_ruleset(), dims, with_stats=False)
     counts = {
         r["rule_id"]: r["n"]
         for r in res.violations.groupBy("rule_id").agg(F.count("*").alias("n")).collect()

@@ -2,7 +2,8 @@
 LocalRelations. A table built from Python rows with ``createDataFrame``
 plans a ``Scan ExistingRDD`` over a PythonRDD, so every job reading it runs
 Python-worker tasks; these tests pin that the helper's tables are exact
-copies of their rows and plan as ``LocalTableScan`` only."""
+copies of their rows and plan as ``LocalTableScan`` only, and that
+``common.localize`` keeps a result local exactly when its caps allow."""
 
 from __future__ import annotations
 
@@ -10,9 +11,8 @@ import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from safedata_validator_spark.engine import ordering
-from safedata_validator_spark.engine.common import local_table
-from safedata_validator_spark.engine.validator import ValidationEngine
+from safedata_validator_spark.engine import ordering, validator
+from safedata_validator_spark.engine.common import _row_width, local_table, localize
 
 #: strings a quoting bug would mangle: quotes, backticks, backslashes,
 #: unicode (astral plane included) and an embedded newline
@@ -108,7 +108,7 @@ def test_localize_local_path_reads_rows_without_jobs(spark):
 
     df = transcripts_good(spark, n_convs=6, mean_turns=5, hot_factor=2)
     agg = df.groupBy("role").agg(F.count("*").alias("n"), F.max("turn_idx").alias("mx"))
-    local, is_local = ValidationEngine()._localize(agg)
+    local, is_local = localize(agg, validator.LOCALIZE_ROWS, validator.LOCALIZE_BYTES)
     assert is_local
     tracker = spark.sparkContext.statusTracker()
     before = len(tracker.getJobIdsForGroup(None))
@@ -117,6 +117,35 @@ def test_localize_local_path_reads_rows_without_jobs(spark):
     assert len(tracker.getJobIdsForGroup(None)) == before
     assert sorted(rows) == sorted(agg.collect())
     assert sorted(r["mx"] for r in maxima) == sorted(r["mx"] for r in rows)
+
+
+@pytest.mark.parametrize(
+    "max_rows, max_bytes_in_rows, fits",
+    [
+        (10, None, True),  # exactly at the row cap
+        (9, None, False),  # one row over the row cap
+        (100, 10, True),  # room for every row within the byte cap
+        (100, 5, False),  # the byte cap allows fewer rows than the frame holds
+    ],
+)
+def test_localize_row_and_byte_caps(spark, max_rows, max_bytes_in_rows, fits):
+    """A 10-row frame with an array column stays on the driver exactly when
+    both caps allow 10 rows; otherwise its persisted plan comes back."""
+    df = spark.range(10).select("id", F.array("id", F.lit(0)).alias("arr"))
+    max_bytes = None
+    if max_bytes_in_rows is not None:
+        max_bytes = max_bytes_in_rows * _row_width(df.schema)
+    table, is_local = localize(df, max_rows, max_bytes)
+    try:
+        assert is_local == fits
+        if fits:
+            assert _physical(table).startswith("LocalTableScan"), _physical(table)
+        else:
+            plan = table._jdf.queryExecution().optimizedPlan().toString()
+            assert "InMemoryRelation" in plan, plan
+        assert sorted(map(tuple, table.collect())) == [(i, [i, 0]) for i in range(10)]
+    finally:
+        table.unpersist()
 
 
 def test_hash_prefix_chunked_path_matches_single_window(spark, monkeypatch):

@@ -491,3 +491,32 @@ def test_spread_guard_follows_file_split_settings(spark):
     finally:
         for k, v in zip(keys, saved):
             spark.conf.set(k, v)
+
+
+def test_spread_guard_rereads_a_rewritten_table(spark, tmp_path):
+    """The cached schema and split count belong to the files they were read
+    from: a table rewritten at the same path with a different file count is
+    planned against its new split count."""
+    from safedata_validator_spark.queries import _t
+
+    n = spark.sparkContext.defaultParallelism
+    path = str(tmp_path / "t.parquet")
+    # about 1.3 MB of hex digests: over the guard's 128 KB threshold
+    src = spark.range(40_000).select(
+        "id", F.sha2(F.col("id").cast("string"), 256).alias("h")
+    )
+    keys = ("spark.sql.files.maxPartitionBytes", "spark.sql.files.openCostInBytes")
+    saved = [spark.conf.get(k) for k in keys]
+    try:
+        spark.conf.set(keys[0], str(128 * 1024 * 1024))
+        spark.conf.set(keys[1], str(4 * 1024 * 1024))
+        src.repartition(n).write.parquet(path)
+        first = _t(spark, str(tmp_path), "t", spread=True)
+        assert first.rdd.getNumPartitions() >= n
+        assert "Exchange" not in _physical(first)
+        src.coalesce(1).write.mode("overwrite").parquet(path)
+        second = _t(spark, str(tmp_path), "t", spread=True)
+        assert "hashpartitioning" in _physical(second)
+    finally:
+        for k, v in zip(keys, saved):
+            spark.conf.set(k, v)
