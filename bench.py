@@ -130,7 +130,7 @@ SCALING = {
     "validate": (40_000_000, "1,2,4,8,32", "1-4,2-8,8-32", ""),
     "dedup": (10_000_000, "1,2,4,8,32", "1-4,2-8,8-32", "minhash,curate"),
     "cc": (10_000_000, "1,2,4,8", "1-4,2-8", "cc"),
-    "hygiene": (1_000_000, "1,2,4,8", "1-4,2-8", "url,pii,repetition,bpe"),
+    "hygiene": (1_000_000, "1,2,4,8", "1-4,2-8", "url,pii,repetition"),
 }
 
 #: standalone-cluster defaults per family: input rows, levels, pairs, jobs,
@@ -702,14 +702,6 @@ def _repetition(d) -> None:
     _sink(repetition.repetition_profile(d, "doc_id", "text"))
 
 
-def _bpe(d) -> None:
-    from pyspark.sql import functions as F
-
-    from safedata_validator_spark.functions.bpe import bpe_count
-
-    _sink(d.select("doc_id", bpe_count(F.col("text")).alias("n_tok")))
-
-
 def _spans(d) -> None:
     # not row-local (window-hash groupBy + position re-join); n=8 so the
     # ~20-token docs carry ~13 windows each
@@ -766,7 +758,7 @@ FAMILIES = {
         {},
         _hygiene_documents,
         {
-            "url": _url, "pii": _pii, "repetition": _repetition, "bpe": _bpe,
+            "url": _url, "pii": _pii, "repetition": _repetition,
             "spans": _spans, "lm": _lm, "dspans": _dspans,
         },
         20_000,

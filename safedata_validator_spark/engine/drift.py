@@ -14,7 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from safedata_validator_spark.engine.common import as_violations
+from safedata_validator_spark.engine.common import as_violations, sql_ident
 from safedata_validator_spark.rules.model import Rule
 
 EPS = 1e-6
@@ -83,7 +83,7 @@ def compare_histograms(cur: DataFrame, base: DataFrame) -> DataFrame:
 def eval_drift(df: DataFrame, rule: Rule, ruleset, dims) -> DataFrame:
     """Drift rule. params:
       expr        — numeric SQL expression over the fact table
-                    (default: the rule column itself)
+                    (default: the rule column itself, quoted)
       lo, hi, bins — histogram domain
       split       — SQL boolean: rows where TRUE are 'current', FALSE are
                     'baseline' (drift between two cohorts of one table), OR
@@ -91,7 +91,8 @@ def eval_drift(df: DataFrame, rule: Rule, ruleset, dims) -> DataFrame:
                     (scope, bucket, n) histogram from a previous snapshot
       psi_threshold / ks_threshold — violation if exceeded
     """
-    expr = rule.params.get("expr", rule.column)
+    label = rule.params.get("expr", rule.column)
+    expr = rule.params.get("expr", sql_ident(rule.column))
     lo, hi = float(rule.params["lo"]), float(rule.params["hi"])
     bins = int(rule.params.get("bins", 20))
     psi_t = rule.params.get("psi_threshold")
@@ -114,7 +115,7 @@ def eval_drift(df: DataFrame, rule: Rule, ruleset, dims) -> DataFrame:
         breach = breach | (F.col("ks") > float(ks_t))
     bad = stats.where(breach)
     msg = F.concat(
-        F.lit(f"drift on {expr}: psi="),
+        F.lit(f"drift on {label}: psi="),
         F.round("psi", 4).cast("string"),
         F.lit(" ks="),
         F.round("ks", 4).cast("string"),

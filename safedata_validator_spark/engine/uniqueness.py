@@ -15,7 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from safedata_validator_spark.engine.common import as_violations
+from safedata_validator_spark.engine.common import as_violations, entity_col, sql_ident
 from safedata_validator_spark.rules.model import Rule
 
 
@@ -25,14 +25,11 @@ def unique_from_counts(counts: DataFrame, rule: Rule, keys: list[str]) -> DataFr
     (group, order) reads that rule's ``ordering.key_counts``; any other key
     set counts its own (``eval_unique_key``)."""
     dupes = counts.where(F.col("__dup_n") > 1)
-    entity = F.concat_ws(
-        "/", *[F.concat(F.lit(f"{k}="), F.coalesce(F.col(k).cast("string"), F.lit("∅"))) for k in keys]
-    )
     return as_violations(
         dupes,
         rule,
         scope=F.col("__scope"),
-        entity=entity,
+        entity=entity_col(keys),
         value=F.col("__dup_n"),
         message=F.concat(F.lit("duplicate key: "), F.col("__dup_n").cast("string"), F.lit(" occurrences")),
         column=",".join(keys),
@@ -42,7 +39,7 @@ def unique_from_counts(counts: DataFrame, rule: Rule, keys: list[str]) -> DataFr
 def eval_unique_key(df: DataFrame, rule: Rule, ruleset, dims) -> DataFrame:
     """params: keys: list[str] (defaults to ruleset.key_cols)."""
     keys = list(rule.params.get("keys", ruleset.key_cols))
-    counts = df.groupBy(*[F.col(k) for k in keys], F.expr(ruleset.scope).alias("__scope")).agg(
+    counts = df.groupBy(*[F.col(sql_ident(k)) for k in keys], F.expr(ruleset.scope).alias("__scope")).agg(
         F.count(F.lit(1)).alias("__dup_n")
     )
     return unique_from_counts(counts, rule, keys)

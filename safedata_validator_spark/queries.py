@@ -1453,87 +1453,40 @@ GROUP BY d.source
 SQL_MIXTURE_RESAMPLE_DOCS = _sql_mixture_resample()
 
 
-#: token budget for the exact-BPE packing branch (docs here average ~50 BPE
-#: tokens, so ~6 docs share a training sequence — the interesting regime)
-PACK_BUDGET_TOKENS = 300
-
-
-def _pack_rollup(packed: DataFrame, size_col: str, basis: str) -> DataFrame:
-    return (
-        packed.groupBy("source", "seq_id")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_docs"),
-            F.sum(size_col).cast("bigint").alias("seq_units"),
-            F.min("start_offset").alias("first_offset"),
-        )
-        .select(F.lit(basis).alias("size_basis"), "*")
-    )
-
-
-def q_pack_sequences_chars_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
+def q_pack_sequences_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Concat-and-chunk sequence packing (functions.sampling.pack_sequences):
     docs laid head-to-tail per source in doc_id order, cut into
     {PACK_BUDGET}-char sequences; rolled up per (source, seq_id). The
     running-sum window is bounded by the source partition — no global
-    sort. Chars-only branch, kept under the r2-r4 bench name so the
-    curation-suite composition stays comparable round-over-round."""
+    sort."""
     from safedata_validator_spark.functions import sampling as sp
 
     d = _t(spark, sf_dir, "documents")
     packed = sp.pack_sequences(d, "doc_id", "n_chars", PACK_BUDGET, part_cols=("source",))
-    return _pack_rollup(packed, "n_chars", "chars")
-
-
-def q_pack_sequences_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sequence packing on BOTH size feeds, discriminated by ``size_basis``:
-    the cheap ``n_chars`` column ('chars', budget {PACK_BUDGET}) and the
-    EXACT byte-level-BPE token count ('bpe', budget {PACK_BUDGET_TOKENS},
-    functions.bpe.bpe_count — the count a trainer would bill against,
-    VERDICT r04 §next 6). Both branches are the same partition-bounded
-    running-sum window; the BPE feed adds one zero-shuffle Arrow-batched
-    projection. Oracle: the packing arithmetic runs live in DuckDB SQL,
-    with only the non-SQL-expressible per-doc token counts pinned as a
-    VALUES table (independently cross-checked by the token_count_docs
-    golden + tools/purepy_ref.py)."""
-    from safedata_validator_spark.functions import bpe, sampling as sp
-
-    d = _t(spark, sf_dir, "documents")
-    chars = sp.pack_sequences(d, "doc_id", "n_chars", PACK_BUDGET, part_cols=("source",))
-    dt = d.select("source", "doc_id", bpe.bpe_count(F.col("text")).alias("n_bpe"))
-    tok = sp.pack_sequences(dt, "doc_id", "n_bpe", PACK_BUDGET_TOKENS, part_cols=("source",))
-    return _pack_rollup(chars, "n_chars", "chars").unionByName(
-        _pack_rollup(tok, "n_bpe", "bpe")
+    return (
+        packed.groupBy("source", "seq_id")
+        .agg(
+            F.count(F.lit(1)).cast("bigint").alias("n_docs"),
+            F.sum("n_chars").cast("bigint").alias("seq_units"),
+            F.min("start_offset").alias("first_offset"),
+        )
+        .select(F.lit("chars").alias("size_basis"), "*")
     )
 
 
-def sql_pack_sequences_docs(tok_values_sql: str) -> str:
-    """DuckDB oracle for q_pack_sequences_docs, composed by
-    tools/gen_golden_oracles.py: ``tok_values_sql`` is a pinned VALUES table
-    (doc_id, n_bpe_tokens) from the independent purepy BPE — everything
-    else (both packing branches, the rollup) is computed live by DuckDB."""
-    return f"""
-WITH tok AS ({tok_values_sql}),
-base AS (
-  SELECT d.source, CAST(d.doc_id AS BIGINT) AS doc_id,
-         CAST(d.n_chars AS BIGINT) AS n_chars, CAST(t.n_bpe_tokens AS BIGINT) AS n_bpe
-  FROM documents d JOIN tok t ON t.doc_id = d.doc_id
-), u AS (
-  SELECT 'chars' AS size_basis, source, doc_id, n_chars AS sz,
-         {PACK_BUDGET} AS budget FROM base
-  UNION ALL
-  SELECT 'bpe', source, doc_id, n_bpe, {PACK_BUDGET_TOKENS} FROM base
-), offs AS (
-  SELECT size_basis, source, doc_id, sz, budget,
-         CAST(sum(sz) OVER (PARTITION BY size_basis, source ORDER BY doc_id
-              ROWS UNBOUNDED PRECEDING) - sz AS BIGINT) AS start_offset
-  FROM u
+SQL_PACK_SEQUENCES_DOCS = f"""
+WITH offs AS (
+  SELECT source, CAST(doc_id AS BIGINT) AS doc_id, CAST(n_chars AS BIGINT) AS sz,
+         CAST(sum(n_chars) OVER (PARTITION BY source ORDER BY doc_id
+              ROWS UNBOUNDED PRECEDING) - n_chars AS BIGINT) AS start_offset
+  FROM documents
 )
-SELECT size_basis, source,
-       CAST(floor(start_offset / (budget * 1.0)) AS BIGINT) AS seq_id,
+SELECT 'chars' AS size_basis, source,
+       CAST(floor(start_offset / ({PACK_BUDGET} * 1.0)) AS BIGINT) AS seq_id,
        CAST(count(*) AS BIGINT) AS n_docs,
        CAST(sum(sz) AS BIGINT) AS seq_units,
        min(start_offset) AS first_offset
-FROM offs GROUP BY size_basis, source, seq_id
+FROM offs GROUP BY source, seq_id
 """
 
 
@@ -1731,17 +1684,6 @@ LEFT JOIN g3s ON g3s.doc_id = l.doc_id
 
 
 SQL_REPETITION_DOCS = _sql_repetition()
-
-
-def q_token_count_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Tokenizer-accurate byte-level BPE token counts per document (pinned
-    merges table, functions/bpe_vocab.py) next to the cheap regex estimate.
-    Golden VALUES oracle: the independent rank-order BPE formulation in
-    tools/purepy_ref.py (DuckDB cannot express iterative pair merging)."""
-    from safedata_validator_spark.functions.bpe import token_count_exact
-
-    d = _t(spark, sf_dir, "documents", spread=True)
-    return token_count_exact(d, "doc_id", "text")
 
 
 #: window length for the cross-document span-dedup / surgical-decon gates
@@ -3052,6 +2994,107 @@ FROM agg
 """
 
 
+#: engine_drift_keys_lineitem plants: the return flag whose even orders have
+#: their price scaled (PSI there is about 2.5 at every scale, the other
+#: flags stay under 0.05), and the order stride whose line 2 folds onto
+#: line 1. The synthetic l_linenumber is drawn at random, so
+#: (l_orderkey, l_linenumber) already repeats; the fold adds more repeats.
+ENGINE_DRIFT_SCOPE = "R"
+ENGINE_DRIFT_SCALE = 1.25
+ENGINE_DRIFT_THRESHOLDS = {"psi_threshold": 0.25, "ks_threshold": 0.1}
+ENGINE_DUP_LINE_MOD = 19
+
+
+def q_engine_drift_keys_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """drift with a cohort split and unique_key on keys no sequential rule
+    shares (eval_unique_key's own count) through validate(), scoped by
+    l_returnflag: even orders are the current cohort, odd orders the
+    baseline, and the even orders of ENGINE_DRIFT_SCOPE are priced
+    ENGINE_DRIFT_SCALE times higher; line_key folds line 2 onto line 1 at
+    l_orderkey % ENGINE_DUP_LINE_MOD, a duplicate wherever both lines
+    share a flag."""
+    li = _t(spark, sf_dir, "lineitem")
+    k, price = F.col("l_orderkey"), F.col("l_extendedprice").cast("double")
+    df = li.select(
+        "l_orderkey",
+        F.when((k % ENGINE_DUP_LINE_MOD == 0) & (F.col("l_linenumber") == 2), 1)
+        .otherwise(F.col("l_linenumber"))
+        .alias("line_key"),
+        "l_returnflag",
+        F.when(
+            (F.col("l_returnflag") == ENGINE_DRIFT_SCOPE) & (k % 2 == 0),
+            price * ENGINE_DRIFT_SCALE,
+        )
+        .otherwise(price)
+        .alias("price"),
+    )
+    rs = RuleSet(
+        name="engine.drift_keys",
+        key_cols=["l_orderkey", "line_key"],
+        scope="l_returnflag",
+        rules=[
+            Rule("price.drift", "drift", column="price",
+                 params={"lo": PSI_LO, "hi": PSI_HI, "bins": PSI_BINS,
+                         "split": "l_orderkey % 2 = 0", **ENGINE_DRIFT_THRESHOLDS}),
+            Rule("line.unique", "unique_key", params={"keys": ["l_orderkey", "line_key"]}),
+        ],
+    )
+    return ValidationEngine().validate(df, rs, with_stats=False).violations
+
+
+SQL_ENGINE_DRIFT_KEYS_LINEITEM = f"""
+WITH f AS (
+  SELECT l_orderkey, l_returnflag AS scope, l_orderkey % 2 = 0 AS cur,
+         CASE WHEN l_orderkey % {ENGINE_DUP_LINE_MOD} = 0 AND l_linenumber = 2 THEN 1
+              ELSE l_linenumber END AS line_key,
+         CASE WHEN l_returnflag = '{ENGINE_DRIFT_SCOPE}' AND l_orderkey % 2 = 0
+              THEN CAST(l_extendedprice AS DOUBLE) * {ENGINE_DRIFT_SCALE}
+              ELSE CAST(l_extendedprice AS DOUBLE) END AS price
+  FROM lineitem
+), hist AS (
+  -- Spark's width_bucket: 0 below lo, bins + 1 at or above hi, NULLs dropped
+  SELECT scope, cur,
+         CASE WHEN price < {PSI_LO} THEN 0
+              WHEN price >= {PSI_HI} THEN {PSI_BINS + 1}
+              ELSE CAST(floor({PSI_BINS} * (price - {PSI_LO}) / {PSI_HI - PSI_LO}) AS BIGINT) + 1
+         END AS bucket,
+         count(*) AS n
+  FROM f WHERE price IS NOT NULL GROUP BY ALL
+), p AS (
+  SELECT scope, cur, bucket, n / sum(n) OVER (PARTITION BY scope, cur) AS p FROM hist
+), joined AS (
+  SELECT coalesce(c.scope, b.scope) AS scope, coalesce(c.bucket, b.bucket) AS bucket,
+         coalesce(c.p, 0.0) AS p_cur, coalesce(b.p, 0.0) AS p_base
+  FROM (SELECT * FROM p WHERE cur) c
+  FULL OUTER JOIN (SELECT * FROM p WHERE NOT cur) b USING (scope, bucket)
+), cdf AS (
+  SELECT scope, p_cur, p_base, sum(p_cur) OVER w AS cdf_cur, sum(p_base) OVER w AS cdf_base
+  FROM joined
+  WINDOW w AS (PARTITION BY scope ORDER BY bucket ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+), stats AS (
+  SELECT scope, sum((p_cur - p_base) * ln((p_cur + 1e-6) / (p_base + 1e-6))) AS psi,
+         max(abs(cdf_cur - cdf_base)) AS ks
+  FROM cdf GROUP BY scope
+), dup AS (
+  SELECT l_orderkey, line_key, scope, count(*) AS n FROM f GROUP BY ALL
+)
+SELECT 'price.drift' AS rule_id, 'ERROR' AS severity, scope,
+       'scope=' || scope AS entity, 'price' AS "column",
+       CAST(round(psi, 6) AS VARCHAR) AS value,
+       'drift on price: psi=' || CAST(round(psi, 4) AS VARCHAR)
+         || ' ks=' || CAST(round(ks, 4) AS VARCHAR)
+         || ' (thresholds psi>{ENGINE_DRIFT_THRESHOLDS["psi_threshold"]}, '
+         || 'ks>{ENGINE_DRIFT_THRESHOLDS["ks_threshold"]})' AS message
+FROM stats
+WHERE psi > {ENGINE_DRIFT_THRESHOLDS["psi_threshold"]} OR ks > {ENGINE_DRIFT_THRESHOLDS["ks_threshold"]}
+UNION ALL
+SELECT 'line.unique', 'ERROR', scope,
+       'l_orderkey=' || l_orderkey || '/line_key=' || line_key,
+       'l_orderkey,line_key', CAST(n AS VARCHAR), 'duplicate key: ' || n || ' occurrences'
+FROM dup WHERE n > 1
+"""
+
+
 QUERIES = {
     "profile_lineitem": q_profile_lineitem,
     "unique_key_orders": q_unique_key_orders,
@@ -3097,14 +3140,13 @@ QUERIES = {
     "engine_categorical_events": q_engine_categorical_events,
     "engine_row_rules_customer": q_engine_row_rules_customer,
     "engine_verdicts_orders": q_engine_verdicts_orders,
+    "engine_drift_keys_lineitem": q_engine_drift_keys_lineitem,
     # stateful streaming == batch SQL (two real micro-batches, carried state)
     "stream_dedup_events": q_stream_dedup_events,
     "stream_sequence_events": q_stream_sequence_events,
     "stream_drift_events": q_stream_drift_events,
     # live recall vs the exact top-k; only the floor is pinned
     "ann_recall": q_ann_recall,
-    # pinned golden VALUES oracle (independent purepy_ref BPE)
-    "token_count_docs": q_token_count_docs,
     # rows-only (non-SQL-expressible: hash-seeded signatures / engine-native)
     "minhash_lsh_docs": q_minhash_lsh_docs,
     "simhash_docs": q_simhash_docs,
@@ -3126,9 +3168,6 @@ BENCH_QUERIES = {
     "sessionize_events": q_sessionize_events,
     "lsh_ann_topk": q_lsh_ann_topk,
     "ivf_ann_topk": q_ivf_ann_topk,
-    # chars-only packing under the r2-r4 name so the timed curation-suite
-    # composition stays comparable (the catalog entry now adds a BPE branch)
-    "pack_sequences_docs": q_pack_sequences_chars_docs,
 }
 
 ORACLES = {
@@ -3141,8 +3180,7 @@ ORACLES = {
     "dedup_clusters_docs": SQL_DEDUP_CLUSTERS_DOCS,
     "repetition_docs": SQL_REPETITION_DOCS,
     "mixture_resample_docs": SQL_MIXTURE_RESAMPLE_DOCS,
-    # pack_sequences_docs: composed golden oracle (live DuckDB packing SQL
-    # over pinned per-doc BPE token counts) — merged in via GOLDEN_ORACLES
+    "pack_sequences_docs": SQL_PACK_SEQUENCES_DOCS,
     "curate_corpus_cluster": SQL_CURATE_CORPUS_CLUSTER,
     "url_audit_docs": SQL_URL_AUDIT_DOCS,
     "profile_lineitem": SQL_PROFILE_LINEITEM,
@@ -3172,6 +3210,7 @@ ORACLES = {
     "engine_categorical_events": SQL_ENGINE_CATEGORICAL_EVENTS,
     "engine_row_rules_customer": SQL_ENGINE_ROW_RULES_CUSTOMER,
     "engine_verdicts_orders": SQL_ENGINE_VERDICTS_ORDERS,
+    "engine_drift_keys_lineitem": SQL_ENGINE_DRIFT_KEYS_LINEITEM,
     "stream_sequence_events": SQL_STREAM_SEQUENCE_EVENTS,
     "stream_dedup_events": SQL_STREAM_DEDUP_EVENTS,
     "stream_drift_events": SQL_STREAM_DRIFT_EVENTS,

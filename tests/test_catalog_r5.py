@@ -4,16 +4,18 @@ The 50-entry driver catalog traded three relational extras
 (pricing_summary, top_revenue_orders, sessionize_events — all reachable
 via BENCH_QUERIES and still timed by bench.py's fixed HEADLINE list) for
 driver-visible rows on the round-5 training-hygiene ops (span_dedup_docs,
-decon_spans_docs, lm_quality_docs); the five media-codec slots later went
-to engine-level gates (engine_*: validate() over sf-derived tables).
-Nothing may lose its oracle gate in a swap:
+decon_spans_docs, lm_quality_docs); the five media-codec slots and the
+BPE token-count slot later went to engine-level gates (engine_*:
+validate() over sf-derived tables), and pack_sequences_docs swapped its
+pinned oracle for live DuckDB SQL. Nothing may lose its oracle gate in a
+swap:
 
 * the DISPLACED queries keep a full Spark-vs-DuckDB value gate HERE
   (the same row-count + columns + order-insensitive-values compare the
   driver runs, via tools/oracle_parity._canon);
 * the NEW catalog entries get the same compare at sf0.001 plus a DuckDB
-  dtype parity pin (the round-4 token_count_docs lesson: a value-correct
-  oracle can still hash-fail on an emitted type).
+  dtype parity pin (a value-correct oracle can still hash-fail on an
+  emitted type).
 """
 
 from __future__ import annotations
@@ -40,6 +42,9 @@ NEW_ENTRIES = [
     "engine_categorical_events",
     "engine_row_rules_customer",
     "engine_verdicts_orders",
+    "engine_drift_keys_lineitem",
+    # chars-only packing against a live DuckDB oracle, valid at every scale
+    "pack_sequences_docs",
 ]
 
 

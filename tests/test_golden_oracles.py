@@ -108,21 +108,13 @@ def test_golden_oracle_dtypes_match_spark_schema(spark):
     from safedata_validator_spark.golden_oracles import GOLDEN_ORACLES
     from safedata_validator_spark.queries import QUERIES
 
-    import duckdb
-
     sf_dir = "/root/testdata/sf0.001"
     if not os.path.isdir(sf_dir):
         pytest.skip("testdata not present")
-    # composed goldens (pack_sequences_docs) reference the documents table;
-    # dtype resolution is lazy, so any scale's parquet works here
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW documents AS SELECT * FROM read_parquet('{sf_dir}/documents.parquet')"
-    )
     problems = {}
     for name, sql in GOLDEN_ORACLES.items():
         assert name in QUERIES, f"golden {name} has no catalog query"
-        probs = dtype_mismatches(QUERIES[name](spark, sf_dir).schema, sql, con)
+        probs = dtype_mismatches(QUERIES[name](spark, sf_dir).schema, sql)
         if probs:
             problems[name] = probs
     assert not problems, problems

@@ -253,6 +253,7 @@ EAGER_BY_DESIGN = {
     "engine_categorical_events",
     "engine_row_rules_customer",
     "engine_verdicts_orders",
+    "engine_drift_keys_lineitem",
     "hierarchy_closure",
     "hierarchy_congruence_events",
     "ann_topk",

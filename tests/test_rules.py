@@ -374,3 +374,74 @@ def test_row_rules_quote_hostile_column_names(spark):
     }
     assert got == want
     assert {g[0] for g in got} == set(preds)
+
+
+def test_unique_key_quotes_hostile_key_names(spark):
+    """unique_key on keys no sequential rule shares counts its own keys by
+    quoted identifier: names holding a dot, a backtick and unicode find the
+    duplicates the Column API finds over a plain-named copy."""
+    from pyspark.sql import types as T
+
+    key, grp = "k.ü`y", "g.h"
+    schema = T.StructType(
+        [T.StructField(key, T.IntegerType()), T.StructField(grp, T.StringType())]
+    )
+    data = [(1, "a"), (1, "a"), (1, "b"), (2, None), (2, None), (2, None), (None, "c"), (None, "c")]
+    rule = Rule("u", "unique_key", params={"keys": [key, grp]})
+    got = {
+        (v["entity"], v["column"], v["value"])
+        for v in _viols(spark, data, schema, rule, key_cols=[key])
+    }
+
+    plain = spark.createDataFrame(data, schema).toDF("k", "g")
+    want = {
+        (
+            f"{key}={'∅' if r['k'] is None else r['k']}/{grp}={'∅' if r['g'] is None else r['g']}",
+            f"{key},{grp}",
+            str(r["count"]),
+        )
+        for r in plain.groupBy("k", "g").count().where(F.col("count") > 1).collect()
+    }
+    assert got == want
+    assert len(got) == 3
+
+
+def test_drift_quotes_hostile_column_name(spark):
+    """drift's default value expression is the rule column as a quoted
+    identifier: a name holding a dot, backticks and unicode gives the
+    statistics, scopes and message of a plain-named copy."""
+    from pyspark.sql import types as T
+
+    name = "p.`ü`"
+    schema = T.StructType(
+        [
+            T.StructField("id", T.IntegerType()),
+            T.StructField("grp", T.StringType()),
+            T.StructField(name, T.DoubleType()),
+        ]
+    )
+    # grp 'a': the even rows sit two buckets higher (drift); grp 'b': the
+    # same values in both cohorts (no drift)
+    data = [
+        (i, g, float(i % 5 + (2 if g == "a" and i % 2 == 0 else 0)))
+        for i in range(60)
+        for g in ("a", "b")
+    ]
+    params = {"lo": 0.0, "hi": 8.0, "bins": 8, "split": "id % 2 = 0", "psi_threshold": 0.5}
+
+    def run(df, column):
+        rs = RuleSet(name="t", key_cols=["id"], scope="grp",
+                     rules=[Rule("d", "drift", column=column, params=params)])
+        return {
+            (v["scope"], v["entity"], v["column"], v["value"], v["message"])
+            for v in ENGINE.validate(df, rs, with_stats=False).violations.collect()
+        }
+
+    df = spark.createDataFrame(data, schema)
+    got = run(df, name)
+    plain = run(df.toDF("id", "grp", "p"), "p")
+    assert got == {
+        (s, e, name, v, m.replace("drift on p:", f"drift on {name}:"))
+        for s, e, _, v, m in plain
+    }
+    assert {g[0] for g in got} == {"a"}

@@ -144,77 +144,12 @@ def main() -> int:
             ("rank", "INTEGER"),
         ],
     )
-    from safedata_validator_spark.functions.bpe_vocab import MERGES
-
-    expected["token_count_docs"] = (
-        ref.bpe_token_counts(docs, MERGES),
-        [
-            ("doc_id", "BIGINT"),
-            ("n_bpe_tokens", "INTEGER"),
-            ("n_regex_tokens", "INTEGER"),
-        ],
-    )
-    # ---- composed goldens: live DuckDB SQL over a pinned VALUES feed ----
-    # pack_sequences_docs packs on BOTH n_chars and the exact BPE count;
-    # only the non-SQL-expressible per-doc token counts are pinned — the
-    # packing arithmetic itself runs live in DuckDB (stronger than a full
-    # VALUES pin, same as the independent-cross-check bar).
-    from safedata_validator_spark.queries import (
-        PACK_BUDGET,
-        PACK_BUDGET_TOKENS,
-        sql_pack_sequences_docs,
-    )
-
-    tok_rows = expected["token_count_docs"][0]
-    tok_sql = values_sql(
-        [(d, b) for d, b, _ in tok_rows],
-        [("doc_id", "BIGINT"), ("n_bpe_tokens", "INTEGER")],
-    )
-    n_bpe = {d: b for d, b, _ in tok_rows}
-    doc_meta = list(
-        zip(
-            docs_tbl["doc_id"].to_pylist(),
-            docs_tbl["source"].to_pylist(),
-            docs_tbl["n_chars"].to_pylist(),
-        )
-    )
-
-    def pack_rollup_py() -> list[tuple]:
-        out = []
-        for basis, budget, size_of in (
-            ("chars", PACK_BUDGET, lambda r: r[2]),
-            ("bpe", PACK_BUDGET_TOKENS, lambda r: n_bpe[r[0]]),
-        ):
-            by_src: dict[str, list] = {}
-            for r in doc_meta:
-                by_src.setdefault(r[1], []).append(r)
-            for src, rows in by_src.items():
-                rows = sorted(rows, key=lambda r: r[0])
-                off = 0
-                seqs: dict[int, list] = {}
-                for r in rows:
-                    sz = size_of(r)
-                    ent = seqs.setdefault(off // budget, [0, 0, off])
-                    ent[0] += 1
-                    ent[1] += sz
-                    off += sz
-                out += [
-                    (basis, src, seq, nd, su, fo)
-                    for seq, (nd, su, fo) in seqs.items()
-                ]
-        return out
-
-    composed = {
-        "pack_sequences_docs": (pack_rollup_py(), sql_pack_sequences_docs(tok_sql))
-    }
-
     # ---- cross-check against the live Spark queries -------------------
     from safedata_validator_spark.queries import QUERIES
     from safedata_validator_spark.session import build_session
 
     spark = build_session(master="local[8]", shuffle_partitions=8)
     emitted = {name: (rows, values_sql(rows, cols)) for name, (rows, cols) in expected.items()}
-    emitted.update(composed)
     mismatch = False
     for name, (rows, sql) in emitted.items():
         got = sorted(tuple(r) for r in QUERIES[name](spark, sf_dir).collect())
@@ -230,14 +165,8 @@ def main() -> int:
     # ---- dtype parity: run each emitted VALUES through DuckDB and diff
     # its column types against the live Spark schema (value equality above
     # never sees the SQL casts, so it cannot catch a wrong cast)
-    import duckdb
-
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW documents AS SELECT * FROM read_parquet('{sf_dir}/documents.parquet')"
-    )
     for name, (rows, sql) in emitted.items():
-        probs = dtype_mismatches(QUERIES[name](spark, sf_dir).schema, sql, con)
+        probs = dtype_mismatches(QUERIES[name](spark, sf_dir).schema, sql)
         if probs:
             mismatch = True
             print(f"FAIL {name} dtypes: {'; '.join(probs)}")

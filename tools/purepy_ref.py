@@ -368,56 +368,6 @@ def ivf_topk(
     return out
 
 
-# --------------------------------------------------------------------------
-# byte-level BPE token counting — INDEPENDENT formulation: apply merges in
-# rank order, each merged everywhere left-to-right (equivalent to the
-# engine's lowest-rank-adjacent-pair loop, but structurally different code,
-# so a bug in either implementation breaks the cross-check)
-# --------------------------------------------------------------------------
-
-BPE_PRETOKEN_RE = re.compile(
-    r"'(?:[sdmt]|ll|ve|re)| ?[A-Za-z]+| ?[0-9]+| ?[^\sA-Za-z0-9]+|\s+(?!\S)|\s+"
-)
-REGEX_TOKEN_RE = re.compile(r"[A-Za-z0-9_]+|[^\sA-Za-z0-9_]")
-
-
-def bpe_word_len(word: bytes, merges: list[tuple[bytes, bytes]]) -> int:
-    syms: list[bytes] = [bytes([b]) for b in word]
-    for a, b in merges:
-        if len(syms) == 1:
-            break
-        out: list[bytes] = []
-        i = 0
-        while i < len(syms):
-            if i + 1 < len(syms) and syms[i] == a and syms[i + 1] == b:
-                out.append(a + b)
-                i += 2
-            else:
-                out.append(syms[i])
-                i += 1
-        syms = out
-    return len(syms)
-
-
-def bpe_token_counts(
-    docs: dict, merges: list[tuple[bytes, bytes]]
-) -> list[tuple]:
-    """[(doc_id, n_bpe_tokens, n_regex_tokens)] for every doc, sorted by id.
-    Word-level memo — same Zipf argument as the engine's lru_cache."""
-    memo: dict[bytes, int] = {}
-    out = []
-    for did in sorted(docs):
-        text = docs[did] or ""
-        n = 0
-        for w in BPE_PRETOKEN_RE.findall(text):
-            wb = w.encode("utf-8")
-            if wb not in memo:
-                memo[wb] = bpe_word_len(wb, merges)
-            n += memo[wb]
-        out.append((did, n, len(REGEX_TOKEN_RE.findall(text))))
-    return out
-
-
 def duplicated_spans_ref(docs: dict[int, str], n: int = 20):
     """Independent reference for functions/spans.py: cross-document
     duplicated n-token windows -> merged maximal spans per doc. Windows
