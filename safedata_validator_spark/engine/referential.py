@@ -27,7 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from safedata_validator_spark.engine.common import as_violations, local_table
+from safedata_validator_spark.engine.common import as_violations, local_table, sql_ident
 from safedata_validator_spark.rules.model import Rule
 
 
@@ -59,7 +59,7 @@ def canon_str(col, dtype):
 
 
 def _canon_col(df: DataFrame, column: str):
-    return canon_str(F.col(column), df.schema[column].dataType)
+    return canon_str(F.col(sql_ident(column)), df.schema[column].dataType)
 
 
 def canon_dim_key(dim: DataFrame, key: str) -> DataFrame:
@@ -82,7 +82,7 @@ def canon_dim_key_membership(dim: DataFrame, key: str) -> DataFrame:
     raw = canon_dim_key(dim, key)
     if not isinstance(dim.schema[key].dataType, StringType):
         return raw
-    as_num = canon_str(F.col(key).try_cast("double"), DoubleType())
+    as_num = canon_str(F.col(sql_ident(key)).try_cast("double"), DoubleType())
     numeric = (
         dim.select(as_num.alias("__val"))
         .where(F.col("__val").isNotNull())

@@ -15,7 +15,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from safedata_validator_spark.engine.common import as_violations
+from safedata_validator_spark.engine.common import as_violations, sql_ident
 from safedata_validator_spark.rules.model import Rule
 
 
@@ -42,7 +42,7 @@ def eval_format_consistency(df: DataFrame, rule: Rule, ruleset, dims) -> DataFra
     col = rule.column
     scope = F.expr(ruleset.scope)
     classes = (
-        df.select(format_class(F.col(col)).alias("__fmt"), scope.alias("__scope"))
+        df.select(format_class(F.col(sql_ident(col))).alias("__fmt"), scope.alias("__scope"))
         .where(F.col("__fmt").isNotNull())
         .groupBy("__scope", "__fmt")
         .agg(F.count(F.lit(1)).alias("__n"))

@@ -13,8 +13,8 @@ import os
 from pyspark.sql import SparkSession
 
 
-#: once-per-process guard for the Python worker-pool warm-up below
-_PY_WORKERS_WARMED = False
+#: id of the Spark application whose Python worker pool was warmed below
+_PY_WORKERS_WARMED: str | None = None
 
 
 def warm_python_workers(spark: SparkSession) -> None:
@@ -27,9 +27,10 @@ def warm_python_workers(spark: SparkSession) -> None:
     kept by ``spark.python.worker.reuse`` (default true). No-op cost at
     production scale: one sub-second job per application start."""
     global _PY_WORKERS_WARMED
-    if _PY_WORKERS_WARMED:
+    app_id = spark.sparkContext.applicationId
+    if _PY_WORKERS_WARMED == app_id:
         return
-    _PY_WORKERS_WARMED = True
+    _PY_WORKERS_WARMED = app_id
     try:
         import pandas as pd
         from pyspark.sql import functions as F

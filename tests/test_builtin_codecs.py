@@ -1,6 +1,6 @@
 """Unit batteries for the built-in pure-Python backends: pure-numpy OGC
 geometry validity (functions/geo_validity.py) and the stdlib codecs
-(functions/png.py, jpeg.py, wav.py, gif.py, mp4.py). No Spark session.
+(functions/png.py, wav.py). No Spark session.
 Reference analogue: locations.py:353-364 (shapely is_valid / has_z) for
 geometry; the codecs have none (media is out of scope, ROADMAP
 direction 4)."""
@@ -209,143 +209,6 @@ def test_png_rejects_corruption():
         decode_png(truncated)
 
 
-# --------------------------------------------------------------------- JPEG
-
-from safedata_validator_spark.functions.jpeg import (  # noqa: E402
-    JPEGError,
-    decode_jpeg,
-    encode_jpeg,
-    is_jpeg,
-)
-from safedata_validator_spark.functions.jpeg import to_rgb as jpeg_to_rgb  # noqa: E402
-
-
-def _test_image(h=29, w=37, seed=7):
-    rng = np.random.default_rng(seed)
-    x = np.linspace(0, 255, w)[None, :] * np.ones((h, 1))
-    img = np.stack([x, x[::-1], np.full((h, w), 64.0)], axis=-1)
-    return np.clip(img + rng.normal(0, 3, img.shape), 0, 255).astype(np.uint8)
-
-
-@pytest.mark.parametrize("subsample", ["444", "420"])
-def test_jpeg_round_trip_rgb(subsample):
-    img = _test_image()
-    enc = encode_jpeg(img, quality=90, subsample=subsample)
-    assert is_jpeg(enc)
-    dec = decode_jpeg(enc)
-    assert dec.shape == img.shape and dec.dtype == np.uint8
-    err = np.abs(dec.astype(int) - img.astype(int))
-    # q90 on a smooth-ish gradient: small lossy error, never drift
-    assert err.mean() < 8 and err.max() < 48
-
-
-def test_jpeg_q100_near_lossless():
-    rng = np.random.default_rng(3)
-    img = rng.integers(0, 256, (16, 24, 3), dtype=np.uint8)
-    dec = decode_jpeg(encode_jpeg(img, quality=100))
-    # all-ones quant tables: error is color-conversion rounding only
-    assert np.abs(dec.astype(int) - img.astype(int)).max() <= 3
-    g = rng.integers(0, 256, (16, 24), dtype=np.uint8)
-    dg = decode_jpeg(encode_jpeg(g, quality=100))
-    assert dg.shape == g.shape
-    # grayscale skips color conversion: pure DCT rounding
-    assert np.abs(dg.astype(int) - g.astype(int)).max() <= 1
-
-
-def test_jpeg_flat_color_exact():
-    flat = np.full((20, 11, 3), 200, dtype=np.uint8)
-    for sub in ("444", "420"):
-        dec = decode_jpeg(encode_jpeg(flat, quality=95, subsample=sub))
-        assert (dec == 200).all(), sub
-
-
-def test_jpeg_odd_sizes_crop_back():
-    # non-multiple-of-8 (and of 16 for 4:2:0) dims must crop exactly
-    for h, w in ((1, 1), (7, 9), (8, 8), (17, 31)):
-        img = _test_image(h, w, seed=h * 100 + w)
-        for sub in ("444", "420"):
-            assert decode_jpeg(encode_jpeg(img, subsample=sub)).shape == (h, w, 3)
-
-
-def test_jpeg_grayscale_to_rgb():
-    g = np.clip(np.linspace(0, 255, 16)[None, :] * np.ones((9, 1)), 0, 255).astype(np.uint8)
-    dec = decode_jpeg(encode_jpeg(g, quality=95))
-    assert dec.ndim == 2
-    rgb = jpeg_to_rgb(dec)
-    assert rgb.shape == (9, 16, 3)
-    assert (rgb[:, :, 0] == dec).all()
-
-
-def test_jpeg_rejects_malformed():
-    assert not is_jpeg(b"not a jpeg")
-    with pytest.raises(JPEGError):
-        decode_jpeg(b"not a jpeg")
-    enc = bytearray(encode_jpeg(_test_image(8, 8)))
-    # flip SOF0 into SOF2: the baseline SOS trailer (Ss=0, Se=63) is an
-    # ILLEGAL progressive scan header (a DC scan must have Se=0, G.1.1.1.1)
-    # — the progressive path must refuse it, not mis-decode
-    idx = bytes(enc).find(b"\xff\xc0")
-    enc[idx + 1] = 0xC2
-    with pytest.raises(JPEGError):
-        decode_jpeg(bytes(enc))
-    with pytest.raises(JPEGError):
-        decode_jpeg(encode_jpeg(_test_image(8, 8))[:40])  # truncated
-    with pytest.raises(JPEGError):
-        encode_jpeg(_test_image(8, 8).astype(np.int32))
-
-
-def test_jpeg_dequant_uses_natural_order_table():
-    """Regression pin for the zigzag/natural dequantization mixup: the
-    decoder must scatter zigzag coefficients to natural order BEFORE
-    multiplying by the (natural-order) quant table. With the orders mixed,
-    a pure-noise image at q95 round-trips with MAE ≈ 39; correctly paired
-    it is ≈ 3. (q100 and flat-image tests cannot catch this — all-ones
-    tables and zero AC energy make both orders identical.)"""
-    rng = np.random.default_rng(7)
-    img = rng.integers(0, 256, (64, 64, 3), dtype=np.uint8)
-    dec = decode_jpeg(encode_jpeg(img, quality=95))
-    mae = float(np.abs(dec.astype(int) - img.astype(int)).mean())
-    assert mae < 8.0, f"dequant order regression: MAE {mae}"
-
-
-@pytest.mark.parametrize("subsample", ["444", "420"])
-def test_progressive_jpeg_exact_vs_baseline(subsample):
-    from safedata_validator_spark.functions.jpeg import encode_progressive_jpeg
-
-    img = _test_image(29, 37)
-    prog = encode_progressive_jpeg(img, quality=85, subsample=subsample)
-    assert is_jpeg(prog)
-    assert b"\xff\xc2" in prog and b"\xff\xc0" not in prog  # SOF2, no SOF0
-    base = decode_jpeg(encode_jpeg(img, quality=85, subsample=subsample))
-    assert np.array_equal(decode_jpeg(prog), base)
-
-
-def test_progressive_jpeg_grayscale_and_flat_eob_runs():
-    from safedata_validator_spark.functions.jpeg import encode_progressive_jpeg
-
-    g = _test_image(21, 18)[..., 0]
-    assert np.array_equal(
-        decode_jpeg(encode_progressive_jpeg(g, quality=90)),
-        decode_jpeg(encode_jpeg(g, quality=90)),
-    )
-    # flat image: every AC band is empty → the whole scan is one long EOB
-    # run (EOBn symbols with appended length bits) — and q100 flat decodes
-    # exactly, same invariant the catalog oracles use for baseline
-    flat = np.full((128, 96, 3), 77, np.uint8)
-    assert (decode_jpeg(encode_progressive_jpeg(flat, quality=100)) == 77).all()
-
-
-def test_progressive_jpeg_compresses_comparably():
-    from safedata_validator_spark.functions.jpeg import encode_progressive_jpeg
-
-    img = _test_image(96, 120, seed=3)
-    b = len(encode_jpeg(img, quality=85))
-    p = len(encode_progressive_jpeg(img, quality=85))
-    # per-scan optimal Huffman tables: progressive should be in the same
-    # ballpark or smaller, never a blow-up
-    assert p < b * 1.15, (p, b)
-
-
 # --------------------------------------------------------------------------
 # WAV codec (functions/wav.py) — the built-in audio branch (round 4)
 # --------------------------------------------------------------------------
@@ -455,244 +318,3 @@ def test_audio_features_zero_handling():
     assert f["zero_crossings"] == 1
     silent = audio_features(8000, np.zeros((16, 1)))
     assert silent["rms"] == 0.0 and silent["spectral_centroid_hz"] == 0.0
-
-
-# --------------------------------------------------------------------------
-# GIF codec (functions/gif.py) — the built-in video-frame branch (round 4)
-# --------------------------------------------------------------------------
-
-from safedata_validator_spark.functions.gif import (  # noqa: E402
-    GIFError,
-    decode_gif,
-    encode_gif,
-    is_gif,
-)
-
-
-def test_gif_animated_round_trip():
-    rng = np.random.default_rng(11)
-    pal = rng.integers(0, 256, (8, 3)).astype(np.uint8)
-    frames = [rng.integers(0, 8, (13, 17)).astype(np.uint8) for _ in range(4)]
-    delays = [50, 100, 150, 200]
-    dec = decode_gif(encode_gif(frames, pal, delays_ms=delays))
-    assert len(dec) == 4
-    for (dms, img), f, exp in zip(dec, frames, delays):
-        assert dms == exp
-        assert np.array_equal(img, pal[f])
-
-
-def test_gif_interlace_round_trip():
-    rng = np.random.default_rng(12)
-    pal = rng.integers(0, 256, (16, 3)).astype(np.uint8)
-    frame = rng.integers(0, 16, (23, 9)).astype(np.uint8)
-    dec = decode_gif(encode_gif([frame], pal, interlace_first=True))
-    assert np.array_equal(dec[0][1], pal[frame])
-
-
-def test_gif_code_width_growth_and_clear():
-    # 256-color palette + large noisy frame forces 12-bit codes and a
-    # dictionary clear mid-stream
-    rng = np.random.default_rng(13)
-    pal = rng.integers(0, 256, (256, 3)).astype(np.uint8)
-    frame = rng.integers(0, 256, (120, 150)).astype(np.uint8)
-    dec = decode_gif(encode_gif([frame], pal))
-    assert np.array_equal(dec[0][1], pal[frame])
-
-
-def test_gif_two_color_min_code_floor():
-    pal = np.array([[0, 0, 0], [255, 255, 255]], np.uint8)
-    frame = (np.indices((9, 9)).sum(axis=0) % 2).astype(np.uint8)
-    dec = decode_gif(encode_gif([frame], pal))
-    assert np.array_equal(dec[0][1], pal[frame])
-
-
-def test_gif_transparency_composites_over_previous():
-    # frame 2 marks index 0 transparent: pixels keep frame 1's colors
-    pal = np.array(
-        [[10, 20, 30], [200, 100, 50], [0, 255, 0], [255, 0, 255]], np.uint8
-    )
-    f1 = np.full((4, 6), 1, np.uint8)
-    f2 = np.zeros((4, 6), np.uint8)
-    f2[1:3, 2:4] = 2
-    payload = bytearray(encode_gif([f1, f2], pal))
-    # set the transparency flag + index 0 on frame 2's graphic control:
-    # GCEs are the 8-byte blocks 21 f9 04 <packed> <delay:2> <tidx> 00
-    gce_positions = []
-    i = 0
-    while True:
-        i = payload.find(b"\x21\xf9\x04", i)
-        if i < 0:
-            break
-        gce_positions.append(i)
-        i += 3
-    assert len(gce_positions) == 2
-    p2 = gce_positions[1]
-    payload[p2 + 3] |= 0x01  # transparent color flag
-    payload[p2 + 6] = 0  # transparent index = 0
-    dec = decode_gif(bytes(payload))
-    assert len(dec) == 2
-    img2 = dec[1][1]
-    assert (img2[1:3, 2:4] == pal[2]).all()  # opaque pixels replaced
-    assert (img2[0, :] == pal[1]).all()  # transparent pixels show frame 1
-
-
-def test_gif_disposal_restore_background():
-    # disposal=2 after frame 1 restores the background color for frame 2's
-    # transparent region
-    pal = np.array(
-        [[9, 9, 9], [200, 100, 50], [0, 255, 0], [255, 0, 255]], np.uint8
-    )
-    f1 = np.full((3, 3), 1, np.uint8)
-    f2 = np.zeros((3, 3), np.uint8)
-    payload = bytearray(encode_gif([f1, f2], pal))
-    i1 = payload.find(b"\x21\xf9\x04")
-    payload[i1 + 3] |= 0x08  # disposal method 2 on frame 1
-    i2 = payload.find(b"\x21\xf9\x04", i1 + 3)
-    payload[i2 + 3] |= 0x01  # frame 2 fully transparent (index 0)
-    payload[i2 + 6] = 0
-    dec = decode_gif(bytes(payload))
-    # background index is 0 -> canvas restored to pal[0] before frame 2
-    assert (dec[1][1] == pal[0]).all()
-
-
-def test_gif_rejects_malformed():
-    assert not is_gif(b"JIF89a")
-    with pytest.raises(GIFError):
-        decode_gif(b"GIF89a")  # truncated
-    with pytest.raises(GIFError):
-        encode_gif([np.zeros((2, 2), np.uint8)], np.zeros((3, 3), np.uint8))
-    pal = np.zeros((4, 3), np.uint8)
-    good = bytes(encode_gif([np.zeros((8, 8), np.uint8)], pal))
-    with pytest.raises(GIFError):
-        decode_gif(good[: len(good) // 2])  # truncated mid-LZW
-    with pytest.raises(GIFError):
-        decode_gif(good[:12])  # truncated header
-
-
-# ---------------------------------------------------------------------- MP4
-
-
-def _mk_mp4(values, w=9, h=6, fps=8, layout="444", spc=None):
-    from safedata_validator_spark.functions.jpeg import encode_jpeg
-    from safedata_validator_spark.functions.mp4 import encode_mp4
-
-    jpegs = []
-    for v in values:
-        if layout == "gray":
-            jpegs.append(encode_jpeg(np.full((h, w), v, np.uint8), quality=100))
-        else:
-            jpegs.append(
-                encode_jpeg(np.full((h, w, 3), v, np.uint8), quality=100,
-                            subsample=layout)
-            )
-    return encode_mp4(jpegs, width=w, height=h, fps=fps, samples_per_chunk=spc)
-
-
-@pytest.mark.parametrize("layout", ["gray", "444", "420"])
-def test_mp4_mjpeg_round_trip_exact(layout):
-    from safedata_validator_spark.functions.mp4 import decode_mp4, is_mp4, mp4_meta
-
-    values = [10, 120, 250]
-    data = _mk_mp4(values, w=9, h=6, fps=8, layout=layout)
-    assert is_mp4(data)
-    meta = mp4_meta(data)
-    assert (meta["width"], meta["height"]) == (9, 6)
-    assert (meta["se_width"], meta["se_height"]) == (9, 6)
-    assert meta["timescale"] == 8
-    assert meta["total_frames"] == 3 and meta["handler"] == "jpeg"
-    out = decode_mp4(data)
-    assert [t for t, _ in out] == [0, 125, 250]
-    for (_, img), v in zip(out, values):
-        assert img.shape == (6, 9, 3)
-        assert (img == v).all()  # flat q100 JPEG decodes exactly
-
-
-def test_mp4_timestamps_integer_floor():
-    from safedata_validator_spark.functions.mp4 import decode_mp4
-
-    data = _mk_mp4([1, 2, 3, 4], fps=7)
-    assert [t for t, _ in decode_mp4(data)] == [0, 142, 285, 428]
-
-
-@pytest.mark.parametrize("spc", [1, 2, 3, 5, None])
-def test_mp4_chunk_map_layouts(spc):
-    # every samples_per_chunk layout (incl. ragged last chunk -> two stsc
-    # entries) must resolve the same sample offsets through stsc/stco
-    from safedata_validator_spark.functions.jpeg import encode_jpeg
-    from safedata_validator_spark.functions.mp4 import encode_mp4, mp4_frames
-
-    jpegs = [encode_jpeg(np.full((2, 3), v, np.uint8), quality=100)
-             for v in (7, 99, 200, 31, 140)]
-    data = encode_mp4(jpegs, width=3, height=2, fps=9, samples_per_chunk=spc)
-    _, frames = mp4_frames(data)
-    assert [f for _, f in frames] == jpegs
-    assert [t for t, _ in frames] == [i * 1000 // 9 for i in range(5)]
-
-
-def test_mp4_multi_entry_stts():
-    # hand-patch stts into two entries (2 samples at delta 1, 2 at delta 3)
-    # to gate the cumulative-delta walk beyond the constant-delta writer
-    import struct
-
-    from safedata_validator_spark.functions.mp4 import mp4_frames
-
-    data = bytearray(_mk_mp4([1, 2, 3, 4], fps=10))
-    i = data.find(b"stts")
-    assert struct.unpack_from(">III", data, i + 8) == (1, 4, 1)
-    new_body = struct.pack(">I", 0) + struct.pack(">IIIII", 2, 2, 1, 2, 3)
-    new_box = struct.pack(">I", 8 + len(new_body)) + b"stts" + new_body
-    old_len = struct.unpack_from(">I", data, i - 4)[0]
-    patched = bytes(data[: i - 4]) + new_box + bytes(data[i - 4 + old_len :])
-    # grow every ancestor box size (moov/trak/mdia/minf/stbl) by the delta
-    delta = len(new_box) - old_len
-    out = bytearray(patched)
-    for tag in (b"moov", b"trak", b"mdia", b"minf", b"stbl"):
-        j = out.find(tag)
-        sz = struct.unpack_from(">I", out, j - 4)[0]
-        struct.pack_into(">I", out, j - 4, sz + delta)
-    _, frames = mp4_frames(bytes(out))
-    # cum deltas 0,1,2,5 at timescale 10 -> ms floor
-    assert [t for t, _ in frames] == [0, 100, 200, 500]
-
-
-def test_mp4_rejects_malformed():
-    import struct
-
-    from safedata_validator_spark.functions.mp4 import (
-        MP4Error,
-        decode_mp4,
-        encode_mp4,
-        is_mp4,
-        mp4_meta,
-    )
-
-    assert not is_mp4(b"RIFF\x00\x00\x00\x00AVI ")
-    with pytest.raises(MP4Error, match="no moov"):
-        decode_mp4(b"\x00\x00\x00\x10ftypisom\x00\x00\x02\x00")
-    data = _mk_mp4([1, 2])
-    with pytest.raises(MP4Error):
-        decode_mp4(data[: len(data) // 2])  # moov truncated away
-    # non-MJPEG sample payload behind a valid container
-    bad = encode_mp4([b"not a jpeg stream!"], width=2, height=2, fps=5)
-    with pytest.raises(MP4Error, match="not MJPEG"):
-        decode_mp4(bad)
-    with pytest.raises(MP4Error):
-        encode_mp4([], width=2, height=2)
-    with pytest.raises(MP4Error):
-        encode_mp4([b"x"], width=2, height=2, fps=0)
-    # headers present but no video handler: flip 'vide' to 'soun'
-    mut = bytearray(data)
-    i = mut.find(b"vide")
-    mut[i : i + 4] = b"soun"
-    with pytest.raises(MP4Error, match="no video track"):
-        mp4_meta(bytes(mut))
-    # stsz declaring more samples than the chunk map / stts cover: header
-    # parse (mp4_meta) succeeds, the frame walk must fail
-    from safedata_validator_spark.functions.mp4 import mp4_frames
-
-    mut2 = bytearray(data)
-    j = mut2.find(b"stsz")
-    struct.pack_into(">II", mut2, j + 8, 10, 99)  # fixed size 10, count 99
-    assert mp4_meta(bytes(mut2))["total_frames"] == 99
-    with pytest.raises(MP4Error, match="chunk map covers fewer"):
-        mp4_frames(bytes(mut2))

@@ -1,5 +1,5 @@
 """Hypothesis property batteries for the built-in media codecs
-(functions/png.py, jpeg.py, gif.py, wav.py, mp4.py):
+(functions/png.py, wav.py):
 random-input round-trip invariants beyond the hand-picked cases in
 test_builtin_codecs.py. No Spark session — pure kernel fuzzing.
 
@@ -8,29 +8,14 @@ Properties pinned:
   — lossless by spec.
 * WAV: int PCM round-trips to the same quantized sample; float PCM is
   bit-exact.
-* GIF: palette frames round-trip exactly (LZW is lossless); timestamps
-  are the cumulative delays.
-* MP4: container framing returns the exact payload bytes in order and
-  floor-division timestamps for any frame sizes/fps/chunk layout.
-* JPEG (q100 flat): exact for any flat image at any size.
-* JPEG progressive: decodes pixel-identical to the baseline stream for
-  any content/size/quality/subsampling.
 """
 
 from __future__ import annotations
 
 import numpy as np
-from hypothesis import example, given, settings
+from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from safedata_validator_spark.functions.gif import decode_gif, encode_gif
-from safedata_validator_spark.functions.jpeg import (
-    decode_jpeg,
-    encode_jpeg,
-    encode_progressive_jpeg,
-    to_rgb,
-)
-from safedata_validator_spark.functions.mp4 import encode_mp4, mp4_frames
 from safedata_validator_spark.functions.png import decode_png, encode_png
 from safedata_validator_spark.functions.wav import decode_wav, encode_wav
 
@@ -94,96 +79,6 @@ def test_wav_float_pcm_round_trip_property(n, ch, seed):
     assert (dec == s.astype(np.float64)).all()  # float path is bit-exact
 
 
-@settings(max_examples=25, deadline=None)
-@given(
-    h=st.integers(min_value=1, max_value=12),
-    w=st.integers(min_value=1, max_value=12),
-    nf=st.integers(min_value=1, max_value=5),
-    npal=st.sampled_from([2, 4, 8, 16]),
-    seed=st.integers(min_value=0, max_value=2**31),
-)
-def test_gif_round_trip_property(h, w, nf, npal, seed):
-    rng = np.random.default_rng(seed)
-    pal = rng.integers(0, 256, size=(npal, 3), dtype=np.uint8)
-    frames = [
-        rng.integers(0, npal, size=(h, w), dtype=np.uint8) for _ in range(nf)
-    ]
-    delays = [int(d) * 10 for d in rng.integers(1, 20, size=nf)]
-    dec = decode_gif(encode_gif(frames, pal, delays_ms=delays))
-    assert len(dec) == nf
-    for (delay, img), src in zip(dec, frames):
-        assert img.shape == (h, w, 3)
-        assert (img == pal[src]).all()
-    assert [d for d, _ in dec] == delays
-
-
-@settings(max_examples=25, deadline=None)
-@given(
-    sizes=st.lists(st.integers(min_value=1, max_value=200), min_size=1, max_size=6),
-    fps=st.integers(min_value=1, max_value=60),
-    spc=st.one_of(st.none(), st.integers(min_value=1, max_value=7)),
-    seed=st.integers(min_value=0, max_value=2**31),
-)
-def test_mp4_container_framing_property(sizes, fps, spc, seed):
-    # any chunk layout (incl. ragged last chunks) returns the exact payload
-    # bytes in order with the stts-derived integer-floor timestamps
-    rng = np.random.default_rng(seed)
-    payloads = [rng.integers(0, 256, size=n, dtype=np.uint8).tobytes() for n in sizes]
-    meta, frames = mp4_frames(
-        encode_mp4(payloads, width=4, height=4, fps=fps, samples_per_chunk=spc)
-    )
-    assert meta["timescale"] == fps and meta["total_frames"] == len(payloads)
-    assert [f for _, f in frames] == payloads
-    assert [t for t, _ in frames] == [i * 1000 // fps for i in range(len(payloads))]
-
-
-@settings(max_examples=25, deadline=None)
-@given(
-    h=st.integers(min_value=1, max_value=20),
-    w=st.integers(min_value=1, max_value=20),
-    v=st.integers(min_value=0, max_value=255),
-    layout=st.sampled_from(["gray", "444", "420"]),
-)
-def test_jpeg_q100_flat_exact_property(h, w, v, layout):
-    if layout == "gray":
-        arr = np.full((h, w), v, np.uint8)
-        data = encode_jpeg(arr, quality=100)
-    else:
-        arr = np.full((h, w, 3), v, np.uint8)
-        data = encode_jpeg(arr, quality=100, subsample=layout)
-    out = to_rgb(decode_jpeg(data))
-    assert out.shape == (h, w, 3)
-    assert (out == v).all()
-
-
-@settings(max_examples=60, deadline=None)
-@given(
-    h=st.integers(min_value=1, max_value=40),
-    w=st.integers(min_value=1, max_value=40),
-    quality=st.integers(min_value=10, max_value=100),
-    layout=st.sampled_from(["gray", "444", "420"]),
-    seed=st.integers(min_value=0, max_value=2**31),
-)
-def test_progressive_jpeg_exact_vs_baseline_property(h, w, quality, layout, seed):
-    """Progressive scans deliver EVERY bit of every quantized coefficient
-    (the scan scripts' successive-approximation passes sum to Al=0), so a
-    progressive encode must decode to the IDENTICAL pixels as the baseline
-    encode of the same image — for any size, quality, subsampling, and
-    content. This single property gates both directions of the Annex G
-    code: spectral selection, successive approximation, EOB runs, AC/DC
-    refinement."""
-    rng = np.random.default_rng(seed)
-    if layout == "gray":
-        img = rng.integers(0, 256, (h, w), dtype=np.uint8)
-        sub = "444"
-    else:
-        img = rng.integers(0, 256, (h, w, 3), dtype=np.uint8)
-        sub = layout
-    base = decode_jpeg(encode_jpeg(img, quality=quality, subsample=sub))
-    prog = decode_jpeg(encode_progressive_jpeg(img, quality=quality, subsample=sub))
-    assert np.array_equal(base, prog)
-
-
 # ---------------------------------------------------------------------------
 # Adversarial robustness (VERDICT r04 §next 8): for ANY truncation or
 # single-byte corruption of a valid payload, every container walker /
@@ -193,15 +88,6 @@ def test_progressive_jpeg_exact_vs_baseline_property(h, w, quality, layout, seed
 # ---------------------------------------------------------------------------
 
 
-def _real_mp4(seed: int, nf: int, fps: int) -> bytes:
-    rng = np.random.default_rng(seed)
-    frames = [
-        encode_jpeg(rng.integers(0, 256, size=(4, 5), dtype=np.uint8), quality=90)
-        for _ in range(nf)
-    ]
-    return encode_mp4(frames, width=5, height=4, fps=fps, samples_per_chunk=2)
-
-
 def _assert_typed(decode, data: bytes) -> None:
     try:
         decode(data)
@@ -209,59 +95,18 @@ def _assert_typed(decode, data: bytes) -> None:
         pass  # typed rejection (every codec error subclasses ValueError)
 
 
-@settings(max_examples=120, deadline=None)
-@given(
-    seed=st.integers(min_value=0, max_value=2**31),
-    nf=st.integers(min_value=1, max_value=4),
-    fps=st.integers(min_value=1, max_value=30),
-    cut=st.floats(min_value=0.0, max_value=1.0),
-)
-def test_mp4_truncation_typed_errors(seed, nf, fps, cut):
-    data = _real_mp4(seed, nf, fps)
-    _assert_typed(lambda d: mp4_frames(d), data[: int(len(data) * cut)])
-
-
-@settings(max_examples=120, deadline=None)
-@given(
-    seed=st.integers(min_value=0, max_value=2**31),
-    nf=st.integers(min_value=1, max_value=4),
-    fps=st.integers(min_value=1, max_value=30),
-    pos=st.floats(min_value=0.0, max_value=1.0),
-    val=st.integers(min_value=0, max_value=255),
-)
-def test_mp4_corruption_typed_errors(seed, nf, fps, pos, val):
-    data = bytearray(_real_mp4(seed, nf, fps))
-    data[min(int(len(data) * pos), len(data) - 1)] = val
-    _assert_typed(lambda d: mp4_frames(d), bytes(data))
-
-
 @settings(max_examples=80, deadline=None)
 @given(
     seed=st.integers(min_value=0, max_value=2**31),
-    # pjpeg: progressive streams go through the Annex G multi-scan decoder
-    kind=st.sampled_from(["png", "jpeg", "pjpeg", "gif", "wav"]),
+    kind=st.sampled_from(["png", "wav"]),
     mode=st.sampled_from(["cut", "flip"]),
     pos=st.floats(min_value=0.0, max_value=1.0),
     val=st.integers(min_value=0, max_value=255),
 )
-# discovered falsifying example: the flipped byte lands in a DHT DC
-# symbol, the decoder read a >16-bit diff per block, and the predictor
-# overflowed the int32 coefficient store (untyped OverflowError)
-@example(seed=0, kind="pjpeg", mode="flip", pos=0.25, val=63)
 def test_image_audio_mutation_typed_errors(seed, kind, mode, pos, val):
     rng = np.random.default_rng(seed)
     if kind == "png":
         data, dec = encode_png(rng.integers(0, 256, (5, 4, 3), dtype=np.uint8)), decode_png
-    elif kind == "jpeg":
-        data, dec = encode_jpeg(rng.integers(0, 256, (5, 4), dtype=np.uint8)), decode_jpeg
-    elif kind == "pjpeg":
-        data = encode_progressive_jpeg(
-            rng.integers(0, 256, (9, 12, 3), dtype=np.uint8), quality=80
-        )
-        dec = decode_jpeg
-    elif kind == "gif":
-        pal = rng.integers(0, 256, (4, 3), dtype=np.uint8)
-        data, dec = encode_gif([rng.integers(0, 4, (5, 4), dtype=np.uint8)], pal), decode_gif
     else:
         data, dec = encode_wav(rng.integers(-100, 100, (50, 1)), 8000, bits=16), decode_wav
     if mode == "cut":

@@ -2,7 +2,7 @@
 OGC geometry validity has a built-in pure-numpy engine
 (functions/geo_validity.py), so that battery runs in EVERY environment;
 shapely and pillow, when present, run as parity oracles against the
-built-in geometry engine and the built-in PNG/JPEG codecs. Only the
+built-in geometry engine and the built-in PNG codec. Only the
 Iceberg runtime (a jar, not a library) remains skipped-not-absent."""
 
 from __future__ import annotations
@@ -90,7 +90,7 @@ def test_builtin_validity_parity_with_shapely(spark):
 
 
 # --------------------------------------------------------------------------
-# 2. Built-in image codecs (functions/png.py, functions/jpeg.py) against PIL
+# 2. Built-in PNG codec (functions/png.py) against PIL
 # --------------------------------------------------------------------------
 
 @pytest.mark.skipif(not HAVE_PIL, reason="pillow not installed")
@@ -131,40 +131,6 @@ def test_builtin_png_16bit_parity_with_pil():
     with Image.open(io.BytesIO(data)) as im:
         pil = np.asarray(im, dtype=np.uint16)
     assert (decode_png(data)[:, :, 0] == pil).all()
-
-
-@pytest.mark.skipif(not HAVE_PIL, reason="pillow not installed")
-def test_builtin_jpeg_parity_with_pil():
-    """When pillow is present it is the oracle for the built-in baseline
-    JPEG codec, both directions: PIL must decode our streams to the same
-    pixels (±1 for IDCT rounding differences), and our decoder must match
-    PIL's pixels on a PIL-encoded baseline stream."""
-    import io
-
-    import numpy as np
-    from PIL import Image
-
-    from safedata_validator_spark.functions.jpeg import decode_jpeg, encode_jpeg
-
-    rng = np.random.default_rng(11)
-    x = np.linspace(0, 255, 24)[None, :] * np.ones((17, 1))
-    img = np.clip(
-        np.stack([x, x[::-1], np.full((17, 24), 64.0)], axis=-1)
-        + rng.normal(0, 2, (17, 24, 3)),
-        0, 255,
-    ).astype(np.uint8)
-    for sub in ("444", "420"):
-        data = encode_jpeg(img, quality=90, subsample=sub)
-        with Image.open(io.BytesIO(data)) as im:
-            pil_px = np.asarray(im.convert("RGB"), dtype=np.int32)
-        ours = decode_jpeg(data).astype(np.int32)
-        assert np.abs(ours - pil_px).max() <= 2, sub
-    buf = io.BytesIO()
-    Image.fromarray(img).save(buf, format="JPEG", quality=90)
-    pil_stream = buf.getvalue()
-    with Image.open(io.BytesIO(pil_stream)) as im:
-        pil_px = np.asarray(im.convert("RGB"), dtype=np.int32)
-    assert np.abs(decode_jpeg(pil_stream).astype(np.int32) - pil_px).max() <= 2
 
 
 # --------------------------------------------------------------------------

@@ -445,3 +445,84 @@ def test_drift_quotes_hostile_column_name(spark):
         for s, e, _, v, m in plain
     }
     assert {g[0] for g in got} == {"a"}
+
+
+def _hostile_copy(df, names):
+    """``df`` with each plain column renamed to its hostile name."""
+    return df.toDF(*[names.get(c, c) for c in df.columns])
+
+
+def test_categorical_rules_quote_hostile_column_names(spark):
+    """levels_audit and ref_integrity read the audited column, the dimension
+    key and the alias key and primary by quoted identifier: hostile names on
+    the fact and dimension sides give the violations of a plain-named copy."""
+    hostile = {
+        "code": "c.`ö`", "level": "l.`ü`",
+        "key": "k.`é`", "alias": "a.`x`", "primary": "p.`ý`", "lv": "v.`ä`",
+    }
+    fact = spark.createDataFrame(
+        [(1, "g", "A", "lo"), (2, "g", "AA", "hi"), (3, "g", "Z", "bad"),
+         (4, "g", "1", "lo"), (5, "h", "B", "mid")],
+        "id int, grp string, code string, level string",
+    )
+    plain_dims = {
+        "codes": spark.createDataFrame([("A",), ("B",), ("1.0",)], "key string"),
+        "aliases": spark.createDataFrame([("AA", "A")], "alias string, primary string"),
+        "levels": spark.createDataFrame([("lo",), ("hi",), ("mid",)], "lv string"),
+    }
+
+    def run(df, dims, n):
+        rs = RuleSet(
+            name="t", key_cols=["id"], scope="grp",
+            rules=[
+                Rule("ri", "ref_integrity", column=n["code"],
+                     params={"dim": "codes", "dim_key": n["key"], "alias_dim": "aliases",
+                             "alias_key": n["alias"], "alias_primary": n["primary"]}),
+                Rule("la", "levels_audit", column=n["level"],
+                     params={"dim": "levels", "dim_key": n["lv"]}),
+            ],
+        )
+        return {
+            (v["rule_id"], v["scope"], v["entity"], v["column"], v["value"], v["message"])
+            for v in ENGINE.validate(df, rs, dims, with_stats=False).violations.collect()
+        }
+
+    plain = run(fact, plain_dims, {c: c for c in hostile})
+    got = run(
+        _hostile_copy(fact, hostile),
+        {k: _hostile_copy(d, hostile) for k, d in plain_dims.items()},
+        hostile,
+    )
+    assert got == {
+        (r, s, hostile[c] + e[len(c):], hostile[c], v,
+         m.replace(f"{c} not in", f"{hostile[c]} not in"))
+        for r, s, e, c, v, m in plain
+    }
+    assert {(r, v) for r, _, _, _, v, _ in got} == {
+        ("ri.alias", "AA"), ("ri", "Z"), ("la", "bad"),
+        ("la.unused", "mid"), ("la.unused", "lo"), ("la.unused", "hi"),
+    }
+
+
+def test_format_consistency_quotes_hostile_column_name(spark):
+    """format_consistency classifies the rule column by quoted identifier: a
+    hostile name gives the scopes and message of a plain-named copy."""
+    name = "d.`ø`"
+    df = spark.createDataFrame(
+        [(1, "a", "2024-01-01"), (2, "a", "2024-01-01 10:00:00"), (3, "a", "7"),
+         (4, "b", "2024-02-03"), (5, "b", None)],
+        "id int, grp string, d string",
+    )
+
+    def run(df, column):
+        rs = RuleSet(name="t", key_cols=["id"], scope="grp",
+                     rules=[Rule("fmt", "format_consistency", column=column)])
+        return {
+            (v["scope"], v["entity"], v["column"], v["value"], v["message"])
+            for v in ENGINE.validate(df, rs, with_stats=False).violations.collect()
+        }
+
+    plain = run(df, "d")
+    got = run(_hostile_copy(df, {"d": name}), name)
+    assert got == {(s, e, name, v, name + m[1:]) for s, e, _, v, m in plain}
+    assert {g[0] for g in got} == {"a"}

@@ -41,7 +41,12 @@ def main() -> int:
     from safedata_validator_spark.queries import ORACLES, QUERIES
     from safedata_validator_spark.session import build_session
 
-    spark = build_session(app_name="oracle-parity", master="local[4]", shuffle_partitions=4)
+    # no console progress bar: its `\r`-ended lines would share a line with
+    # the per-query results printed below
+    spark = build_session(
+        app_name="oracle-parity", master="local[4]", shuffle_partitions=4,
+        extra_conf={"spark.ui.showConsoleProgress": "false"},
+    )
     con = duckdb.connect()
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')")
