@@ -754,13 +754,12 @@ FROM closure GROUP BY depth
 # --------------------------------------------------------------------------
 
 def q_hierarchy_congruence_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Engine path: eval_hierarchy_congruence violations. Customers claim
-    ("N"+nationkey, "R"+(custkey%7)): residues 5-6 are unknown ancestors,
-    residues 0-4 are real regions but only sometimes the right one."""
-    from safedata_validator_spark.engine.hierarchy import (
-        build_closure,
-        eval_hierarchy_congruence,
-    )
+    """Engine path: validate() over a hierarchy_congruence rule. Customers
+    claim ("N"+nationkey, "R"+(custkey%7)): residues 5-6 are unknown
+    ancestors, residues 0-4 are real regions but only sometimes the right
+    one."""
+    from safedata_validator_spark.engine.hierarchy import build_closure
+    from safedata_validator_spark.engine.validator import ValidationEngine
     from safedata_validator_spark.rules.model import Rule, RuleSet
 
     r = _t(spark, sf_dir, "region").select(
@@ -785,9 +784,8 @@ def q_hierarchy_congruence_events(spark: SparkSession, sf_dir: str) -> DataFrame
                 params={"nodes_dim": "nodes", "closure_dim": "closure",
                         "child_col": "child", "ancestor_col": "anc"})
     rs = RuleSet(name="hc", key_cols=["child"], scope="'all'", rules=[rule])
-    out = eval_hierarchy_congruence(
-        claims, rule, rs, {"nodes": nodes, "closure": closure}
-    )
+    dims = {"nodes": nodes, "closure": closure}
+    out = ValidationEngine().validate(claims, rs, dims, with_stats=False).violations
     return out.orderBy("entity")
 
 
@@ -837,11 +835,12 @@ ORDER BY entity
 # --------------------------------------------------------------------------
 
 def q_name_resolution_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Engine path: eval_name_resolution violations over deterministic
-    claims. Dimension statuses by nationkey: %7==3 → synonym, else %5==2 →
-    doubtful with a planted second doubtful usage (→ ambiguous); claims
-    cover user_id % 32, so residues ≥ 25 miss the 25-nation dimension."""
-    from safedata_validator_spark.engine.hierarchy import eval_name_resolution
+    """Engine path: validate() over a name_resolution rule with
+    deterministic claims. Dimension statuses by nationkey: %7==3 → synonym,
+    else %5==2 → doubtful with a planted second doubtful usage (→
+    ambiguous); claims cover user_id % 32, so residues ≥ 25 miss the
+    25-nation dimension."""
+    from safedata_validator_spark.engine.validator import ValidationEngine
     from safedata_validator_spark.rules.model import Rule, RuleSet
 
     nat = _t(spark, sf_dir, "nation")
@@ -871,7 +870,7 @@ def q_name_resolution_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     rule = Rule("name_resolution", "name_resolution", severity="ERROR",
                 params={"dim": "taxa", "name_col": "name", "rank_col": "rank"})
     rs = RuleSet(name="nr", key_cols=["name"], scope="'all'", rules=[rule])
-    return eval_name_resolution(claims, rule, rs, {"taxa": dim})
+    return ValidationEngine().validate(claims, rs, {"taxa": dim}, with_stats=False).violations
 
 
 SQL_NAME_RESOLUTION_EVENTS = """

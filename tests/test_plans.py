@@ -234,6 +234,7 @@ def test_ann_plan_building_triggers_no_jobs(spark):
 #:   hierarchy_closure / hierarchy_congruence_events — build_closure's
 #:     loop-until-fixpoint needs an emptiness check per doubling round
 #:     (bounded by log2(max depth) jobs over the DIMENSION, not the fact);
+#:     hierarchy_congruence_events then runs validate(), as below;
 #:   ann_topk — the IVF branch trains a k-means coarse quantizer, iterative
 #:     by nature (bounded, runs on the sampled training slice);
 #:   stream_sequence_events — runs an actual two-micro-batch streaming query
@@ -254,6 +255,7 @@ EAGER_BY_DESIGN = {
     "engine_row_rules_customer",
     "engine_verdicts_orders",
     "engine_drift_keys_lineitem",
+    "name_resolution_events",  # validate() over a name_resolution rule
     "hierarchy_closure",
     "hierarchy_congruence_events",
     "ann_topk",
