@@ -11,13 +11,19 @@ runs in a window over the bucket axis of an already-tiny aggregate.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from safedata_validator_spark.engine.common import as_violations, sql_ident
+from safedata_validator_spark.engine.common import as_violations
 from safedata_validator_spark.rules.model import Rule
 
 EPS = 1e-6
+
+
+def histogram_bucket(value_expr: str, lo: float, hi: float, nbins: int) -> Column:
+    """Bucket of a numeric SQL expression: 0 = underflow, nbins+1 = overflow."""
+    v = F.expr(value_expr).cast("double")
+    return F.width_bucket(v, F.lit(float(lo)), F.lit(float(hi)), F.lit(nbins))
 
 
 def histogram(
@@ -29,12 +35,13 @@ def histogram(
     scope: str = "'all'",
 ) -> DataFrame:
     """Fixed-width histogram of a numeric SQL expression →
-    (scope, bucket, n). Bucket 0 = underflow, nbins+1 = overflow (matching
-    SQL width_bucket semantics). NULLs are dropped."""
-    v = F.expr(value_expr).cast("double")
-    bucket = F.width_bucket(v, F.lit(float(lo)), F.lit(float(hi)), F.lit(nbins))
+    (scope, bucket, n), buckets as ``histogram_bucket`` (SQL width_bucket
+    semantics). NULLs are dropped."""
     return (
-        df.select(F.expr(scope).cast("string").alias("scope"), bucket.alias("bucket"))
+        df.select(
+            F.expr(scope).cast("string").alias("scope"),
+            histogram_bucket(value_expr, lo, hi, nbins).alias("bucket"),
+        )
         .where(F.col("bucket").isNotNull())
         .groupBy("scope", "bucket")
         .agg(F.count(F.lit(1)).alias("n"))
@@ -80,8 +87,9 @@ def compare_histograms(cur: DataFrame, base: DataFrame) -> DataFrame:
     )
 
 
-def eval_drift(df: DataFrame, rule: Rule, ruleset, dims) -> DataFrame:
-    """Drift rule. params:
+def drift_from_counts(counts: DataFrame, rule: Rule, dims: dict) -> DataFrame:
+    """Drift rule over its census slice: per-scope counts of its histogram
+    bucket and, with ``split``, the row's cohort flag. params:
       expr        — numeric SQL expression over the fact table
                     (default: the rule column itself, quoted)
       lo, hi, bins — histogram domain
@@ -92,20 +100,20 @@ def eval_drift(df: DataFrame, rule: Rule, ruleset, dims) -> DataFrame:
       psi_threshold / ks_threshold — violation if exceeded
     """
     label = rule.params.get("expr", rule.column)
-    expr = rule.params.get("expr", sql_ident(rule.column))
-    lo, hi = float(rule.params["lo"]), float(rule.params["hi"])
-    bins = int(rule.params.get("bins", 20))
     psi_t = rule.params.get("psi_threshold")
     ks_t = rule.params.get("ks_threshold")
-    scope = ruleset.scope
 
+    # buckets back to bigint: the KS window orders them numerically
+    hist = counts.where(F.col("__val").isNotNull()).select(
+        F.col("__scope").alias("scope"),
+        F.col("__val").cast("bigint").alias("bucket"),
+        F.col("__n").alias("n"),
+        "__val2",
+    )
     if "split" in rule.params:
-        split = F.expr(rule.params["split"])
-        cur = histogram(df.where(split), expr, lo, hi, bins, scope)
-        base = histogram(df.where(~split), expr, lo, hi, bins, scope)
+        cur, base = (hist.where(F.col("__val2") == f).drop("__val2") for f in ("true", "false"))
     else:
-        cur = histogram(df, expr, lo, hi, bins, scope)
-        base = dims[rule.params["baseline_dim"]]
+        cur, base = hist.drop("__val2"), dims[rule.params["baseline_dim"]]
 
     stats = compare_histograms(cur, base)
     breach = F.lit(False)

@@ -14,8 +14,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from safedata_validator_spark.engine.common import as_violations
+from safedata_validator_spark.engine.common import as_violations, sql_ident
 from safedata_validator_spark.rules.model import Rule
+
+
+def _stats(c: str) -> list[str]:
+    """Aliases of column ``c``'s (min, max, count) in the shared aggregate:
+    hex-encoded, so any column name gives plain identifiers."""
+    return [f"__{stat}_{c.encode().hex()}" for stat in ("min", "max", "n")]
 
 
 def extent_aggs(rules: list[Rule]) -> list:
@@ -24,7 +30,8 @@ def extent_aggs(rules: list[Rule]) -> list:
     aggregation (one scan serves extents, profile and verdict row counts)."""
     aggs = []
     for c in sorted({r.column for r in rules}):
-        aggs += [F.min(c).alias(f"__min_{c}"), F.max(c).alias(f"__max_{c}"), F.count(c).alias(f"__n_{c}")]
+        col = F.col(sql_ident(c))
+        aggs += [f(col).alias(a) for f, a in zip((F.min, F.max, F.count), _stats(c))]
     return aggs
 
 
@@ -40,25 +47,24 @@ def extents_from_agg(agg: DataFrame, rules: list[Rule]) -> list[DataFrame]:
         c = rule.column
         lo = rule.params.get("lo")
         hi = rule.params.get("hi")
+        mn, mx, n = (F.col(a) for a in _stats(c))
         breach = F.lit(False)
         if lo is not None:
-            breach = breach | (F.col(f"__min_{c}") < F.lit(lo))
+            breach = breach | (mn < F.lit(lo))
         if hi is not None:
-            breach = breach | (F.col(f"__max_{c}") >= F.lit(hi))
-        bad = agg.where(F.col(f"__n_{c}") > 0).where(breach)
+            breach = breach | (mx >= F.lit(hi))
+        bad = agg.where(n > 0).where(breach)
         msg = F.concat(
             F.lit(f"{c} extent ["),
-            F.col(f"__min_{c}").cast("string"),
+            mn.cast("string"),
             F.lit(", "),
-            F.col(f"__max_{c}").cast("string"),
+            mx.cast("string"),
             F.lit(f"] breaches bounds [{lo}, {hi})"),
         )
         entity = F.concat(
             F.lit("scope="), F.coalesce(F.col("__scope").cast("string"), F.lit("∅"))
         )
-        value = F.concat(
-            F.col(f"__min_{c}").cast("string"), F.lit(".."), F.col(f"__max_{c}").cast("string")
-        )
+        value = F.concat(mn.cast("string"), F.lit(".."), mx.cast("string"))
         out.append(as_violations(bad, rule, F.col("__scope"), entity, value, msg))
     return out
 
@@ -88,7 +94,7 @@ def congruence_from_agg(agg: DataFrame, rules: list[Rule]) -> list[DataFrame]:
         lo = rule.params.get("declared_lo")
         hi = rule.params.get("declared_hi")
         advisory = bool(rule.params.get("advisory", False))
-        n, mn, mx = F.col(f"__n_{c}"), F.col(f"__min_{c}"), F.col(f"__max_{c}")
+        mn, mx, n = (F.col(a) for a in _stats(c))
         entity = F.concat(
             F.lit("scope="), F.coalesce(F.col("__scope").cast("string"), F.lit("∅"))
         )

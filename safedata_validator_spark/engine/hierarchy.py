@@ -15,7 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from safedata_validator_spark.engine.common import as_violations
+from safedata_validator_spark.engine.common import as_violations, sql_ident
 from safedata_validator_spark.rules.model import Rule
 
 
@@ -124,31 +124,21 @@ def resolve_names(
     return joined.select(*[user[c] for c in user.columns], "node_id", "status", match_status.alias("match_status"))
 
 
-def eval_name_resolution(df: DataFrame, rule: Rule, ruleset, dims) -> DataFrame:
+def name_resolution_from_counts(counts: DataFrame, rule: Rule, dims: dict) -> DataFrame:
     """Taxon-style name resolution as a validation rule (the engine analogue
     of ``validate_and_add_taxon``, taxa.py:1118-1508): every distinct
-    (name, rank) claimed by the fact table must resolve in the dimension —
-    'missing' and 'ambiguous' are ERRORs at rule severity, synonym use is a
-    WARNING (the reference logs synonym substitution as a warning,
-    taxa.py:1332-1340 decision matrix).
+    (name, rank) claimed by the fact table (the rule's census slice) must
+    resolve in the dimension — 'missing' and 'ambiguous' are ERRORs at rule
+    severity, synonym use is a WARNING (the reference logs synonym
+    substitution as a warning, taxa.py:1332-1340 decision matrix).
 
     params: dim (nodes dimension with name/rank/status/node_id columns),
     name_col, rank_col (fact columns).
     """
     dim = dims[rule.params["dim"]]
     name_col = rule.params.get("name_col", "name")
-    rank_col = rule.params.get("rank_col", "rank")
-    scope = F.expr(ruleset.scope)
-
-    claimed = (
-        df.select(
-            F.col(name_col).alias("name"),
-            F.col(rank_col).alias("rank"),
-            scope.alias("__scope"),
-        )
-        .where(F.col("name").isNotNull())
-        .groupBy("__scope", "name", "rank")
-        .agg(F.count(F.lit(1)).alias("__n"))
+    claimed = counts.where(F.col("__val").isNotNull()).select(
+        "__scope", F.col("__val").alias("name"), F.col("__val2").alias("rank"), "__n"
     )
     resolved = resolve_names(claimed, dim, "name", "rank")
     bad = resolved.where(F.col("match_status") != "found")
@@ -176,33 +166,24 @@ def eval_name_resolution(df: DataFrame, rule: Rule, ruleset, dims) -> DataFrame:
     )
 
 
-def eval_hierarchy_congruence(df: DataFrame, rule: Rule, ruleset, dims) -> DataFrame:
+def hierarchy_congruence_from_counts(counts: DataFrame, rule: Rule, dims: dict) -> DataFrame:
     """Fact rows claim (child_name, ancestor_name); the claim must hold in the
     closure table (reference congruence check taxa.py:1440-1453).
 
     params: nodes_dim, closure_dim, child_col, ancestor_col, name_col.
-    Distinct claimed pairs are resolved to ids via the (small) nodes dim and
-    checked with a broadcast left join to the closure; both unknown names and
-    non-ancestor pairs are violations.
+    The distinct claimed pairs (the rule's census slice) are resolved to ids
+    via the (small) nodes dim and checked with a broadcast left join to the
+    closure; both unknown names and non-ancestor pairs are violations.
     """
     nodes = dims[rule.params["nodes_dim"]]
     closure = dims[rule.params["closure_dim"]]
     child_col = rule.params["child_col"]
     anc_col = rule.params["ancestor_col"]
     name_col = rule.params.get("name_col", "name")
-    scope = F.expr(ruleset.scope)
-
-    pairs = (
-        df.select(
-            F.col(child_col).alias("__child"),
-            F.col(anc_col).alias("__anc"),
-            scope.alias("__scope"),
-        )
-        .where(F.col("__child").isNotNull() & F.col("__anc").isNotNull())
-        .groupBy("__scope", "__child", "__anc")
-        .agg(F.count(F.lit(1)).alias("__n"))
+    pairs = counts.where(F.col("__val").isNotNull() & F.col("__val2").isNotNull()).select(
+        "__scope", F.col("__val").alias("__child"), F.col("__val2").alias("__anc"), "__n"
     )
-    ids = nodes.select(F.col(name_col).alias("__name"), F.col("node_id").cast("long").alias("__id"))
+    ids = nodes.select(F.col(sql_ident(name_col)).alias("__name"), F.col("node_id").cast("long").alias("__id"))
     resolved = (
         pairs.join(
             F.broadcast(ids.withColumnRenamed("__name", "__child").withColumnRenamed("__id", "__cid")),

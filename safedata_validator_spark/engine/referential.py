@@ -14,17 +14,20 @@ aggregated map-side to its distinct values and never shuffled against the
 dimension. The reference's parent-memoization dict (taxa.py:1223-1275) is
 subsumed by the aggregation.
 
-ALL categorical rules (level audits + referential membership, any number
-of columns) share ONE fact pass: values are stacked into (column, value)
-rows, counted per scope in a single aggregation (``categorical_counts``),
-and ``validate()`` keeps the tiny result as a driver-local table — each
-rule then derives its violations from its column's slice of the counts with
-broadcast joins only.
+The run's census (``census_counts``) is ONE fact pass serving six plan
+families: level audits and referential membership (one entry per audited
+column), drift histograms, format-class counts, claimed (name, rank) pairs
+and claimed (child, ancestor) pairs (one entry per rule). Each entry's
+values are stacked into (key, value, second value) rows and counted per
+scope in a single aggregation; ``validate()`` keeps the tiny result as a
+driver-local table, and each rule derives its violations from its entry's
+slice with broadcast joins only. ``unique_key`` on keys no sequential rule
+shares is the only plan family that counts on its own.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from safedata_validator_spark.engine.common import as_violations, local_table, sql_ident
@@ -58,13 +61,14 @@ def canon_str(col, dtype):
     return col.cast("string")
 
 
-def _canon_col(df: DataFrame, column: str):
+def canon_col(df: DataFrame, column: str) -> Column:
+    """``df[column]``, by quoted identifier, rendered through ``canon_str``."""
     return canon_str(F.col(sql_ident(column)), df.schema[column].dataType)
 
 
 def canon_dim_key(dim: DataFrame, key: str) -> DataFrame:
     """Distinct dimension keys in the same canonical rendering → (__val)."""
-    return dim.select(_canon_col(dim, key).alias("__val")).distinct()
+    return dim.select(canon_col(dim, key).alias("__val")).distinct()
 
 
 def canon_dim_key_membership(dim: DataFrame, key: str) -> DataFrame:
@@ -91,28 +95,27 @@ def canon_dim_key_membership(dim: DataFrame, key: str) -> DataFrame:
     return raw.unionByName(numeric).distinct()
 
 
-def categorical_counts(df: DataFrame, scope_expr: str, columns: list[str]) -> DataFrame:
-    """ONE scan serving every categorical rule: stack the audited columns into
-    (column-name, value) rows and count per scope. Output volume is bounded by
-    sum of per-column distinct cardinalities × scopes — tiny for categorical
-    columns — so the validator caches it and every audit below becomes a
-    broadcast join over cached rows, never a new fact pass. Values render via
-    ``canon_str`` so numeric fact columns compare correctly with numeric dim
-    keys of a different width."""
-    cols = sorted(set(columns))
-    pairs = F.array(
+def census_counts(
+    df: DataFrame, scope_expr: str, entries: dict[str, tuple[Column, Column | None]]
+) -> DataFrame:
+    """ONE scan serving every census-shaped rule: each entry's key and (value,
+    optional second value) strings stack into (__col, __val, __val2) rows,
+    counted per scope (``__n``). Output volume is bounded by Σ distinct
+    values per entry × scopes — tiny by design — so the validator keeps it
+    on the driver and every rule becomes a broadcast join over its slice,
+    never a new fact pass. Values render via ``canon_str`` so numeric fact
+    columns compare correctly with numeric dim keys of a different width."""
+    none = F.lit(None).cast("string")
+    stack = F.array(
         *[
-            F.struct(F.lit(c).alias("__col"), _canon_col(df, c).alias("__val"))
-            for c in cols
+            F.struct(F.lit(k).alias("__col"), v.alias("__val"), (none if v2 is None else v2).alias("__val2"))
+            for k, (v, v2) in sorted(entries.items(), key=lambda e: e[0])
         ]
     )
     return (
-        df.select(
-            F.expr(scope_expr).cast("string").alias("__scope"),
-            F.explode(pairs).alias("__p"),
-        )
-        .select("__scope", F.col("__p.__col").alias("__col"), F.col("__p.__val").alias("__val"))
-        .groupBy("__scope", "__col", "__val")
+        df.select(F.expr(scope_expr).cast("string").alias("__scope"), F.explode(stack).alias("__p"))
+        .select("__scope", "__p.*")
+        .groupBy("__scope", "__col", "__val", "__val2")
         .agg(F.count(F.lit(1)).alias("__n"))
     )
 
@@ -121,7 +124,7 @@ def ref_integrity_from_counts(counts: DataFrame, rule: Rule, dims: dict) -> Data
     """Membership of ``rule.column`` values (pre-counted per scope) in
     dimension ``dim[dim_key]``; optional alias table produces WARNINGs
     (reference locations.py:463-474). ``counts`` must carry the rule's column
-    only (the validator slices the shared cache by ``__col``).
+    only (the validator slices the census by ``__col``).
 
     Emits one violation per distinct (scope, value) with an occurrence count
     — at 10^12 rows, per-row violation output for a systematically-bad value
@@ -147,8 +150,8 @@ def ref_integrity_from_counts(counts: DataFrame, rule: Rule, dims: dict) -> Data
         alias_key = rule.params.get("alias_key", "alias")
         alias_primary = rule.params.get("alias_primary", dim_key)
         amap = alias.select(
-            _canon_col(alias, alias_key).alias("__val"),
-            _canon_col(alias, alias_primary).alias("__primary"),
+            canon_col(alias, alias_key).alias("__val"),
+            canon_col(alias, alias_primary).alias("__primary"),
         ).distinct()
         aliased = unknown.join(F.broadcast(amap), on="__val", how="inner")
         unknown = unknown.join(F.broadcast(amap.select("__val")), on="__val", how="left_anti")

@@ -15,7 +15,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from safedata_validator_spark.engine.common import as_violations, sql_ident
+from safedata_validator_spark.engine.common import as_violations
 from safedata_validator_spark.rules.model import Rule
 
 
@@ -35,17 +35,13 @@ def format_class(col: Column) -> Column:
     )
 
 
-def eval_format_consistency(df: DataFrame, rule: Rule, ruleset, dims) -> DataFrame:
+def format_consistency_from_counts(counts: DataFrame, rule: Rule, dims: dict) -> DataFrame:
     """One violation per (scope) where a string column mixes format classes
-    (e.g. ISO dates and datetimes in one column — field.py:2069-2095).
-    Aggregation-shaped: groupBy(scope, class).count — tiny shuffle."""
+    (e.g. ISO dates and datetimes in one column — field.py:2069-2095), from
+    the rule's census slice of per-scope format-class counts."""
     col = rule.column
-    scope = F.expr(ruleset.scope)
-    classes = (
-        df.select(format_class(F.col(sql_ident(col))).alias("__fmt"), scope.alias("__scope"))
-        .where(F.col("__fmt").isNotNull())
-        .groupBy("__scope", "__fmt")
-        .agg(F.count(F.lit(1)).alias("__n"))
+    classes = counts.where(F.col("__val").isNotNull()).select(
+        "__scope", F.col("__val").alias("__fmt"), "__n"
     )
     per_scope = classes.groupBy("__scope").agg(
         F.count(F.lit(1)).alias("__n_classes"),

@@ -36,7 +36,7 @@ def unique_from_counts(counts: DataFrame, rule: Rule, keys: list[str]) -> DataFr
     )
 
 
-def eval_unique_key(df: DataFrame, rule: Rule, ruleset, dims) -> DataFrame:
+def eval_unique_key(df: DataFrame, rule: Rule, ruleset) -> DataFrame:
     """params: keys: list[str] (defaults to ruleset.key_cols)."""
     keys = list(rule.params.get("keys", ruleset.key_cols))
     counts = df.groupBy(*[F.col(sql_ident(k)) for k in keys], F.expr(ruleset.scope).alias("__scope")).agg(

@@ -9,16 +9,17 @@ Execution shape (cf. SURVEY §3.1 "Spark lifecycle equivalent"):
 1. driver lints the rule set (fail fast, analogue of descriptor validation);
 2. two small shared aggregates run eagerly and come back as driver-local
    tables: the per-scope aggregate (profile sketches, extent min/max,
-   verdict row counts, sequential order maxima) and the stacked
-   categorical counts;
+   verdict row counts, sequential order maxima) and the stacked census
+   counts (``referential.census_counts``) that six plan families slice;
 3. ALL row-level rules fuse into ONE projection over the fact scan
    (``row_violations``, which the streaming path shares) — each compiled
    predicate contributes a conditional violation struct and the non-null
    structs are exploded out; Catalyst sees a single pass, columns not
    referenced by any rule are pruned from the parquet/Iceberg read;
-4. plan-level rules (uniqueness, ordering, referential, extents, drift,
-   hierarchy) derive their violations from the shared aggregates or from
-   aggregation/join shapes chosen for 10^12-row scale (see their modules);
+4. plan-level rules derive their violations from the shared aggregates or
+   from aggregation/join shapes chosen for 10^12-row scale (see their
+   modules); ``unique_key`` on keys no sequential rule shares is the only
+   plan family with its own count;
 5. violations union into one DataFrame; verdicts are a groupBy over it,
    zero-filled against the declared rule list (a rule with no violations
    must still report passed=true — the reference's pass verdict is exactly
@@ -40,6 +41,7 @@ from safedata_validator_spark.engine.common import (
     entity_col,
     local_table,
     localize,
+    sql_ident,
 )
 from safedata_validator_spark.rules.compilers import compile_row_rule
 from safedata_validator_spark.rules.model import ERROR, Rule, RuleSet
@@ -137,6 +139,40 @@ def row_violations(df: DataFrame, ruleset: RuleSet, row_rules: list[Rule]) -> Da
     )
 
 
+def _census(df: DataFrame, plan_rules: list[Rule]) -> tuple[dict, dict[int, str]]:
+    """The run's census entries, key → (value, optional second value) as
+    strings, and id(rule) → key for every census rule. A categorical rule's
+    key is its column (rules auditing one column share its entry); any other
+    rule's is 'type:position:rule_id' (unique even when rule ids repeat),
+    prefixed with ':' until no categorical column has that name."""
+    from safedata_validator_spark.engine.drift import histogram_bucket
+    from safedata_validator_spark.engine.referential import canon_col
+    from safedata_validator_spark.engine.typing_rules import format_class
+
+    categorical = ("levels_audit", "ref_integrity")
+    columns = {r.column for r in plan_rules if r.rule_type in categorical}
+    entries, keys = {}, {}
+    for i, r in enumerate(plan_rules):
+        p, key = r.params, f"{r.rule_type}:{i}:{r.rule_id}"
+        while key in columns:
+            key = ":" + key
+        if r.rule_type in categorical:
+            key, values = r.column, (canon_col(df, r.column), None)
+        elif r.rule_type == "drift":  # a NULL split flag joins neither cohort
+            bucket = histogram_bucket(p.get("expr", sql_ident(r.column)), p["lo"], p["hi"], int(p.get("bins", 20)))
+            values = bucket.cast("string"), F.expr(p["split"]).cast("string") if "split" in p else None
+        elif r.rule_type == "format_consistency":
+            values = format_class(F.col(sql_ident(r.column))), None
+        elif r.rule_type == "name_resolution":
+            values = canon_col(df, p.get("name_col", "name")), canon_col(df, p.get("rank_col", "rank"))
+        elif r.rule_type == "hierarchy_congruence":
+            values = canon_col(df, p["child_col"]), canon_col(df, p["ancestor_col"])
+        else:
+            continue
+        keys[id(r)], entries[key] = key, values
+    return entries, keys
+
+
 class ValidationEngine:
     def _split_rules(self, df: DataFrame, ruleset: RuleSet) -> tuple[list[Rule], list[Rule]]:
         problems = registry.lint_ruleset(ruleset, df.columns)
@@ -153,15 +189,16 @@ class ValidationEngine:
         plan_rules: list[Rule],
         dims: dict,
         scope_agg: DataFrame,
-        cat_counts: DataFrame | None,
+        census: DataFrame | None,
+        census_keys: dict[int, str],
         order_max: dict[str, int | None],
     ) -> list[DataFrame]:
         """Evaluate plan-level rules over the run's shared aggregates:
-        ``scope_agg`` (the per-scope aggregate), ``cat_counts`` (the stacked
-        categorical counts; None when no rule needs them) and ``order_max``
-        (the global maximum of each sequential order column; empty when the
-        scope aggregate was too large to localize). Rules that share a
-        relational shape share ONE pass over the data:
+        ``scope_agg`` (the per-scope aggregate), ``census`` (the stacked
+        census, sliced by ``census_keys``; None when no rule needs it) and
+        ``order_max`` (the global maximum of each sequential order column;
+        empty when the scope aggregate was too large to localize). Rules
+        that share a relational shape share ONE pass over the data:
 
         * monotone + transition_grammar with the same (group, order,
           block_size) evaluate in ONE projection over one adjacent-pairs
@@ -171,10 +208,10 @@ class ValidationEngine:
           running only over flagged conversations (or one key-count
           aggregation over the whole table on the exact path);
         * ALL extent rules read the shared per-scope aggregate;
-        * ALL level audits + referential membership checks derive from the
-          stacked categorical counts.
+        * level audits, referential membership, drift, format consistency,
+          name resolution and hierarchy congruence derive from the census.
 
-        Every other plan rule goes through its registry evaluator.
+        A unique_key rule on keys no sequential rule shares counts its own.
 
         At 10^12 rows the scan/shuffle count, not expression work, dominates
         cost — this is the engine's equivalent of the reference's single-pass
@@ -182,10 +219,9 @@ class ValidationEngine:
         """
         from collections import defaultdict
 
-        from safedata_validator_spark.engine import extents, ordering, referential, uniqueness
+        from safedata_validator_spark.engine import drift, extents, hierarchy, ordering, referential, typing_rules, uniqueness
 
         parts: list[DataFrame] = []
-        handled: set[int] = set()
 
         # -- adjacency fusion ------------------------------------------------
         # ALL adjacency rules sharing (group, order) evaluate in ONE projection
@@ -199,7 +235,6 @@ class ValidationEngine:
             values = sorted({r.column for r in rules})
             pairs = ordering.build_pairs(df, ruleset, group, order, values, block_size)
             parts.append(ordering.fused_pairs_violations(pairs, rules, group, order))
-            handled.update(id(r) for r in rules)
 
         # -- sequential + unique_key fusion -----------------------------------
         # Fast path (the global max order value is known and within
@@ -239,11 +274,9 @@ class ValidationEngine:
             parts.append(ordering.sequential_from_counts(counts, sr, group, order))
             if sr.params.get("examples"):
                 parts.append(ordering.sequential_examples(df, counts, sr, ruleset, group, order))
-            handled.add(id(sr))
-            for ur in uniq_rules:
-                if id(ur) not in handled and list(ur.params.get("keys", ruleset.key_cols)) == [group, order]:
-                    parts.append(uniqueness.unique_from_counts(counts, ur, [group, order]))
-                    handled.add(id(ur))
+            shared = [ur for ur in uniq_rules if list(ur.params.get("keys", ruleset.key_cols)) == [group, order]]
+            parts.extend(uniqueness.unique_from_counts(counts, ur, [group, order]) for ur in shared)
+            uniq_rules = [ur for ur in uniq_rules if ur not in shared]
 
         # -- extents -----------------------------------------------------------
         # the min/max fold rides the shared per-scope aggregate — zero extra
@@ -253,25 +286,24 @@ class ValidationEngine:
         congr_rules = [r for r in plan_rules if r.rule_type == "extent_congruence"]
         parts.extend(extents.extents_from_agg(scope_agg, extent_rules))
         parts.extend(extents.congruence_from_agg(scope_agg, congr_rules))
-        handled.update(id(r) for r in extent_rules + congr_rules)
 
-        # -- categorical rules -------------------------------------------------
-        # level audits + referential membership over ANY number of columns
-        # slice the one stacked-counts table (see referential module)
+        # -- census rules ------------------------------------------------------
+        # six families over ANY number of rules slice the one stacked census
         from_counts = {
             "levels_audit": referential.levels_audit_from_counts,
             "ref_integrity": referential.ref_integrity_from_counts,
+            "drift": drift.drift_from_counts,
+            "format_consistency": typing_rules.format_consistency_from_counts,
+            "name_resolution": hierarchy.name_resolution_from_counts,
+            "hierarchy_congruence": hierarchy.hierarchy_congruence_from_counts,
         }
         for rule in plan_rules:
-            if rule.rule_type in from_counts:
-                sliced = cat_counts.where(F.col("__col") == rule.column).drop("__col")
+            if id(rule) in census_keys:
+                sliced = census.where(F.col("__col") == census_keys[id(rule)]).drop("__col")
                 parts.append(from_counts[rule.rule_type](sliced, rule, dims))
-                handled.add(id(rule))
 
-        # -- everything else through the registry ------------------------------
-        for rule in plan_rules:
-            if id(rule) not in handled:
-                parts.append(registry.PLAN_EVALUATORS[rule.rule_type](df, rule, ruleset, dims))
+        # -- unique_key on keys no sequential rule shares: its own count -------
+        parts.extend(uniqueness.eval_unique_key(df, ur, ruleset) for ur in uniq_rules)
         return parts
 
     def _verdicts(
@@ -335,11 +367,14 @@ class ValidationEngine:
         1. ONE per-scope aggregation = profiler sketches + extent min/max +
            verdict row counts + sequential order maxima (eager; rows =
            #scopes);
-        2. ONE stacked categorical-counts pass for every levels_audit /
-           ref_integrity column (eager; rows ≈ Σ distinct values);
+        2. ONE stacked census pass for every levels_audit / ref_integrity
+           column and every drift, format_consistency, name_resolution and
+           hierarchy_congruence rule (eager; rows ≈ Σ distinct values per
+           entry);
 
         then, in the violations plan, 7 for the transcript preset (the
-        budget test_plans.test_full_validate_bounds_fact_scans pins):
+        budget test_plans.test_full_validate_bounds_fact_scans pins), plus
+        one per unique_key rule on keys no sequential rule shares:
 
         3. fused row-rule scan (the only pass touching heavy text columns);
         4-5. blocked-window adjacency (lag pass + block summary), ALL
@@ -358,13 +393,14 @@ class ValidationEngine:
         The shared aggregates are computed EAGERLY (two small jobs at call
         time) and re-injected as driver-local tables (JVM LocalRelations,
         see ``common.localize``): their size is bounded by #scopes and
-        Σ distinct categorical-column values — both bounded by design (verdict
-        partitions; level/membership domains) — and a local table guarantees
-        every downstream consumer reads the computed rows instead of
+        Σ distinct values per census entry — both bounded by design (verdict
+        partitions; level/membership domains, histogram bins, claimed names)
+        — and a local table guarantees every downstream consumer reads the
+        computed rows instead of
         replaying the fact scan inside broadcast-subquery jobs, which do not
-        share adaptive query stages with the main action. Should a
-        categorical column turn out high-cardinality, the aggregate falls
-        back to a persisted distributed plan (over ``LOCALIZE_ROWS`` rows or
+        share adaptive query stages with the main action. Should a census
+        entry turn out high-cardinality, the aggregate falls back to a
+        persisted distributed plan (over ``LOCALIZE_ROWS`` rows or
         ``LOCALIZE_BYTES`` bytes).
         """
         from safedata_validator_spark.engine import extents as ext
@@ -381,13 +417,7 @@ class ValidationEngine:
         extent_rules = [
             r for r in plan_rules if r.rule_type in ("extent", "extent_congruence")
         ]
-        cat_cols = sorted(
-            {
-                r.column
-                for r in plan_rules
-                if r.rule_type in ("levels_audit", "ref_integrity") and r.column
-            }
-        )
+        census_entries, census_keys = _census(df, plan_rules)
         # stats default to plan-rule-referenced + typed columns — free-text
         # columns with only row rules carry no sketch worth their bandwidth
         # (see default_profile_columns); pass profile_columns to override
@@ -427,14 +457,14 @@ class ValidationEngine:
             scope_fut = pool.submit(
                 localize, scope_agg_plan, LOCALIZE_ROWS, LOCALIZE_BYTES
             )
-            cat_fut = (
+            census_fut = (
                 pool.submit(
                     localize,
-                    referential.categorical_counts(df, ruleset.scope, cat_cols),
+                    referential.census_counts(df, ruleset.scope, census_entries),
                     LOCALIZE_ROWS,
                     LOCALIZE_BYTES,
                 )
-                if cat_cols
+                if census_entries
                 else None
             )
             # overlap: the fused row-rule scan consumes nothing from the
@@ -461,15 +491,15 @@ class ValidationEngine:
                     )
                     for o in seq_orders
                 }
-            cat_counts = None
-            if cat_fut is not None:
-                cat_counts, cat_local = cat_fut.result()
-                if not cat_local:
-                    cached.append(cat_counts)
+            census = None
+            if census_fut is not None:
+                census, census_local = census_fut.result()
+                if not census_local:
+                    cached.append(census)
 
         parts.extend(
             self._plan_violations(
-                df, ruleset, plan_rules, dims, scope_agg, cat_counts, order_max
+                df, ruleset, plan_rules, dims, scope_agg, census, census_keys, order_max
             )
         )
         viols = (

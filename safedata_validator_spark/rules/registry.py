@@ -5,10 +5,10 @@ Two kinds of rules:
 * ROW rules compile to Column predicates and are fused into ONE scan
   (rules.compilers).
 * PLAN rules need their own relational shape (aggregation, window, join).
-  The FUSED families are evaluated together over the run's shared
-  aggregates inside ``ValidationEngine._plan_violations``; the others are
-  evaluated one rule at a time by functions (df, rule, ruleset, dims) →
-  violations DataFrame.
+  ``ValidationEngine._plan_violations`` evaluates them together over the
+  run's shared aggregates: six families slice the one stacked census, and
+  ``unique_key`` on keys no sequential rule shares is the only family that
+  counts on its own.
 
 Unknown rule types raise at compile time — the reference degrades unknown
 field types to base checks with an error (field.py:641-651); an engine
@@ -18,46 +18,16 @@ hard-abort behaviour for resource problems, logger.py:287-304).
 
 from __future__ import annotations
 
-from typing import Callable
-
-from pyspark.sql import DataFrame
-
-from safedata_validator_spark.engine.drift import eval_drift
-from safedata_validator_spark.engine.hierarchy import (
-    eval_hierarchy_congruence,
-    eval_name_resolution,
-)
-from safedata_validator_spark.engine.typing_rules import eval_format_consistency
-from safedata_validator_spark.engine.uniqueness import eval_unique_key
 from safedata_validator_spark.rules.compilers import ROW_COMPILERS
-from safedata_validator_spark.rules.model import Rule, RuleSet
+from safedata_validator_spark.rules.model import RuleSet
 
-PlanEvaluator = Callable[[DataFrame, Rule, RuleSet, dict], DataFrame]
-
-#: Plan families evaluated one rule at a time. ``unique_key`` over a
-#: sequential rule's (group, order) instead shares that rule's key counts.
-PLAN_EVALUATORS: dict[str, PlanEvaluator] = {
-    "unique_key": eval_unique_key,
-    "drift": eval_drift,
-    "hierarchy_congruence": eval_hierarchy_congruence,
-    "name_resolution": eval_name_resolution,
-    "format_consistency": eval_format_consistency,
-}
-
-#: Plan families evaluated together over the run's shared aggregates.
-FUSED_PLAN_RULES = frozenset(
+PLAN_RULE_TYPES = frozenset(
     {
-        "sequential",
-        "monotone",
-        "transition_grammar",
-        "ref_integrity",
-        "levels_audit",
-        "extent",
-        "extent_congruence",
+        "sequential", "monotone", "transition_grammar", "unique_key", "extent", "extent_congruence",
+        "levels_audit", "ref_integrity", "drift", "format_consistency", "name_resolution",
+        "hierarchy_congruence",
     }
 )
-
-PLAN_RULE_TYPES = FUSED_PLAN_RULES | set(PLAN_EVALUATORS)
 
 
 def known_rule_types() -> set[str]:

@@ -42,7 +42,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from safedata_validator_spark.engine.drift import compare_histograms
+from safedata_validator_spark.engine.drift import compare_histograms, histogram_bucket
 
 
 def windowed_histogram(
@@ -61,8 +61,7 @@ def windowed_histogram(
     engine.drift.histogram); NULL values are dropped. Each window's rows
     are emitted exactly once, complete, when the watermark
     (max event time − ``delay``) reaches the window end."""
-    v = F.expr(value_expr).cast("double")
-    bucket = F.width_bucket(v, F.lit(float(lo)), F.lit(float(hi)), F.lit(nbins))
+    bucket = histogram_bucket(value_expr, lo, hi, nbins)
     return (
         # watermarks require TIMESTAMP (with tz); parquet sources often carry
         # TIMESTAMP_NTZ — the cast is value-preserving under the session's

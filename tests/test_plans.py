@@ -164,6 +164,52 @@ def test_full_validate_bounds_fact_scans(spark, dims, tmp_path):
     # is a LocalTableScan — zero fact scans, asserted by the budget above)
 
 
+def test_census_families_share_one_scan(spark, dims, tmp_path):
+    """Six census-shaped plan families slice the one eager census, so a
+    rule set mixing them with a row rule and a unique_key on keys no
+    sequential rule shares plans two fact scans in its violations: the row
+    scan and unique_key's own count."""
+    from safedata_validator_spark.engine.hierarchy import build_closure
+
+    src = str(tmp_path / "fact")
+    spark.range(2000).select(
+        F.col("id"),
+        (F.col("id") % 3).cast("string").alias("grp"),
+        F.element_at(F.array(*[F.lit(r) for r in ("user", "assistant", "tool")]),
+                     (F.col("id") % 3 + 1).cast("int")).alias("role"),
+        (F.col("id") % 17).cast("double").alias("v"),
+        F.when(F.col("id") % 2 == 0, "2024-01-01").otherwise("7").alias("d"),
+        F.when(F.col("id") % 5 == 0, "ghost").otherwise("bash").alias("cap"),
+        F.lit("leaf").alias("rank"),
+        F.when(F.col("id") % 4 == 0, "io").otherwise("compute").alias("family"),
+        (F.col("id") % 100).alias("k"),
+    ).write.parquet(src)
+    df = spark.read.parquet(src)
+    d = dict(dims, taxonomy_closure=build_closure(dims["taxonomy_nodes"]))
+    rs = RuleSet(
+        name="t", key_cols=["id"], scope="grp",
+        rules=[
+            Rule("nb", "not_blank", column="role"),
+            Rule("la", "levels_audit", column="role", params={"dim": "roles", "dim_key": "role"}),
+            Rule("dr", "drift", column="v",
+                 params={"lo": 0.0, "hi": 17.0, "bins": 17, "split": "id % 2 = 0",
+                         "psi_threshold": 0.1}),
+            Rule("fmt", "format_consistency", column="d"),
+            Rule("u", "unique_key", params={"keys": ["k", "grp"]}),
+            Rule("nr", "name_resolution", column="cap",
+                 params={"dim": "taxonomy_nodes", "name_col": "cap", "rank_col": "rank"}),
+            Rule("hc", "hierarchy_congruence",
+                 params={"nodes_dim": "taxonomy_nodes", "closure_dim": "taxonomy_closure",
+                         "child_col": "cap", "ancestor_col": "family"}),
+        ],
+    )
+    viols = ValidationEngine().validate(df, rs, d, with_stats=False).violations
+    n = _physical(viols).count("Scan parquet")
+    assert n <= 2, f"{n} parquet scans in the violations plan (budget 2)"
+    got = {v["rule_id"] for v in viols.collect()}
+    assert {"la.unused", "fmt", "u", "nr.missing", "hc"} <= got, got
+
+
 def test_no_python_row_udfs_anywhere(spark, dims, tmp_path):
     """North-rule mandate: no per-row Python. The full rule set's plan must
     contain no BatchEvalPython (row UDF) nodes; ArrowEvalPython (vectorized)

@@ -132,12 +132,22 @@ def test_drift_rule_split_cohorts(spark):
     got = ValidationEngine().validate(df, rs, with_stats=False).violations.collect()
     assert len(got) == 1 and "drift on v" in got[0]["message"]
 
-    # identical cohorts → no drift
+    # identical cohorts → no drift; rows whose split is NULL join neither
+    # cohort, however far they sit from both
     df2 = spark.createDataFrame(
-        [("A", float(i % 10)) for i in range(200)] + [("B", float(i % 10)) for i in range(200)],
+        [("A", float(i % 10)) for i in range(200)] + [("B", float(i % 10)) for i in range(200)]
+        + [(None, 14.0)] * 300,
         "cohort string, v double",
     )
     assert ValidationEngine().validate(df2, rs, with_stats=False).violations.count() == 0
+
+    # 15 bins: the KS cumulative sum runs in bucket order 2 < 3 < 10, giving
+    # 0.5; ordering bucket 10 before 2 (as text would) would give 1.0
+    df3 = spark.createDataFrame(
+        [("B", 1.5), ("B", 9.5)] * 50 + [("A", 2.5)] * 100, "cohort string, v double"
+    )
+    got = ValidationEngine().validate(df3, rs, with_stats=False).violations.collect()
+    assert len(got) == 1 and " ks=0.5 " in got[0]["message"], got
 
 def test_drift_rule_against_stored_baseline_histogram(spark):
     """Cross-snapshot drift: the baseline is a STORED (scope, bucket, n)

@@ -526,3 +526,87 @@ def test_format_consistency_quotes_hostile_column_name(spark):
     got = run(_hostile_copy(df, {"d": name}), name)
     assert got == {(s, e, name, v, name + m[1:]) for s, e, _, v, m in plain}
     assert {g[0] for g in got} == {"a"}
+
+
+def test_name_resolution_quotes_hostile_column_names(spark, dims):
+    """name_resolution reads the claimed name and rank by quoted identifier:
+    hostile names give the violations of a plain-named copy."""
+    names = {"cap": "c.`ä`", "rank": "r.ank"}
+    df = spark.createDataFrame(
+        [(1, "bash", "leaf"), (2, "bash-legacy", "leaf"), (3, "ghost", "leaf"), (4, "ghost", None)],
+        "id int, cap string, rank string",
+    )
+
+    def run(df, n):
+        rs = RuleSet(name="t", key_cols=["id"], rules=[
+            Rule("nr", "name_resolution", column=n["cap"],
+                 params={"dim": "taxonomy_nodes", "name_col": n["cap"], "rank_col": n["rank"]}),
+        ])
+        return {
+            (v["rule_id"], v["severity"], v["entity"], v["column"], v["value"], v["message"])
+            for v in ENGINE.validate(df, rs, dims, with_stats=False).violations.collect()
+        }
+
+    plain = run(df, {c: c for c in names})
+    got = run(_hostile_copy(df, names), names)
+    assert got == {(r, s, e, names["cap"], v, m) for r, s, e, _, v, m in plain}
+    assert sorted(r for r, *_ in got) == ["nr.missing", "nr.missing", "nr.synonym"]
+
+
+def test_hierarchy_congruence_quotes_hostile_column_names(spark, dims):
+    """hierarchy_congruence reads the child and ancestor columns by quoted
+    identifier: hostile names give the violations of a plain-named copy."""
+    from safedata_validator_spark.engine.hierarchy import build_closure
+
+    names = {"leaf": "c.h", "family": "a.`nc`"}
+    d = dict(dims, taxonomy_closure=build_closure(dims["taxonomy_nodes"]))
+    df = spark.createDataFrame(
+        [(1, "bash", "compute"), (2, "bash", "io"), (3, "ghost", "io"), (4, None, "io")],
+        "id int, leaf string, family string",
+    )
+
+    def run(df, n):
+        rs = RuleSet(name="t", key_cols=["id"], rules=[
+            Rule("hc", "hierarchy_congruence",
+                 params={"nodes_dim": "taxonomy_nodes", "closure_dim": "taxonomy_closure",
+                         "child_col": n["leaf"], "ancestor_col": n["family"]}),
+        ])
+        return {
+            (v["entity"], v["column"], v["value"], v["message"])
+            for v in ENGINE.validate(df, rs, d, with_stats=False).violations.collect()
+        }
+
+    plain = run(df, {c: c for c in names})
+    got = run(_hostile_copy(df, names), names)
+    assert got == {
+        (e.replace("leaf=", "c.h=").replace("/family=", "/a.`nc`="), "c.h", v, m)
+        for e, _, v, m in plain
+    }
+    assert {e for e, *_ in got} == {"c.h=bash/a.`nc`=io", "c.h=ghost/a.`nc`=io"}
+
+
+def test_extent_rules_quote_hostile_column_name(spark):
+    """extent and extent_congruence aggregate the rule column by quoted
+    identifier under plain aliases: a hostile name gives the violations of a
+    plain-named copy."""
+    name = "n.`um`"
+    df = spark.createDataFrame(
+        [(1, "a", 5), (2, "a", 50), (3, "b", 7), (4, "c", None)], "id int, grp string, n int"
+    )
+
+    def run(df, column):
+        rs = RuleSet(name="t", key_cols=["id"], scope="grp", rules=[
+            Rule("ext", "extent", column=column, params={"lo": 0, "hi": 10}),
+            Rule("cg", "extent_congruence", column=column,
+                 params={"declared_lo": 0, "declared_hi": 40}),
+            Rule("cg0", "extent_congruence", column=column),
+        ])
+        return {
+            (v["rule_id"], v["scope"], v["entity"], v["column"], v["value"], v["message"])
+            for v in ENGINE.validate(df, rs, with_stats=False).violations.collect()
+        }
+
+    plain = run(df, "n")
+    got = run(_hostile_copy(df, {"n": name}), name)
+    assert got == {(r, s, e, name, v, name + m[1:]) for r, s, e, _, v, m in plain}
+    assert {(r, s) for r, s, *_ in got} == {("ext", "a"), ("cg", "a"), ("cg0", "c")}
