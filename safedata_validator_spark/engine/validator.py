@@ -61,7 +61,7 @@ class RunResult:
     """Outputs of one validation run. ``violations``/``verdicts`` are the two
     result tables (SURVEY §1.1 'Validation report'); ``stats`` is the
     single-scan column profile. ``cached`` holds the run's shared per-scope
-    aggregates (tiny: one row per scope / distinct categorical value) —
+    aggregates (tiny: one row per scope / distinct census value) —
     persisted so violations, verdicts and stats all derive from ONE fact
     pass; call ``unpersist()`` when done with the result DataFrames."""
 
@@ -219,7 +219,8 @@ class ValidationEngine:
         """
         from collections import defaultdict
 
-        from safedata_validator_spark.engine import drift, extents, hierarchy, ordering, referential, typing_rules, uniqueness
+        from safedata_validator_spark.engine import drift, extents, hierarchy, ordering
+        from safedata_validator_spark.engine import referential, typing_rules, uniqueness
 
         parts: list[DataFrame] = []
 
