@@ -29,7 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from safedata_validator_spark.engine.common import as_violations, local_table
+from safedata_validator_spark.engine.common import as_violations, fused_violations, local_table
 from safedata_validator_spark.rules.model import Rule
 
 DEFAULT_BLOCK_SIZE = 4096
@@ -238,13 +238,12 @@ def flagged_sequence_groups(
     return joined.where(~ok).select(group).distinct()
 
 
-def sequential_from_counts(counts: DataFrame, rule: Rule, group: str, order: str) -> DataFrame:
-    """``order`` per ``group`` must be exactly start..start+n-1 (params:
-    group, order, start — default 1). Pure aggregation over the key counts,
-    NO window: {1..n} ⟺ min=start ∧ max=start+n-1 ∧ count=n ∧ distinct=n,
-    where the distinct count is free (it is the level-1 row count). One
-    violation row per bad group with diagnostic counts (the reference
-    reports per-row errors but counts at sheet level, field.py:779-790)."""
+def _bad_sequences(counts: DataFrame, rule: Rule, group: str, order: str) -> DataFrame:
+    """(group, __scope) rows whose ``order`` values are not exactly
+    start..start+n-1, with their diagnostic counts. Pure aggregation over
+    the key counts, NO window: {1..n} ⟺ min=start ∧ max=start+n-1 ∧
+    count=n ∧ distinct=n, where the distinct count is free (it is the
+    level-1 row count)."""
     start = int(rule.params.get("start", 1))
     agg = counts.groupBy(group, "__scope").agg(
         F.sum("__dup_n").alias("__n"),
@@ -259,7 +258,16 @@ def sequential_from_counts(counts: DataFrame, rule: Rule, group: str, order: str
         & (F.col("__max") == F.col("__n") + (start - 1))
         & (F.col("__nd") == F.col("__n"))
     )
-    bad = agg.where(~ok)
+    return agg.where(~ok)
+
+
+def sequential_from_counts(counts: DataFrame, rule: Rule, group: str, order: str) -> DataFrame:
+    """``order`` per ``group`` must be exactly start..start+n-1 (params:
+    group, order, start — default 1; see ``_bad_sequences``). One violation
+    row per bad group with diagnostic counts (the reference reports per-row
+    errors but counts at sheet level, field.py:779-790)."""
+    start = int(rule.params.get("start", 1))
+    bad = _bad_sequences(counts, rule, group, order)
     msg = F.concat(
         F.lit(f"{order} not consecutive from {start}: n="),
         F.col("__n").cast("string"),
@@ -288,20 +296,7 @@ def sequential_examples(
     then orders only violating conversations. ``max_examples`` bounds output."""
     start = int(rule.params.get("start", 1))
     max_examples = int(rule.params.get("max_examples", 100))
-    agg = counts.groupBy(group, "__scope").agg(
-        F.sum("__dup_n").alias("__n"),
-        F.min(order).alias("__min"),
-        F.max(order).alias("__max"),
-        F.count(F.col(order)).alias("__nd"),
-        F.sum(F.when(F.col(order).isNull(), F.col("__dup_n")).otherwise(0)).alias("__n_null"),
-    )
-    ok = (
-        (F.col("__n_null") == 0)
-        & (F.col("__min") == start)
-        & (F.col("__max") == F.col("__n") + (start - 1))
-        & (F.col("__nd") == F.col("__n"))
-    )
-    bad_groups = agg.where(~ok).select(group)
+    bad_groups = _bad_sequences(counts, rule, group, order).select(group)
     sub = df.join(F.broadcast(bad_groups), group, "left_semi")
     w = Window.partitionBy(group).orderBy(F.col(order).asc_nulls_last())
     ranked = sub.select(
@@ -427,47 +422,14 @@ def fused_pairs_violations(
     pairs: DataFrame, rules: list[Rule], group: str, order: str
 ) -> DataFrame:
     """ALL adjacency rules sharing one pairs plan evaluated in ONE projection
-    — each rule contributes a conditional violation struct, non-null structs
-    explode out (the same fusion shape as the validator's row-rule scan).
+    (``common.fused_violations``, the fusion shape of the row-rule scan).
     With a single consumer the pairs plan executes exactly once per run;
     two separate consumers would defeat exchange reuse the moment column
     pruning differentiates their subplans."""
-    structs = []
-    for r in rules:
-        pred, value, msg = _ADJACENCY_CHECKS[r.rule_type](r, group, order)
-        structs.append(
-            F.when(
-                pred,
-                F.struct(
-                    F.lit(r.rule_id).alias("rule_id"),
-                    F.lit(r.severity).alias("severity"),
-                    F.lit(r.column or "").alias("column"),
-                    value.cast("string").alias("value"),
-                    msg.alias("message"),
-                ),
-            )
-        )
+    checks = [(r, *_ADJACENCY_CHECKS[r.rule_type](r, group, order)) for r in rules]
     entity = F.concat(
         F.lit(f"{group}="), F.coalesce(F.col(group).cast("string"), F.lit("∅")),
         F.lit(f"/{order}="), F.coalesce(F.col(order).cast("string"), F.lit("∅")),
     )
-    # Shape note: where(size)+explode kept deliberately — see the identical
-    # adjudication in validator.row_violations (the explode_outer
-    # "evaluate once" variant drops the Generate out of codegen and costs
-    # 2-3× at 4M turns; the pushed size filter runs codegen'd and the
-    # projection above it computes entity/__v for surviving pairs only).
-    fused = pairs.select(
-        F.col("__scope").cast("string").alias("__scope"),
-        entity.alias("__entity"),
-        F.array_compact(F.array(*structs)).alias("__v"),
-    ).where(F.size("__v") > 0)
-    return fused.select("__scope", "__entity", F.explode("__v").alias("v")).select(
-        F.col("v.rule_id").alias("rule_id"),
-        F.col("v.severity").alias("severity"),
-        F.col("__scope").alias("scope"),
-        F.col("__entity").alias("entity"),
-        F.col("v.column").alias("column"),
-        F.col("v.value").alias("value"),
-        F.col("v.message").alias("message"),
-    )
+    return fused_violations(pairs, F.col("__scope"), entity, checks)
 

@@ -39,6 +39,7 @@ from safedata_validator_spark.engine import checkpoint as ckpt
 from safedata_validator_spark.engine.common import (
     empty_violations,
     entity_col,
+    fused_violations,
     local_table,
     localize,
     sql_ident,
@@ -96,47 +97,12 @@ class RunResult:
 
 def row_violations(df: DataFrame, ruleset: RuleSet, row_rules: list[Rule]) -> DataFrame:
     """ALL row rules fused into ONE projection over ``df`` (batch or
-    streaming): each compiled predicate contributes a conditional violation
-    struct and the non-null structs explode out."""
-    checks = [compile_row_rule(r) for r in row_rules]
-    structs = [
-        F.when(
-            chk.predicate,
-            F.struct(
-                F.lit(chk.rule.rule_id).alias("rule_id"),
-                F.lit(chk.rule.severity).alias("severity"),
-                F.lit(chk.rule.column or "").alias("column"),
-                chk.value.cast("string").alias("value"),
-                F.lit(chk.message).alias("message"),
-            ),
-        )
-        for chk in checks
+    streaming; ``common.fused_violations``)."""
+    checks = [
+        (chk.rule, chk.predicate, chk.value, F.lit(chk.message))
+        for chk in map(compile_row_rule, row_rules)
     ]
-    # Shape note (A/B at 4M turns): keep the where(size(__v) > 0) + explode
-    # formulation. The pushed-down size filter does inline the whole struct
-    # array into a Filter below the projection, but that filter runs INSIDE
-    # whole-stage codegen over all rows, and the projection + generate above
-    # it then compute entity/__v for the (rare) surviving rows only. The
-    # tempting "evaluate once" rewrite — explode_outer + IsNotNull on the
-    # generated attribute — disables codegen for the Generate (outer
-    # generates don't codegen), so the whole battery evaluates interpreted:
-    # flagship 12-13 s → 22-34 s.
-    fused = df.select(
-        F.expr(ruleset.scope).cast("string").alias("__scope"),
-        entity_col(ruleset.key_cols).alias("__entity"),
-        F.array_compact(F.array(*structs)).alias("__v"),
-    ).where(F.size("__v") > 0)
-    return fused.select(
-        "__scope", "__entity", F.explode("__v").alias("v")
-    ).select(
-        F.col("v.rule_id").alias("rule_id"),
-        F.col("v.severity").alias("severity"),
-        F.col("__scope").alias("scope"),
-        F.col("__entity").alias("entity"),
-        F.col("v.column").alias("column"),
-        F.col("v.value").alias("value"),
-        F.col("v.message").alias("message"),
-    )
+    return fused_violations(df, F.expr(ruleset.scope), entity_col(ruleset.key_cols), checks)
 
 
 def _census(df: DataFrame, plan_rules: list[Rule]) -> tuple[dict, dict[int, str]]:

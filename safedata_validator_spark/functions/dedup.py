@@ -1,13 +1,11 @@
 """Deduplication operators for training-data pipelines.
 
-Exact (hash-groupBy), n-gram Jaccard (shingle self-join), MinHash+LSH
+N-gram Jaccard (shingle self-join), MinHash+LSH
 (shingle → minhash signature → band buckets → bucket join → exact verify),
 SimHash (token bit-vote → hamming buckets), and embedding-cosine near-dup
 (see functions.similarity).
 
 Scale notes:
-* Exact dedup is one groupBy on a 64-bit fingerprint — shuffle volume is
-  bounded by distinct fingerprints (map-side combine collapses repeats).
 * Jaccard self-join explodes shingles; ``max_df`` drops ubiquitous shingles
   (stopword runs) whose buckets would be quadratic — the standard
   frequency-cut used by large-corpus dedup pipelines.
@@ -32,30 +30,12 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from safedata_validator_spark.engine.common import local_table, localize, sql_ident
-from safedata_validator_spark.functions.text import fingerprint64, normalize_text
+from safedata_validator_spark.functions.text import normalize_text
 
 #: Edge count up to which a duplicate graph is closed on the driver: the
 #: ``connected_components`` union-find, and ``minhash_lsh_dedup``'s
 #: driver-local candidate set under ``adaptive_cut``.
 LOCAL_EDGES = 50_000
-
-
-def exact_dedup_groups(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """Group exact duplicates (after normalisation) →
-    (fingerprint, keep_id, n_dups, member_ids). ``keep_id`` = min id."""
-    return (
-        df.select(
-            F.col(sql_ident(id_col)).alias("id"),
-            fingerprint64(F.col(sql_ident(text_col))).alias("fp"),
-        )
-        .groupBy("fp")
-        .agg(
-            F.min("id").alias("keep_id"),
-            F.count(F.lit(1)).alias("n_dups"),
-            F.sort_array(F.collect_list("id")).alias("member_ids"),
-        )
-        .where(F.col("n_dups") > 1)
-    )
 
 
 def word_shingles(df: DataFrame, id_col: str, text_col: str, n: int = 3) -> DataFrame:
@@ -222,36 +202,6 @@ def ngram_jaccard_pairs(
         "id_a", "id_b", "n_common", "n_a", "n_b", "jaccard"
     )
     return _hand_off_cache(out, caches)
-
-
-def signatures_from_hashes(shh: DataFrame, num_perm: int = 64) -> DataFrame:
-    """MinHash signatures from a prebuilt (id, __h) table of 64-bit shingle
-    hashes: num_perm min() columns in ONE aggregation — partial aggregation
-    keeps the shuffle at |docs| × num_perm, not |shingles|. Permutations
-    derive from the 64-bit value (hashing an int is ~10× cheaper than
-    re-hashing the string num_perm×)."""
-    mins = [F.min(F.xxhash64(F.col("__h"), F.lit(p))).alias(f"h{p}") for p in range(num_perm)]
-    sig = shh.groupBy("id").agg(*mins)
-    return sig.select("id", F.array(*[F.col(f"h{p}") for p in range(num_perm)]).alias("signature"))
-
-
-def signatures_from_shingles(sh: DataFrame, num_perm: int = 64) -> DataFrame:
-    """MinHash signatures from a prebuilt (id, shingle) DataFrame — exposed so
-    pipelines that also need the shingles for verification (minhash_lsh_dedup)
-    build the shingle plan once. The string is hashed ONCE here."""
-    return signatures_from_hashes(
-        sh.withColumn("__h", F.xxhash64("shingle")), num_perm
-    )
-
-
-def minhash_signatures(
-    df: DataFrame, id_col: str, text_col: str, n: int = 3, num_perm: int = 64
-) -> DataFrame:
-    """MinHash signature per document: num_perm independent min-hashes of the
-    shingle set, computed as ONE aggregation (num_perm min() columns over the
-    exploded shingles — partial aggregation keeps the shuffle at
-    |docs| × num_perm, not |shingles|)."""
-    return signatures_from_shingles(word_shingles(df, id_col, text_col, n), num_perm)
 
 
 def shingle_hash_array(

@@ -13,60 +13,19 @@ import os
 from pyspark.sql import SparkSession
 
 
-#: id of the Spark application whose Python worker pool was warmed below
-_PY_WORKERS_WARMED: str | None = None
-
-
-def warm_python_workers(spark: SparkSession) -> None:
-    """Spawn and warm the Python UDF worker pool (guide §4.5: heavyweight
-    init once, not on the critical path). The FIRST Arrow/pandas-UDF stage
-    of a session otherwise pays daemon spawn + one pandas/pyarrow import
-    per worker — measured 2.5-4 s at local[32], charged to whichever query
-    happens to hit the Python boundary first. One tiny n-partition UDF job
-    at session build moves that fixed cost out of every query; workers are
-    kept by ``spark.python.worker.reuse`` (default true). No-op cost at
-    production scale: one sub-second job per application start."""
-    global _PY_WORKERS_WARMED
-    app_id = spark.sparkContext.applicationId
-    if _PY_WORKERS_WARMED == app_id:
-        return
-    _PY_WORKERS_WARMED = app_id
-    try:
-        import pandas as pd
-        from pyspark.sql import functions as F
-
-        def _warm_fn(s):
-            import numpy as np  # preload into the worker: the ANN and geo UDFs use it
-
-            return s + np.int64(0)
-
-        # real class objects, not strings: this module's `from __future__
-        # import annotations` would otherwise leave pandas_udf's type-hint
-        # resolution a NameError (pd is imported locally, not in module
-        # globals)
-        _warm_fn.__annotations__ = {"s": pd.Series, "return": pd.Series}
-        _warm = F.pandas_udf(_warm_fn, "long")
-
-        n = spark.sparkContext.defaultParallelism
-        spark.sparkContext.setJobDescription("session: warm python worker pool")
-        spark.range(0, n, 1, n).select(_warm("id")).collect()
-        spark.sparkContext.setJobDescription(None)
-    except Exception:
-        pass  # warm-up is best-effort; real UDF stages pay their own way
-
-
 def build_session(
     app_name: str = "safedata_validator_spark",
     master: str | None = None,
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
-    warm_python: bool = True,
 ) -> SparkSession:
     """Create (or reuse) a SparkSession tuned for this engine.
 
     ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env) or ``local[*]``.
     ``shuffle_partitions`` defaults to the local core count — the right size
     for local mode; on a real cluster this is overridden via spark-submit.
+    Building the session runs no job: the Python UDF workers start with the
+    first stage that needs them, and the validation path has none.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS")
     # Under spark-submit the gateway JVM is already up with --master (and
@@ -126,8 +85,6 @@ def build_session(
             )
     except Exception:
         pass  # non-log4j2 deployments just keep the noisy warnings
-    if warm_python:
-        warm_python_workers(spark)
     return spark
 
 

@@ -223,18 +223,18 @@ def windowed_verdicts(
     watermark: str = "10 minutes",
 ) -> DataFrame:
     """Per-event-time-window violation counts by rule — the streaming
-    analogue of the verdicts table (late data handled by the watermark)."""
+    analogue of the verdicts table (late data handled by the watermark).
+    Each count is named ``n_failed__<rule_id>`` verbatim; the aggregate
+    works under positional names, so no rule id is ever parsed as a
+    column reference."""
     viol_struct_df = stream_df.withWatermark(ts_col, watermark)
     rows = stream_row_ruleset(ruleset).rules
     from safedata_validator_spark.rules.compilers import compile_row_rule
 
-    def col_name(rule_id: str) -> str:
-        return "n_failed__" + rule_id.replace(".", "_")
-
-    exprs = []
-    for rule in rows:
-        chk = compile_row_rule(rule)
-        exprs.append(F.sum(F.when(chk.predicate, 1).otherwise(0)).alias(col_name(rule.rule_id)))
+    exprs = [
+        F.sum(F.when(compile_row_rule(rule).predicate, 1).otherwise(0)).alias(f"__n{i}")
+        for i, rule in enumerate(rows)
+    ]
     return (
         viol_struct_df.groupBy(F.window(F.col(ts_col), window))
         .agg(F.count(F.lit(1)).alias("n_rows"), *exprs)
@@ -242,6 +242,6 @@ def windowed_verdicts(
             F.col("window.start").alias("window_start"),
             F.col("window.end").alias("window_end"),
             "n_rows",
-            *[F.col(col_name(r.rule_id)) for r in rows],
+            *[F.col(f"__n{i}").alias("n_failed__" + r.rule_id) for i, r in enumerate(rows)],
         )
     )

@@ -1,8 +1,8 @@
 """Unit batteries for the built-in pure-Python backends: pure-numpy OGC
-geometry validity (functions/geo_validity.py) and the stdlib codecs
-(functions/png.py, wav.py). No Spark session.
+geometry validity (functions/geo_validity.py) and the stdlib PNG codec
+(functions/png.py). No Spark session.
 Reference analogue: locations.py:353-364 (shapely is_valid / has_z) for
-geometry; the codecs have none (media is out of scope, ROADMAP
+geometry; the codec has none (media is out of scope, ROADMAP
 direction 4)."""
 
 from __future__ import annotations
@@ -208,113 +208,3 @@ def test_png_rejects_corruption():
     with pytest.raises(PNGError):
         decode_png(truncated)
 
-
-# --------------------------------------------------------------------------
-# WAV codec (functions/wav.py) — the built-in audio branch (round 4)
-# --------------------------------------------------------------------------
-
-from safedata_validator_spark.functions.wav import (  # noqa: E402
-    WAVError,
-    audio_features,
-    decode_wav,
-    encode_wav,
-    is_wav,
-)
-
-
-@pytest.mark.parametrize("bits", [8, 16, 24, 32])
-@pytest.mark.parametrize("channels", [1, 2])
-def test_wav_pcm_round_trip(bits, channels):
-    rng = np.random.default_rng(bits * 10 + channels)
-    n = 777
-    if bits == 8:
-        s = rng.integers(0, 256, (n, channels))
-        expected = (s - 128) / 128.0
-    else:
-        lim = 1 << (bits - 1)
-        s = rng.integers(-lim, lim, (n, channels))
-        expected = s / float(lim)
-    rate, dec = decode_wav(encode_wav(s, 22050, bits=bits))
-    assert rate == 22050
-    assert dec.shape == (n, channels)
-    assert np.allclose(dec, expected)
-
-
-def test_wav_float32_round_trip():
-    sig = np.sin(np.arange(2048) * 0.013).astype(np.float32)
-    rate, dec = decode_wav(encode_wav(sig, 48000, bits=32))
-    assert rate == 48000
-    assert np.allclose(dec[:, 0], sig, atol=1e-7)
-
-
-def test_wav_extensible_and_alignment():
-    # WAVE_FORMAT_EXTENSIBLE wrapping PCM-16, plus an odd-length extra
-    # chunk before data (exercises 2-byte chunk alignment)
-    s = np.array([100, -100, 3000, -3000], dtype=np.int64)
-    base = encode_wav(s, 8000, bits=16)
-    fmt = struct.pack("<HHIIHH", 0xFFFE, 1, 8000, 16000, 2, 16)
-    fmt += struct.pack("<HIH", 22, 16, 0x0004) + struct.pack("<H", 1) + b"\x00" * 14
-    data = np.asarray(s).astype("<i2").tobytes()
-    body = (
-        b"WAVE"
-        + b"junk" + struct.pack("<I", 3) + b"abc\x00"  # odd chunk + pad
-        + b"fmt " + struct.pack("<I", len(fmt)) + fmt
-        + b"data" + struct.pack("<I", len(data)) + data
-    )
-    payload = b"RIFF" + struct.pack("<I", len(body)) + body
-    rate, dec = decode_wav(payload)
-    assert rate == 8000
-    ref_rate, ref_dec = decode_wav(base)
-    assert np.array_equal(dec, ref_dec)
-
-
-def test_wav_rejects_malformed():
-    assert not is_wav(b"RIFFxxxx")
-    with pytest.raises(WAVError):
-        decode_wav(b"not audio at all")
-    good = encode_wav(np.array([1, 2, 3]), 8000, bits=16)
-    with pytest.raises(WAVError):
-        decode_wav(good[:20])  # truncated data chunk
-    # mu-law (tag 7) is now a built-in decode path — this payload decodes
-    fmt = struct.pack("<HHIIHH", 7, 1, 8000, 8000, 1, 8)
-    body = (
-        b"WAVE" + b"fmt " + struct.pack("<I", len(fmt)) + fmt
-        + b"data" + struct.pack("<I", 4) + b"\x00\x01\x02\x03"
-    )
-    rate, dec = decode_wav(b"RIFF" + struct.pack("<I", len(body)) + body)
-    assert rate == 8000 and dec.shape == (4, 1)
-    # genuinely unsupported: a perceptual codec tag (0x55 = MPEG Layer 3)
-    fmt = struct.pack("<HHIIHH", 0x55, 1, 8000, 8000, 1, 0)
-    body = (
-        b"WAVE" + b"fmt " + struct.pack("<I", len(fmt)) + fmt
-        + b"data" + struct.pack("<I", 4) + b"\x00\x01\x02\x03"
-    )
-    with pytest.raises(WAVError):
-        decode_wav(b"RIFF" + struct.pack("<I", len(body)) + body)
-
-
-def test_audio_features_square_wave_exact():
-    a, p, n = 12000, 5, 1003
-    sq = np.where((np.arange(n) // p) % 2 == 0, a, -a)
-    rate, dec = decode_wav(encode_wav(sq, 8000, bits=16))
-    f = audio_features(rate, dec)
-    assert f["rms"] == a / 32768.0  # exact dyadic value, bit-for-bit
-    assert f["peak"] == a / 32768.0
-    assert f["zero_crossings"] == (n - 1) // p
-    assert f["n_frames"] == n
-
-
-def test_audio_features_pure_tone_centroid():
-    # exact-bin cosine: centroid == tone frequency
-    n, k, rate = 2048, 64, 8000
-    tone = np.cos(2 * np.pi * k * np.arange(n) / n)
-    f = audio_features(rate, tone[:, None])
-    assert abs(f["spectral_centroid_hz"] - k * rate / n) < 1.0
-
-
-def test_audio_features_zero_handling():
-    # zeros break sign runs: +,0,+ no crossing; +,0,- one crossing
-    f = audio_features(8000, np.array([[1.0], [0.0], [1.0], [0.0], [-1.0]]))
-    assert f["zero_crossings"] == 1
-    silent = audio_features(8000, np.zeros((16, 1)))
-    assert silent["rms"] == 0.0 and silent["spectral_centroid_hz"] == 0.0

@@ -82,7 +82,25 @@ def test_stream_violations_and_windowed_verdicts(spark, tmp_path):
     q2.stop()
     rows = spark.sql("SELECT * FROM wv").collect()
     assert rows and all(r["n_rows"] > 0 for r in rows)
-    assert sum(r["n_failed__text_not_blank"] for r in rows) >= 0
+    assert sum(r["n_failed__text.not_blank"] for r in rows) >= 0
+
+
+def test_windowed_verdicts_name_counts_by_verbatim_rule_id(spark):
+    """Rule ids that differ only in '.' vs '_', or that hold a backtick,
+    each get their own ``n_failed__<rule_id>`` count."""
+    from datetime import datetime
+
+    from safedata_validator_spark.rules.model import Rule, RuleSet
+
+    frame = spark.createDataFrame(
+        [(1, "", datetime(2024, 1, 1, 0, 0)), (2, "x", datetime(2024, 1, 1, 0, 1))],
+        "id long, text string, ts timestamp",
+    )
+    ids = ["a.b", "a_b", "a`b"]
+    ruleset = RuleSet("odd_ids", [Rule(i, "not_blank", "text") for i in ids], ["id"])
+    rows = windowed_verdicts(frame, ruleset, window="1 hour").collect()
+    assert len(rows) == 1 and rows[0]["n_rows"] == 2
+    assert {i: rows[0]["n_failed__" + i] for i in ids} == dict.fromkeys(ids, 1)
 
 
 def test_stateful_sequence_violations_across_batches(spark, tmp_path):

@@ -68,12 +68,6 @@ def test_lang_id_markers(spark):
         assert r["got"] == r["want"], (r["want"], r["got"])
 
 
-def test_exact_dedup_groups(spark, docs):
-    got = dd.exact_dedup_groups(docs, "doc_id", "text").collect()
-    assert len(got) == 1
-    assert got[0]["keep_id"] == 1 and got[0]["member_ids"] == [1, 2, 3]
-
-
 def test_ngram_jaccard_pairs(spark, docs):
     pairs = {
         (r["id_a"], r["id_b"]): r["jaccard"]
@@ -120,8 +114,7 @@ def test_dedup_quotes_user_column_names(spark, docs, id_col, text_col):
     def rows(df):
         return sorted(tuple(r) for r in df.collect())
 
-    for op in (dd.exact_dedup_groups, dd.simhash64):
-        assert rows(op(odd, id_col, text_col)) == rows(op(docs, "doc_id", "text"))
+    assert rows(dd.simhash64(odd, id_col, text_col)) == rows(dd.simhash64(docs, "doc_id", "text"))
     got = dd.minhash_lsh_dedup(odd, id_col, text_col, threshold=0.5)
     want = dd.minhash_lsh_dedup(docs, "doc_id", "text", threshold=0.5)
     pairs = rows(want)

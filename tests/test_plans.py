@@ -569,24 +569,3 @@ def test_spread_guard_rereads_a_rewritten_table(spark, tmp_path):
     finally:
         for k, v in zip(keys, saved):
             spark.conf.set(k, v)
-
-
-def test_python_worker_warm_guard_is_per_application(spark):
-    """The warm-up guard holds the id of the application it warmed: a guard
-    left by an earlier (stopped) application does not skip the warm-up of
-    this one, which runs one job, and a second call runs none."""
-    from safedata_validator_spark import session
-
-    sc = spark.sparkContext
-    tracker = sc.statusTracker()
-    session._PY_WORKERS_WARMED = "app-stopped-earlier"
-    jobs = []
-    for group in ("warm-guard-first", "warm-guard-second"):
-        sc.setJobGroup(group, "warm guard test")
-        try:
-            session.warm_python_workers(spark)
-        finally:
-            sc._jsc.clearJobGroup()
-        jobs.append(len(tracker.getJobIdsForGroup(group)))
-        assert session._PY_WORKERS_WARMED == sc.applicationId
-    assert jobs == [1, 0]
